@@ -49,8 +49,7 @@ object Verify {
       }
       // drop per-query persist()/localCheckpoint blocks so the 100+ query
       // dump runs in bounded memory (see Bench.dropCaches rationale)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.operators.Materialize.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -243,14 +243,8 @@ object Dedup {
       shingleWords: Int = 3, numHashes: Int = 128,
       bands: Int = 32, rowsPerBand: Int = 4,
       threshold: Double = 0.7, seed: Int = 42): DataFrame = {
-    val shB = shingleRows(batch, idCol, textCol, shingleWords).persist()
-    val shC = shingleRows(corpus, idCol, textCol, shingleWords).persist()
-    // materialize the caches BEFORE the banding/verify diamond fans out:
-    // persist() is lazy, and the two consumers' shuffle-map stages are
-    // submitted concurrently — whichever starts before the cache is
-    // populated recomputes the whole shingle lineage (observed as a
-    // bimodal 1.3 s / 5.1 s bench spread; the count is one cheap pass)
-    shB.count(); shC.count()
+    val shB = shingleRows(batch, idCol, textCol, shingleWords).barrier()
+    val shC = shingleRows(corpus, idCol, textCol, shingleWords).barrier()
     crossNearDupPairsFromIndex(
       shB, bandRows(shB, numHashes, bands, rowsPerBand, seed),
       shC, bandRows(shC, numHashes, bands, rowsPerBand, seed), threshold)

@@ -323,11 +323,8 @@ object Describe {
           // one-column numeric profile; the checkpoint materializes
           // with AQE-coalesced partitions and the same three consumers
           // read its blocks
-          // (no closing unpersist: it is a no-op on a checkpointed frame
-          // — ADVICE r17 — blocks fall to the ContextCleaner when the
-          // frame goes unreachable at the end of this block)
           val freq = if (ambigQ.nonEmpty) freq0.barrier() else freq0
-          locally {
+          try {
             val madMembers = members.map(_._2).flatMap(n => madMeanOf(n).map(n -> _))
             // job A — ONE aggregation over the freq table: distinct
             // counts, small-column percentiles, large-column row counts
@@ -445,7 +442,7 @@ object Describe {
             members.foreach { case (_, n, _) => // absent = all-null column
               results(n) = (dByCol.getOrElse(n, 0L), qByCol.get(n).map(_.toSeq))
             }
-          }
+          } finally if (ambigQ.nonEmpty) release(freq)
         }
 
         // fallback: per-column jobs for non-family types, run concurrently

@@ -55,9 +55,16 @@ object Similarity {
       .select(
         col("query_id"), col(idCol).as("neighbor_id"),
         cos(col(vecCol), col("__qv")).as("sim"))
+    topKPerQuery(sim, k)
+  }
+
+  /** Each query's `k` best (query_id, neighbor_id, sim) rows, ranked by
+    * sim desc with ties broken by ascending neighbor_id, as
+    * (query_id, rank, neighbor_id, sim). */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
-    sim.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "sim")
   }
@@ -149,21 +156,33 @@ object Similarity {
       explode(transform(
         slice(reverse(array_sort(centScores(col(qVecCol)))), 1, nprobe),
         s => s.getField("cell"))).as("__cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    assigned.join(probes, Seq("__cell"))
+    topKPerQuery(assigned.join(probes, Seq("__cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("__cv"), col("__qv")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+        cos(col("__cv"), col("__qv")).as("sim")), k)
   }
 
   /** Deterministic random-hyperplane matrix (planes x dim), seed-pinned. */
   private[graft] def planeMatrix(planes: Int, dim: Int, seed: Long): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
     Array.fill(planes, dim)(rnd.nextGaussian())
+  }
+
+  /** The seed-pinned (rows x d) [[planeMatrix]] as a plan literal, and a
+    * length guard for vectors hashed or projected against it. `d` is
+    * `dim`, or when 0 the length of the first `df.vecCol` vector (one
+    * tiny driver-side action). The guard raises
+    * "`caller`: vector length n != `matrix` dim d" on any other length:
+    * zip_with pads a short vector with nulls, which would silently null
+    * the dot product instead of failing. */
+  private[graft] def guardedMatrix(
+      df: DataFrame, vecCol: String, dim: Int, rows: Int, seed: Long,
+      caller: String, matrix: String = "plane"): (Column, Column => Column) = {
+    val d = if (dim > 0) dim else df.select(size(col(vecCol))).head.getInt(0)
+    def guarded(v: Column): Column = when(size(v) === d, v).otherwise(
+      raise_error(concat(lit(s"$caller: vector length "), size(v).cast("string"),
+        lit(s" != $matrix dim $d"))))
+    (typedLit(planeMatrix(rows, d, seed)), guarded)
   }
 
   /** Sign-bit signature of a vector against the plane matrix, as an
@@ -177,15 +196,6 @@ object Similarity {
           lit(0.0), (acc, x) => acc + x) >= 0, lit(1)).otherwise(lit(0))),
       lit(0), (acc, bit) => acc * 2 + bit)
 
-  /** Approximate nearest neighbors: both sides hashed into hyperplane
-    * buckets; exact cosine ranks candidates inside each bucket only.
-    *
-    * `dim` is the plane dimension; when 0 (default) it is probed from the
-    * first corpus vector (one tiny driver-side action). Every hashed
-    * vector is guarded against that dimension at runtime — a mismatched
-    * length raises instead of silently hashing to bucket 0 (zip_with pads
-    * with null, nulling the dot product), which would collapse the LSH
-    * partitioning into the cross product it exists to avoid. */
   /** Embedding near-duplicate pairs at scale — the semantic-dedup
     * candidate generator: every vector is hashed into a sign-bit
     * hyperplane bucket and pairs meet ONLY inside a shared bucket (an
@@ -198,11 +208,8 @@ object Similarity {
   def nearDupPairsCosineLsh(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planes: Int = 6, seed: Long = 42L, dim: Int = 0): DataFrame = {
-    val d = if (dim > 0) dim else df.select(size(col(vecCol))).head.getInt(0)
-    val planesLit = typedLit(planeMatrix(planes, d, seed))
-    def guarded(v: Column): Column = when(size(v) === d, v).otherwise(
-      raise_error(concat(lit("nearDupPairsCosineLsh: vector length "), size(v).cast("string"),
-        lit(s" != plane dim $d"))))
+    val (planesLit, guarded) =
+      guardedMatrix(df, vecCol, dim, planes, seed, "nearDupPairsCosineLsh")
     // planes x dim interpreted-HOF flops per row fuse into the scan
     // stage — widen a narrow source (Parallelize; sign bits are
     // row-local deterministic folds)
@@ -230,11 +237,8 @@ object Similarity {
       left: DataFrame, lIdCol: String, lVecCol: String,
       right: DataFrame, rIdCol: String, rVecCol: String,
       threshold: Double, planes: Int = 6, seed: Long = 42L, dim: Int = 0): DataFrame = {
-    val d = if (dim > 0) dim else left.select(size(col(lVecCol))).head.getInt(0)
-    val planesLit = typedLit(planeMatrix(planes, d, seed))
-    def guarded(v: Column): Column = when(size(v) === d, v).otherwise(
-      raise_error(concat(lit("crossNearDupCosineLsh: vector length "),
-        size(v).cast("string"), lit(s" != plane dim $d"))))
+    val (planesLit, guarded) =
+      guardedMatrix(left, lVecCol, dim, planes, seed, "crossNearDupCosineLsh")
     val l = left.select(col(lIdCol).as("left_id"), col(lVecCol).as("__lv"),
       signature(guarded(col(lVecCol)), planesLit, planes).as("__bucket"))
     val r = right.select(col(rIdCol).as("right_id"), col(rVecCol).as("__rv"),
@@ -245,15 +249,21 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
+  /** Approximate nearest neighbors: both sides hashed into hyperplane
+    * buckets; exact cosine ranks candidates inside each bucket only.
+    *
+    * `dim` is the plane dimension; when 0 (default) it is probed from the
+    * first corpus vector (one tiny driver-side action). Every hashed
+    * vector is guarded against that dimension at runtime — a mismatched
+    * length raises instead of silently hashing to bucket 0 (zip_with pads
+    * with null, nulling the dot product), which would collapse the LSH
+    * partitioning into the cross product it exists to avoid. */
   def annTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, planes: Int = 12, seed: Long = 42L, dim: Int = 0): DataFrame = {
-    val d = if (dim > 0) dim else corpus.select(size(col(vecCol))).head.getInt(0)
-    val planesLit = typedLit(planeMatrix(planes, d, seed))
-    def guarded(v: Column): Column = when(size(v) === d, v).otherwise(
-      raise_error(concat(lit("annTopK: vector length "), size(v).cast("string"),
-        lit(s" != plane dim $d"))))
+    val (planesLit, guarded) =
+      guardedMatrix(corpus, vecCol, dim, planes, seed, "annTopK")
     // planes x dim interpreted-HOF flops per corpus row fuse into the
     // scan stage — widen a narrow source (Parallelize; sign bits are
     // row-local deterministic folds)
@@ -262,14 +272,9 @@ object Similarity {
         signature(guarded(col(vecCol)), planesLit, planes).as("__bucket"))
     val q = queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("__qv"),
       signature(guarded(col(qVecCol)), planesLit, planes).as("__bucket"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    c.join(q, Seq("__bucket"))
+    topKPerQuery(c.join(q, Seq("__bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosineFor(corpus, vecCol)(col("__cv"), col("__qv")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+        cosineFor(corpus, vecCol)(col("__cv"), col("__qv")).as("sim")), k)
   }
 }

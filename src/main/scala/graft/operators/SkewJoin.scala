@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize._
 
 /** Salted equi-join for skewed keys (SURVEY.md / 100 TB design notes).
   *
@@ -42,26 +43,25 @@ object SkewJoin {
     * exist by construction, so the driver-side collect is bounded
     * regardless of data size. ONE pass over the fact table: the key
     * histogram (a map-side-combining hash aggregation, null keys grouped
-    * like any other) is persisted (MEMORY_AND_DISK, spill-safe) for the
+    * like any other) is materialized through [[Materialize]] for the
     * duration of the call, and both the total (the sum of per-key
-    * counts, which IS `df.count()`) and the hot filter read it; the
-    * cache is RELEASED in a finally before returning. The histogram is
+    * counts, which IS `df.count()`) and the hot filter read it; its
+    * blocks are RELEASED in a finally before returning. The histogram is
     * distinct-key-sized — tiny for the skewed keys this is built for,
     * but it can approach fact size for a near-unique key, which is why
-    * it must not outlive the call; persist (not localCheckpoint) also
-    * keeps lineage, so an executor loss during the call recomputes
-    * instead of failing the job. */
+    * it must not outlive the call. Fault tolerance follows the session's
+    * `spark.graft.materialize` strategy (`persist` or `reliable` survive
+    * an executor loss during the call). */
   def hotKeys(df: DataFrame, key: String, minShare: Double): Seq[Any] = {
     require(minShare > 0.0 && minShare <= 1.0,
       s"minShare must be in (0, 1], got $minShare")
-    val hist = df.groupBy(col(key)).agg(count(lit(1)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hist = df.groupBy(col(key)).agg(count(lit(1)).as("__n")).barrier()
     try {
       val total = Option(hist.agg(sum("__n")).first().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       hist.filter(col(key).isNotNull && col("__n") > total * minShare)
         .select(col(key)).collect().map(_.get(0)).toSeq
-    } finally hist.unpersist(blocking = false)
+    } finally release(hist)
   }
 
   /** SPLIT-AND-UNION salted join — the production skew pattern: only

@@ -245,13 +245,9 @@ object Stats {
     // localCheckpoint like equiDepthHistogram's copy of this substrate
     // (r17): the lazy persist pinned both consumers' stages at full
     // shuffle width (AQE cannot coalesce a cached subplan)
-    // no unpersist: Dataset.unpersist is a no-op on a checkpointed
-    // frame (it only drops CacheManager entries — ADVICE r17); the
-    // checkpoint blocks are reclaimed by the ContextCleaner once this
-    // frame goes unreachable, and the bench harness drops every
-    // persistent RDD between queries anyway
     val vals = valueFrequencies(df, c).barrier()
-    quantilesFromFrequencies(vals, probs)
+    try quantilesFromFrequencies(vals, probs)
+    finally release(vals)
   }
 
   /** The distinct (value, count) table — (`_v` double, `_cnt` long) —

@@ -129,34 +129,35 @@ object TextAnalysis {
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
     var done = false
-    while (r <= numMerges && !done) {
-      val arr = split(trim(col("sym"), D),
-        java.util.regex.Pattern.quote(D + D))
-      val best = syms
-        .select(col("freq"), arr.as("l_"))
-        .select(col("freq"), col("l_"),
-          slice(col("l_"), lit(2), greatest(size(col("l_")) - 1, lit(0))).as("r_"))
-        .select(col("freq"), explode(arrays_zip(col("l_"), col("r_"))).as("z"))
-        .filter(col("z.r_").isNotNull)
-        .groupBy(col("z.l_").as("lhs"), col("z.r_").as("rhs"))
-        .agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (best.isEmpty) done = true // every word fused to one symbol
-      else {
-        val l = best(0).getString(0)
-        val rr = best(0).getString(1)
-        val cnt = best(0).getLong(2)
-        merges += ((r, l, rr, cnt))
-        val prev = syms
-        syms = syms.withColumn("sym",
-            replace(col("sym"), lit(D + l + D + D + rr + D), lit(D + l + rr + D)))
-          .barrier()
-        prev.unpersist(false)
-        r += 1
+    try {
+      while (r <= numMerges && !done) {
+        val arr = split(trim(col("sym"), D),
+          java.util.regex.Pattern.quote(D + D))
+        val best = syms
+          .select(col("freq"), arr.as("l_"))
+          .select(col("freq"), col("l_"),
+            slice(col("l_"), lit(2), greatest(size(col("l_")) - 1, lit(0))).as("r_"))
+          .select(col("freq"), explode(arrays_zip(col("l_"), col("r_"))).as("z"))
+          .filter(col("z.r_").isNotNull)
+          .groupBy(col("z.l_").as("lhs"), col("z.r_").as("rhs"))
+          .agg(sum("freq").as("cnt"))
+          .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
+          .limit(1).collect()
+        if (best.isEmpty) done = true // every word fused to one symbol
+        else {
+          val l = best(0).getString(0)
+          val rr = best(0).getString(1)
+          val cnt = best(0).getLong(2)
+          merges += ((r, l, rr, cnt))
+          val prev = syms
+          syms = syms.withColumn("sym",
+              replace(col("sym"), lit(D + l + D + D + rr + D), lit(D + l + rr + D)))
+            .barrier()
+          release(prev)
+          r += 1
+        }
       }
-    }
-    syms.unpersist(false)
+    } finally release(syms)
     merges.result()
   }
 
@@ -347,7 +348,7 @@ object TextAnalysis {
           (r.getString(0), r.getLong(1))).toSeq
         bpeFitMergesLocal(vocab, numMerges)
       } else bpeFitMerges(df, textCol, numMerges)
-    } finally w.unpersist(false)
+    } finally release(w)
   }
 
   /** [[bpeFitMergesAuto]] as a DataFrame: (rank, lhs, rhs, merged, cnt). */

@@ -67,12 +67,9 @@ object Vectors {
       df: DataFrame, idCol: String, vecCol: String,
       outDim: Int, seed: Long = 42L, dim: Int = 0): DataFrame = {
     require(outDim > 0, s"outDim must be positive, got $outDim")
-    val d = if (dim > 0) dim else df.select(size(col(vecCol))).head.getInt(0)
-    val rLit = typedLit(Similarity.planeMatrix(outDim, d, seed))
+    val (rLit, guarded) = Similarity.guardedMatrix(
+      df, vecCol, dim, outDim, seed, "randomProjection", matrix = "matrix")
     val denom = lit(math.sqrt(outDim.toDouble))
-    def guarded(v: Column): Column = when(size(v) === d, v).otherwise(
-      raise_error(concat(lit("randomProjection: vector length "),
-        size(v).cast("string"), lit(s" != matrix dim $d"))))
     df.select(col(idCol),
       transform(sequence(lit(0), lit(outDim - 1)), j =>
         aggregate(

@@ -549,7 +549,7 @@ object Streams {
     * index restricted to batches STRICTLY BELOW its own id and
     * overwrites its own subdirectories — idempotent. `idCol` must be
     * unique within a batch; `batch` is a reserved column name in the
-    * stored layout. The batch's persisted frames are unpersisted at the
+    * stored layout. The batch's materialized frames are released at the
     * end of every micro-batch (a streaming job must not accumulate
     * cache), and the one scan of the stored index per batch replaces
     * the previous design's full corpus recompute + rewrite.
@@ -619,10 +619,8 @@ object Streams {
         // lazy persist pins (the same measurement as the r17
         // Dedup/Describe swap), and truncates the batch lineage so late
         // batches re-plan a flat scan, not a deepening join tree. The
-        // finally block releases EVERY block this batch registered
-        // (persistent-RDD diff — Dataset.unpersist is a no-op on
-        // checkpointed frames), so a sustained stream stays flat.
-        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+        // finally block releases the batch's three barriers, so a
+        // sustained stream stays flat.
         val shB = Dedup.shingleRows(batch.toDF(), idCol, textCol, shingleWords)
           .barrier()
         // band rows feed three consumers (self-dedup, the cross probe,
@@ -683,14 +681,7 @@ object Streams {
             .parquet(s"$bkDir/batch=$id")
           if (useBloom)
             IndexStore.writeBloomSidecar(spark, s"$bkDir/batch=$id", "bk", sidecarFpp)
-        } finally {
-          // deterministic release of this batch's blocks under ANY
-          // materialization strategy (a streaming job must not
-          // accumulate state in the block manager)
-          val rddsAfter = spark.sparkContext.getPersistentRDDs
-          (rddsAfter.keySet -- rddsBefore).foreach(rid =>
-            rddsAfter.get(rid).foreach(_.unpersist(false)))
-        }
+        } finally Seq(shB, bkB, kept).filter(_ != null).foreach(release)
     }
 
   /** Streaming DECONTAMINATION — the eval-gram-set filter at ingest
@@ -855,10 +846,10 @@ object Streams {
         IndexStore.compactIndexDir(spark, gramsDir, gramsGen, id, compactEvery,
           fanout = compactFanout,
           bloomCol = if (useBloom) Some("s") else None, bloomFpp = sidecarFpp)
+        // materialized before the count/anti-join diamond
         val bg = graft.operators.Dedup.shingleRows(batch.toDF(), idCol, textCol, n)
-          .select("s").distinct().persist()
+          .select("s").distinct().barrier()
         try {
-          // materialize before the count/anti-join diamond
           val nBg = bg.count()
           val front =
             if (useBloom) IndexStore.bloomProbe(spark, gramsDir, gramsGen, id)
@@ -907,7 +898,7 @@ object Streams {
               if (nGrams == 0) 0.0 else nNovel.toDouble / nGrams))
             .toDF("batch_id", "n_grams", "n_novel", "novelty")
             .write.mode("overwrite").parquet(s"$logDir/batch=$id")
-        } finally bg.unpersist(false)
+        } finally release(bg)
     }
   }
 

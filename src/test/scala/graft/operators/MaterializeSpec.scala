@@ -37,6 +37,71 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.conf.unset(Materialize.ConfKey)
   }
 
+  private def withStrategy(strategy: String)(body: => Unit): Unit = {
+    spark.conf.set(Materialize.ConfKey, strategy)
+    try body finally spark.conf.unset(Materialize.ConfKey)
+  }
+
+  /** Whether `b`'s OWN blocks are held: the RDD under a checkpointed
+    * frame's top node, or the CacheManager entry of a persisted one.
+    * Never a global getPersistentRDDs snapshot — suites share one
+    * SparkContext. */
+  private def holdsBlocks(b: org.apache.spark.sql.DataFrame): Boolean =
+    b.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _ => b.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    }
+
+  // distinct plans per case: under `persist`, equal plans share one
+  // CacheManager entry
+  private def frame(tag: Int) = base.withColumn("tag", lit(tag))
+
+  test("release frees a barrier's blocks under local and persist") {
+    for ((strategy, tag) <- Seq("local" -> 1, "persist" -> 2)) withStrategy(strategy) {
+      val b = frame(tag).barrier()
+      assert(holdsBlocks(b), s"$strategy barrier holds no blocks")
+      release(b)
+      assert(!holdsBlocks(b), s"$strategy release left the blocks")
+    }
+  }
+
+  test("release is harmless under reliable: the checkpoint stays readable") {
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    withStrategy("reliable") {
+      val expected = frame(3).collect().map(_.toSeq).toSet
+      val b = frame(3).barrier()
+      release(b)
+      assert(b.collect().map(_.toSeq).toSet == expected)
+    }
+  }
+
+  test("releasing one barrier leaves a concurrently created one persisted") {
+    for ((strategy, tag) <- Seq("local" -> 4, "persist" -> 6)) withStrategy(strategy) {
+      val first = frame(tag).barrier()
+      val second = scala.concurrent.Await.result(
+        scala.concurrent.Future(frame(tag + 1).barrier())(
+          scala.concurrent.ExecutionContext.global),
+        scala.concurrent.duration.Duration.Inf)
+      release(first)
+      assert(!holdsBlocks(first), s"$strategy: first barrier not released")
+      assert(holdsBlocks(second), s"$strategy: release freed a sibling barrier")
+      assert(second.count() == 7)
+      release(second)
+    }
+  }
+
+  test("release on a frame derived from a barrier leaves the barrier's blocks") {
+    for ((strategy, tag) <- Seq("local" -> 8, "persist" -> 9)) withStrategy(strategy) {
+      val b = frame(tag).barrier()
+      release(b.filter(col("k") > 2))
+      assert(holdsBlocks(b), s"$strategy: a derived frame's release freed the barrier")
+      assert(b.count() == 7)
+      release(b)
+    }
+  }
+
   private def edges = Seq(
     ("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
     ("a", "c"), ("c", "a"), ("a", "d"), ("d", "a")

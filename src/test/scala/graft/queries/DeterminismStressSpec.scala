@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.operators.Materialize.releaseAll
 
 /** Same-session replay stress for the prefix-sum consumers.
   *
@@ -18,11 +19,6 @@ class DeterminismStressSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private val Runs = 20
-
-  private def dropCaches(): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
 
   /** Order-insensitive canonical form of a query result. */
   private def canonical(name: String): String = {
@@ -46,7 +42,7 @@ class DeterminismStressSpec extends SparkSpec {
       try {
         cs.foreach { case (k, v) => spark.conf.set(k, v) }
         val m = graft.operators.TextAnalysis.bpeFitMerges(docs, "text", 8)
-        dropCaches()
+        releaseAll(spark)
         m
       } finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -71,7 +67,7 @@ class DeterminismStressSpec extends SparkSpec {
         spark.conf.set(key, parts)
         val p = Describe.profile(li, Seq("l_extendedprice", "l_shipdate"),
           percentileBufferMaxDistinct = 0)
-        dropCaches()
+        releaseAll(spark)
         p.map(c => c.column -> c.stats).toMap
       }
       runs.tail.foreach { r =>
@@ -137,7 +133,7 @@ class DeterminismStressSpec extends SparkSpec {
       // that was in neither grid
       "bpe_fit", "bpe_encode", "bpe_fertility", "token_budget_bpe")
     val defaults = queries.map(q => q -> canonical(q)).toMap
-    dropCaches()
+    releaseAll(spark)
     val sweeps: Seq[(String, Seq[(String, String)])] = Seq(
       "partitions=1" -> Seq("spark.sql.shuffle.partitions" -> "1"),
       "partitions=200" -> Seq("spark.sql.shuffle.partitions" -> "200"),
@@ -154,7 +150,7 @@ class DeterminismStressSpec extends SparkSpec {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         for (q <- queries) {
           val r = canonical(q)
-          dropCaches()
+          releaseAll(spark)
           assert(r === defaults(q), s"$q diverged under conf sweep [$label]")
         }
       } finally saved.foreach {
@@ -211,10 +207,10 @@ class DeterminismStressSpec extends SparkSpec {
                 "assoc_rules_skew", "cross_dedup_probe")) {
     test(s"$q is bit-identical across $Runs same-session runs with caches dropped") {
       val first = canonical(q)
-      dropCaches()
+      releaseAll(spark)
       for (i <- 2 to Runs) {
         val again = canonical(q)
-        dropCaches()
+        releaseAll(spark)
         assert(again === first, s"$q drifted on run $i of $Runs")
       }
     }
@@ -228,7 +224,7 @@ class DeterminismStressSpec extends SparkSpec {
         val results = Seq("2", "7", "23").map { parts =>
           spark.conf.set(key, parts)
           val r = canonical(q)
-          dropCaches()
+          releaseAll(spark)
           r
         }
         assert(results.distinct.size === 1,

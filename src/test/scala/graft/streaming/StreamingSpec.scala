@@ -529,9 +529,10 @@ class StreamingSpec extends SparkSpec {
       val indexed = spark.read.parquet(s"$out/sh")
         .select("id").distinct().collect().map(_.getLong(0)).toSet
       assert(indexed === Set(1L, 2L, 11L), s"index must track kept docs: $indexed")
-      // cache hygiene (shB/kept unpersisted in the sink's finally) is not
+      // cache hygiene (the sink's finally releases shB/bkB/kept) is not
       // asserted here: suites share one SparkContext and run in parallel,
-      // so a global getPersistentRDDs snapshot races other suites' persists
+      // so a global getPersistentRDDs snapshot races other suites' persists;
+      // MaterializeSpec pins Materialize.release per barrier instead
     } finally q.stop()
   }
 

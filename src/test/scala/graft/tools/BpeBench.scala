@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only BPE depth/throughput probe (VERDICT r16 #1): measures the
@@ -16,12 +15,7 @@ object BpeBench {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val maxK = args.lift(1).map(_.toInt).getOrElse(1 << 15)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Kit.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.TextAnalysis
     val docs = graft.sources.Tables.documents(spark, dir)

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+
+import graft.operators.Materialize.releaseAll
 
 /** Dev-only profiling main for the optimization rounds (round 17+).
   *
@@ -25,12 +26,7 @@ object OptProbe {
     val planSuffix = sys.env.getOrElse("OPTPROBE_PLAN_SUFFIX", "")
     val planDir = sys.env.getOrElse("OPTPROBE_PLAN_DIR", "plans/r17")
     val passes = sys.env.getOrElse("OPTPROBE_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Kit.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Bench.quietAuditedWindowWarn()
     graft.Bench.quietAuditedCheckpointWarn()
@@ -58,10 +54,6 @@ object OptProbe {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     def resetCounters(): Unit = synchronized {
       jobs.set(0); stages.set(0); tasks.set(0)
       shuffleReadB = 0L; shuffleWriteB = 0L; inputB = 0L; cpuNs = 0L
@@ -77,7 +69,7 @@ object OptProbe {
           try {
             // warmup (codegen+planning, matches Bench)
             fn(spark, sfDir).count()
-            dropCaches()
+            releaseAll(spark)
             var best = Double.MaxValue
             var bestLine = ""
             (1 to passes).foreach { _ =>
@@ -91,7 +83,7 @@ object OptProbe {
               Thread.sleep(200)
               val line = f"""{"probe":"opt","name":"$name","sec":$dt%.3f,"rows":$n,"jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},"cpuSec":${cpuNs / 1e9}%.2f,"inputMB":${inputB / 1e6}%.1f,"shufReadMB":${shuffleReadB / 1e6}%.2f,"shufWriteMB":${shuffleWriteB / 1e6}%.2f}"""
               if (dt < best) { best = dt; bestLine = line }
-              dropCaches()
+              releaseAll(spark)
             }
             println(bestLine)
             if (planSuffix.nonEmpty) {

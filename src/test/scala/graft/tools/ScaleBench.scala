@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.Materialize.releaseAll
 
 /** Dev-only scale-evidence harness (VERDICT r10 task 4): run a fixed
   * panel of the most expensive queries + the prefix-sum/minhash/fuzzy/
@@ -51,29 +51,19 @@ object ScaleBench {
     val only = args.lift(1).map(_.split(',').toSet)
     val panel = this.panel.filter(n => only.forall(_.contains(n)))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Kit.session(cpus)
     graft.Bench.quietAuditedWindowWarn()
     graft.Bench.quietAuditedCheckpointWarn()
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     val qs = panel.map(n => n -> graft.SparkEntry.queries(n))
     qs.foreach { case (_, fn) =>
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      dropCaches()
+      releaseAll(spark)
     }
     def measure(): Map[String, Double] = qs.map { case (name, fn) =>
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
       val dt = (System.nanoTime() - t0) / 1e9
-      dropCaches()
+      releaseAll(spark)
       name -> dt
     }.toMap
     val p1 = measure(); val p2 = measure()

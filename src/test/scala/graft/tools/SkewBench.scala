@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only skew-evidence harness: the salted operators
@@ -28,16 +27,9 @@ object SkewBench {
     // planted skew: P(row lands on the hot key) = hotPct/100
     val hotPct = args.lift(2).map(_.toInt).getOrElse(20)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the hot side must not be broadcast away: the probe is about
-      // shuffle-join skew, so keep the dim above the broadcast bound
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the hot side must not be broadcast away: the probe is about
+    // shuffle-join skew, so keep the dim above the broadcast bound
+    val spark = Kit.session(cpus, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     import graft.sources.Tables
 
     // ----- skewed join: orders (20% of rows remapped to one custkey)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.Materialize.releaseAll
 
 /** Dev-only probe for the adaptive level-1 Apriori prune (VERDICT r13
   * #1): on a Zipf-distributed basket corpus (dev/gen_zipf.py — the item
@@ -26,17 +26,7 @@ object ZipfBench {
     val minCount = args.lift(1).map(_.toLong).getOrElse(1000L)
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    val spark = Kit.session(cpus)
     val df = spark.read.parquet(s"$dir/baskets.parquet")
     val plans: Seq[(String, Double => Long)] = Seq(
       "assoc_rules" -> ((thr: Double) =>
@@ -51,7 +41,7 @@ object ZipfBench {
       val t0 = System.nanoTime()
       val n = run(if (on) 0.0 else 2.0)
       val dt = (System.nanoTime() - t0) / 1e9
-      dropCaches()
+      releaseAll(spark)
       val key = s"$name:${if (on) "prune_on" else "prune_off"}"
       out(key) = out.get(key).fold(dt)(math.min(_, dt))
       rows(key) = n
