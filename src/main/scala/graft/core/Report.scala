@@ -46,7 +46,11 @@ final class Report private (
   def introduce(): DataFrame = Introduce(df, dataColumns)
 
   /** Per-column statistics (petk/exploration.py:70-77). All uncached
-    * columns are profiled in ONE aggregation (+ the dependent mad pass);
+    * columns are profiled together ([[Describe.profile]]): codegen-sized
+    * chunks of one no-grouping aggregation in one action, then, in exact
+    * mode, one frequency table for every column that feeds distinct
+    * counts, percentiles and mad (approximate mode reads its sketches off
+    * the first action and runs one dependent mad aggregation instead);
     * results are memoized per column (petk/exploration.py:73-75). */
   def describe(columns: Seq[String] = Nil): Seq[Describe.ColumnProfile] = {
     val cols = findColumns(columns)

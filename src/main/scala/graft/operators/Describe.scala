@@ -4,7 +4,12 @@ import scala.collection.immutable.ListMap
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,34 +21,46 @@ import graft.operators.Materialize._
   *
   * Execution shape (SURVEY.md §4.2, revised after benching):
   *
-  *  1. ONE wide codegen'd hash aggregation computes every
-  *     moment/count/extremum stat for every requested column (count, min,
-  *     max, mean, std, var, kurtosis, skewness, sum, zeros, infinities,
-  *     measured bytes). Partial + final hash agg, whole-stage codegen,
-  *     one exchange — independent of column count.
+  *  1. Pass 1 computes every moment/count/extremum stat for every
+  *     requested column (count, min, max, mean, std, var, kurtosis,
+  *     skewness, sum, zeros, infinities, measured bytes) in no-grouping
+  *     hash aggregations, packed into chunks whose aggregation buffer
+  *     stays within `spark.sql.codegen.maxFields` ([[pass1Chunks]]): one
+  *     aggregation over more buffer fields silently loses whole-stage
+  *     codegen, and a numeric column carries 22-23 of them, so ONE wide
+  *     aggregation fell back to the interpreted path from about five
+  *     numeric columns on. The chunks run as one action (a cartesian
+  *     product of their one-row results): k chunks cost k + 1 AQE jobs.
   *  2. Exact distinct counts and exact (type-7) percentiles do NOT join
-  *     that aggregation: mixing a distinct aggregate and the
-  *     TypedImperative Percentile in one agg forces an Expand-based plan
-  *     that benched 2-6x slower than running the pieces separately (57s
-  *     vs ~15s at sf0.1) and single-reducer Percentile cannot scale.
-  *     Instead each column gets a two-phase `groupBy(col).count()`
+  *     pass 1: mixing a distinct aggregate and the TypedImperative
+  *     Percentile in one agg forces an Expand-based plan that benched
+  *     2-6x slower than running the pieces separately (57s vs ~15s at
+  *     sf0.1) and single-reducer Percentile cannot scale. Instead every
+  *     long/double/string-family column is unpivoted into ONE typed
+  *     `(c, vl, vd, vs)` relation and counted into ONE two-phase
   *     frequency table — a scalable hash aggregation that shuffles only
-  *     distinct values — from which one tiny job reads BOTH
-  *     distinct_count and the frequency-weighted exact percentile.
-  *     Per-column jobs are submitted concurrently; the Spark scheduler
-  *     interleaves their stages across the cluster.
+  *     distinct values — from which one job (job A) reads distinct_count,
+  *     mad and, per family, the frequency-weighted exact percentile over
+  *     that family's own typed value. Columns whose distinct count pass 1
+  *     cannot bound read the same table again (a weighted-percentile job
+  *     or the distributed bracket chain). Columns outside the families
+  *     (decimals, arrays) get per-column frequency jobs; they and the
+  *     family table run concurrently on a fixed driver pool.
   *  3. `approximate = true` (the 100 TB mode) folds distinct + quantiles
   *     back into pass 1 as mergeable sketches (HLL++
   *     `approx_count_distinct`, KLL quantiles
   *     [[graft.plans.KllSketchAgg]]) — benched ~10x cheaper than the
-  *     exact pair and single-pass. KLL (k = [[ApproxQuantileK]], ~0.3%
-  *     normalized rank error) replaced `percentile_approx` here: the GK
-  *     summary answers one in-query percentile but cannot be stored or
-  *     unioned, while the KLL sketch is the same object
-  *     [[Profiles]] persists per shard — approximate describe over a
-  *     sharded corpus is now profile-union, not rescan.
-  *  4. `mad` needs the mean first: one dependent second aggregation for
-  *     all numeric columns together (petk/tools.py:62).
+  *     exact pair and single-pass. Its pass 1 stays ONE aggregation:
+  *     the sketches are imperative aggregates, which never codegen. KLL
+  *     (k = [[ApproxQuantileK]], ~0.3% normalized rank error) replaced
+  *     `percentile_approx` here: the GK summary answers one in-query
+  *     percentile but cannot be stored or unioned, while the KLL sketch
+  *     is the same object [[Profiles]] persists per shard — approximate
+  *     describe over a sharded corpus is now profile-union, not rescan.
+  *  4. `mad` needs the mean first (petk/tools.py:62). Exact mode reads it
+  *     off the frequency table in job A; approximate mode, which has no
+  *     frequency table, runs one dependent aggregation for all numeric
+  *     columns together.
   *
   * Stat-definition parity with the reference (pandas):
   *  - quantiles: linear (type-7) interpolation — Spark `percentile`
@@ -122,7 +139,7 @@ object Describe {
       approximate: Boolean = false,
       exactQuantileMaxDistinct: Long = DefaultExactQuantileMaxDistinct,
       percentileBufferMaxDistinct: Long = PercentileBufferMaxDistinct): Seq[ColumnProfile] = {
-    // NOT widened via Parallelize.cpuBound: the wide agg carries
+    // NOT widened via Parallelize.cpuBound: the pass-1 aggregates carry
     // FP-accumulating stats (mean/std/mad) whose rounded values sit on
     // documented boundary rationals (l_discount's mean is EXACTLY
     // 0.0499185 — the rd6 bridge class in the verify notes), and an
@@ -133,117 +150,33 @@ object Describe {
     val fields = df.schema.fields.map(f => f.name -> f).toMap
     val static = columns.map(c => c -> SemanticType.ofField(fields(c))).toMap
 
-    def cnt(cond: Column): Column = count(when(cond, lit(1)))
-    def quantileInput(name: String): Column = static(name) match {
-      // NTZ timestamps cast through TimestampType under the UTC session
-      // zone; DATE through epoch days — both lossless.
-      case SemanticType.Date => unix_micros(col(name).cast(TimestampType))
-      case _ => col(name).cast(DoubleType)
-    }
-
-    // ---- pass 1: one wide codegen'd hash agg ---------------------------
-    val aggs = Seq.newBuilder[Column]
-    aggs += count(lit(1)).as(s"${SEP}n")
-    columns.foreach { name =>
-      val f = fields(name)
-      val c = col(name)
-      def a(stat: String, e: Column): Unit = aggs += e.as(s"$name$SEP$stat")
-      a("count", count(c))
-      f.dataType match { // memory estimate: var-width measured, fixed derived
-        case StringType | BinaryType => a("bytes", sum(octet_length(c)))
-        case _ => ()
-      }
-      val st = static(name)
-      if (approximate && wantsDistinct(st))
-        a("distinct_count", approx_count_distinct(c))
-      if (approximate && wantsQuantiles(st))
-        a("quantiles", graft.plans.KllSketchAgg.kllQuantiles(
-          quantileInput(name).cast(DoubleType), QuantilePs, ApproxQuantileK))
-      st match {
-        case SemanticType.Boolean =>
-          a("mean", avg(c.cast(IntegerType)))
-        case SemanticType.Date =>
-          a("min", min(c)); a("max", max(c))
-        case SemanticType.Numeric =>
-          val d = c.cast(DoubleType)
-          a("min", min(c)); a("max", max(c))
-          a("mean", avg(c)); a("std", stddev_samp(c)); a("variance", var_samp(c))
-          a("kurtosis", kurtosis(c)); a("skewness", skewness(c)); a("sum", sum(c))
-          if (isFloating(f.dataType))
-            a("n_infinite", cnt(d === Double.PositiveInfinity || d === Double.NegativeInfinity))
-          a("n_zeros", cnt(c === lit(0)))
-        case _ => ()
-      }
-    }
-    val allAggs = aggs.result()
-    val row = df.agg(allAggs.head, allAggs.tail: _*).head()
-    val idx = row.schema.fieldNames.zipWithIndex.toMap
+    // ---- pass 1: codegen-sized chunks, one action ---------------------
+    val pass1 = aggregateChunks(df, pass1Chunks(df, columns, approximate))
     def get(name: String, stat: String): Option[Any] =
-      idx.get(s"$name$SEP$stat").map(row.get).filter(_ != null)
-    val n = row.getLong(idx(s"${SEP}n"))
+      pass1.get(s"$name$SEP$stat").filter(_ != null)
+    val n = pass1(s"${SEP}n").asInstanceOf[Long]
 
-    // ---- pass 2 (exact mode): frequency tables ------------------------
-    // distinct_count + frequency-weighted exact percentile. Same-typed
-    // columns are UNPIVOTED into one (column, value) relation per type
-    // family, so the whole pass is a fixed number of scans (one per
-    // family), not one scan per column: profiling 11 columns benched
-    // 19s -> ~6s at sf0.1 against the per-column shape. Columns outside
-    // the three families (arrays, decimals) fall back to concurrent
-    // per-column frequency jobs.
-    // exact-mode mads harvested from the frequency tables (see below);
-    // approximate mode keeps the dedicated raw-row scan
-    val madFromFreq = scala.collection.concurrent.TrieMap.empty[String, Double]
-    val freqStats: Map[String, (Long, Option[Seq[Any]])] =
+    // ---- pass 2 (exact mode): one frequency table ---------------------
+    // distinct_count + frequency-weighted exact percentile + mad. Every
+    // family column (see slotOf) is UNPIVOTED into ONE typed
+    // (c, vl, vd, vs) relation, so the pass is one scan and one job A
+    // whatever the mix of types (one scan per type family, run one after
+    // another, cost 3 chains of 3 AQE jobs on an 11-column table).
+    // Columns outside the families (arrays, decimals) get per-column
+    // frequency jobs, run concurrently with the family table's.
+    val freqStats: Map[String, FreqStat] =
       if (approximate) Map.empty
       else {
-        // family = unified unpivot type; conversions preserve distinctness
-        // (date -> epoch micros, integral -> long) and feed percentile
-        // with the same double arithmetic as the direct cast
-        def familyOf(name: String): Option[(String, Column)] = {
-          val c = col(name)
-          fields(name).dataType match {
-            case ByteType | ShortType | IntegerType | LongType => Some("long" -> c.cast(LongType))
-            case BooleanType => Some("long" -> c.cast(LongType))
-            case DateType | TimestampType | TimestampNTZType =>
-              Some("long" -> unix_micros(c.cast(TimestampType)))
-            case FloatType | DoubleType => Some("double" -> c.cast(DoubleType))
-            case StringType => Some("string" -> c)
-            case _ => None
-          }
-        }
-        // Cardinality ROUTING estimate for FALLBACK (non-family) columns
-        // only — decimals/arrays, whose quantiles must choose between the
-        // bounded Percentile buffer and the t-digest sketch before their
-        // freq job runs. One small HLL job, and only when n even makes
-        // the bound reachable. Family columns need no estimate: their
-        // routing reads the EXACT distinct count off job A (below) and
-        // runs the chosen route as a second job over the persisted freq
-        // table — no extra scan, no sketch error. An earlier variant rode
-        // HLL sketches on the pass-1 wide agg instead: approx_count_
-        // distinct is an ImperativeAggregate, which knocks the whole
-        // pass-1 hash agg out of whole-stage codegen (measured: the
-        // 4-column long-form profile went 1.6 s -> 3.7 s at sf0.1).
-        val gateEstimates: Map[String, Long] = {
-          val qCols = columns.filter(c => wantsQuantiles(static(c)) &&
-            familyOf(c).isEmpty && n > exactQuantileMaxDistinct)
-          if (qCols.isEmpty) Map.empty
-          else {
-            val est = df.agg(
-              approx_count_distinct(col(qCols.head)).as(qCols.head),
-              qCols.tail.map(c => approx_count_distinct(col(c)).as(c)): _*).head()
-            qCols.map(c => c -> est.getAs[Long](c)).toMap
-          }
-        }
         val want = columns.filter(c => wantsDistinct(static(c)))
-        val results = scala.collection.mutable.Map.empty[String, (Long, Option[Seq[Any]])]
+        val (family, rest) = want.partition(c => slotOf(fields(c)).isDefined)
 
-        // mad rides the frequency tables too (exact mode): avg(|x - mean|)
+        // mad rides the frequency tables (exact mode): avg(|x - mean|)
         // over rows == sum(f·|v - mean|)/sum(f) over the distinct table,
         // so the dedicated pass-3 full scan disappears — the distinct
         // table is never larger than the data and usually far smaller.
-        def madMeanOf(n: String): Option[Double] =
-          if (static(n) == SemanticType.Numeric)
-            get(n, "mean").map(_.asInstanceOf[Number].doubleValue())
+        def madMeanOf(c: String): Option[Double] =
+          if (static(c) == SemanticType.Numeric)
+            get(c, "mean").map(_.asInstanceOf[Number].doubleValue())
           else None
 
         // Static distinct-count upper bound for quantile routing: d ≤ n
@@ -269,23 +202,22 @@ object Describe {
               .getOrElse(false)
           }
 
-        val byFamily = want.flatMap(n => familyOf(n).map { case (f, conv) => (f, n, conv) })
-          .groupBy(_._1)
-        byFamily.foreach { case (family, members) =>
-          // single-member family: plain projection, no explode machinery
-          // (r17 — describe_numeric/long/date profile exactly one column
-          // per family; the 1-element array explode bought nothing)
+        def familyStats(members: Seq[String]): Seq[(String, FreqStat)] = {
+          def unpivoted(name: String): Seq[Column] = {
+            val (slot, v) = slotOf(fields(name)).get
+            lit(name).as("c") +: Slots.map { case (s, t) =>
+              (if (s == slot) v else lit(null).cast(t)).as(s)
+            }
+          }
+          // single member: plain projection, no explode machinery (r17 —
+          // describe_numeric/long/date profile exactly one column; the
+          // 1-element array explode bought nothing)
           val pairs = (members match {
-            case Seq((_, n, conv)) =>
-              df.select(lit(n).as("c"), conv.as("v"))
+            case Seq(one) => df.select(unpivoted(one): _*)
             case _ =>
-              df.select(explode(array(members.map { case (_, n, conv) =>
-                struct(lit(n).as("c"), conv.as("v"))
-              }: _*)).as("p"))
-                .select(col("p.c").as("c"), col("p.v").as("v"))
-          }).filter(col("v").isNotNull)
-          val wantQ = members.map(_._2)
-            .filter(n => family != "string" && wantsQuantiles(static(n)))
+              df.select(explode(array(members.map(m => struct(unpivoted(m): _*)): _*)).as("p"))
+                .select("p.*")
+          }).filter(Slots.map { case (s, _) => col(s).isNotNull }.reduce(_ || _))
           // Exact type-7 quantiles, routed in two FREE tiers (both routes
           // are exact, so routing can never change a value):
           //  - PROVABLY-small columns — static bound min(n, max-min+1 for
@@ -310,76 +242,78 @@ object Describe {
           // 4-column profile went 1.6 s -> 3.7 s); exact-d routing for
           // EVERY column forces persist + a second round trip on the
           // provably-small majority.
-          val (smallQ, ambigQ) = wantQ.partition(qn => provablySmall(qn))
-          // the frequency table feeds one job when every quantile column
-          // is provably small (job A); ambiguous columns add a second
-          // consumer (the cached percentile job or the bracket chain) —
-          // persist only when those extra consumers exist
-          val freq0 = pairs.groupBy("c", "v").agg(count(lit(1)).as("f"))
+          val (smallQ, ambigQ) = members.filter(m => wantsQuantiles(static(m)))
+            .partition(provablySmall)
+          val freq0 = pairs.groupBy("c", Slots.map(_._1): _*).agg(count(lit(1)).as("f"))
           // localCheckpoint, not persist (r17): the cached-plan form
           // pinned every consumer stage (job A, tier-2 percentile, the
           // bracket chain) at full shuffle width — AQE cannot coalesce
           // through a persisted subplan — measured as 145 tasks for the
           // one-column numeric profile; the checkpoint materializes
           // with AQE-coalesced partitions and the same three consumers
-          // read its blocks
+          // read its blocks. Only ambiguous columns add those consumers.
           val freq = if (ambigQ.nonEmpty) freq0.barrier() else freq0
           try {
-            val madMembers = members.map(_._2).flatMap(n => madMeanOf(n).map(n -> _))
+            // one percentile column per family, each over that family's
+            // own typed value: no value is coerced into another family
+            def percentiles(qs: Seq[String]): Seq[Column] = Seq("vl", "vd").flatMap { s =>
+              val mine = qs.filter(q => slotOf(fields(q)).exists(_._1 == s))
+              if (mine.isEmpty) None
+              else Some(percentile(when(col("c").isin(mine: _*), col(s)),
+                typedLit(QuantilePs), col("f")).as(s"q$s"))
+            }
+            def quantilesIn(r: Row): Option[Seq[Any]] = Seq("qvl", "qvd").collectFirst {
+              case k if r.schema.fieldNames.contains(k) && !r.isNullAt(r.fieldIndex(k)) =>
+                r.getAs[scala.collection.Seq[Any]](k).toSeq
+            }
+            // the numeric value as a double: mad and the bracket chain
+            // read it (strings are null here)
+            val x = coalesce(col("vl").cast(DoubleType), col("vd"))
+            val madMembers = members.flatMap(m => madMeanOf(m).map(m -> _))
             // job A — ONE aggregation over the freq table: distinct
             // counts, small-column percentiles, large-column row counts
             // and value bounds (feeding the bracket chain), and mad;
             // each group's mad uses its own pass-1 mean
             val madAgg =
-              if (family == "string" || madMembers.isEmpty) Nil
+              if (madMembers.isEmpty) Nil
               else {
-                val meanExpr = coalesce(madMembers.map { case (n, m) =>
-                  when(col("c") === lit(n), lit(m)) }: _*)
-                Seq((sum(col("f") * abs(col("v").cast(DoubleType) - meanExpr)) /
+                val meanExpr = coalesce(madMembers.map { case (m, mean) =>
+                  when(col("c") === lit(m), lit(mean)) }: _*)
+                Seq((sum(col("f") * abs(x - meanExpr)) /
                   sum(when(meanExpr.isNotNull, col("f")))).as("mad"))
               }
-            // finite-only bounds: NaN/±Inf go to edge slices by rule, so
-            // the bucketing literals must span only the finite values
-            val vd = col("v").cast(DoubleType)
-            // bounds are taken over the CLAMPED proxy (same as
-            // Stats.exactQuantiles / Packing.deterministicSlice): clamping
-            // is monotone, only slice balance shifts, and it keeps
-            // mxv-mnv from overflowing to Infinity when the finite range
-            // spans more than ~1.8e308 (which would make the bucket
-            // division produce NaN and floor(NaN).cast throw under ANSI)
+            // finite-only bounds over the CLAMPED proxy (same as
+            // Stats.exactQuantiles / Packing.deterministicSlice): NaN/±Inf
+            // go to edge slices by rule, clamping is monotone (only slice
+            // balance shifts) and keeps mxv-mnv from overflowing to
+            // Infinity when the finite range spans more than ~1.8e308
+            // (which would make the bucket division produce NaN and
+            // floor(NaN).cast throw under ANSI)
             val half = Double.MaxValue / 2
-            val pb = greatest(least(vd, lit(half)), lit(-half))
-            val finiteV =
-              if (family == "double")
-                when(isnan(vd) || vd === Double.PositiveInfinity ||
-                  vd === Double.NegativeInfinity, lit(null)).otherwise(pb)
-              else vd
-            val smallAgg =
-              if (smallQ.isEmpty) Nil
-              else Seq(percentile(when(col("c").isin(smallQ: _*), col("v")),
-                typedLit(QuantilePs), col("f")).as("q"))
+            val finiteX = when(x.isNull || isnan(x) || x === Double.PositiveInfinity ||
+              x === Double.NegativeInfinity, lit(null))
+              .otherwise(greatest(least(x, lit(half)), lit(-half)))
             val boundsAgg =
               if (ambigQ.isEmpty) Nil
-              else Seq(sum("f").as("nrows"),
-                min(finiteV).as("mnv"), max(finiteV).as("mxv"))
-            val aggExprs = count(lit(1)).as("d") +: (smallAgg ++ boundsAgg ++ madAgg)
-            val qByCol = scala.collection.mutable.Map.empty[String, scala.collection.Seq[Any]]
+              else Seq(sum("f").as("nrows"), min(finiteX).as("mnv"), max(finiteX).as("mxv"))
+            val aggExprs = count(lit(1)).as("d") +: (percentiles(smallQ) ++ boundsAgg ++ madAgg)
+            val qByCol = scala.collection.mutable.Map.empty[String, Seq[Any]]
             val dByCol = scala.collection.mutable.Map.empty[String, Long]
             val nByCol = scala.collection.mutable.Map.empty[String, Long]
             val vBounds = scala.collection.mutable.Map.empty[String, (Double, Double)]
+            val madByCol = scala.collection.mutable.Map.empty[String, Double]
             val madSet = madMembers.map(_._1).toSet
             freq.groupBy("c").agg(aggExprs.head, aggExprs.tail: _*).collect().foreach { r =>
               val c = r.getString(0)
               dByCol(c) = r.getAs[Long]("d")
-              if (smallQ.contains(c) && r.getAs[Any]("q") != null)
-                qByCol(c) = r.getAs[scala.collection.Seq[Any]]("q")
+              if (smallQ.contains(c)) quantilesIn(r).foreach(qByCol(c) = _)
               if (ambigQ.contains(c)) {
                 nByCol(c) = r.getAs[Long]("nrows")
                 if (r.getAs[Any]("mnv") != null)
                   vBounds(c) = (r.getAs[Double]("mnv"), r.getAs[Double]("mxv"))
               }
               if (madSet.contains(c) && r.getAs[Any]("mad") != null)
-                madFromFreq(c) = r.getAs[Double]("mad")
+                madByCol(c) = r.getAs[Double]("mad")
             }
             // tier 2: the exact d settles the ambiguous columns
             val (lateSmallQ, largeQ) = ambigQ.partition(qn =>
@@ -387,12 +321,10 @@ object Describe {
             if (lateSmallQ.nonEmpty) {
               // sub-bound groups only, over the CACHED freq blocks — the
               // scan was already paid by job A's materialization
+              val ps = percentiles(lateSmallQ)
               freq.filter(col("c").isin(lateSmallQ: _*)).groupBy("c")
-                .agg(percentile(col("v"), typedLit(QuantilePs), col("f")).as("q"))
-                .collect().foreach { r =>
-                  if (r.getAs[Any]("q") != null)
-                    qByCol(r.getString(0)) = r.getAs[scala.collection.Seq[Any]]("q")
-                }
+                .agg(ps.head, ps.tail: _*)
+                .collect().foreach(r => quantilesIn(r).foreach(qByCol(r.getString(0)) = _))
             }
             val qCols = largeQ.filter(n => nByCol.getOrElse(n, 0L) > 0)
             if (qCols.nonEmpty) {
@@ -402,24 +334,25 @@ object Describe {
               // replace the d-row sort/window/broadcast-join prefix
               // pass. The group key stays the dense int index (r17);
               // vBounds (the clamped finite proxy range job A already
-              // computed) seeds each column's root interval.
-              val idxOf = qCols.zipWithIndex.toMap
-              val ci = coalesce(qCols.map(n =>
-                when(col("c") === lit(n), lit(idxOf(n)))): _*)
-              val neededByIdx = qCols.map { n =>
+              // computed) seeds each column's root interval. One chain
+              // serves every family: the helper buckets and returns the
+              // double proxy of any value, and a long never lands in the
+              // NaN/±Inf edge classes a double view adds.
+              val code = qCols.zipWithIndex.toMap
+              val neededByCode = qCols.map { n =>
                 val cnt = nByCol(n)
                 val hs = QuantilePs.map(p => p * (cnt - 1))
-                idxOf(n) -> hs.flatMap(h =>
+                code(n) -> hs.flatMap(h =>
                   Seq(math.floor(h).toLong, math.min(math.ceil(h).toLong, cnt - 1))).distinct
               }.toMap
-              val boundsByIdx = qCols.flatMap(n =>
-                vBounds.get(n).map(idxOf(n) -> _)).toMap
+              val boundsByCode = qCols.flatMap(n => vBounds.get(n).map(code(n) -> _)).toMap
+              val ci = coalesce(qCols.map(n => when(col("c") === lit(n), lit(code(n)))): _*)
               val narrowed = freq.filter(col("c").isin(qCols: _*))
-                .select(ci.as("_ci"), col("v"), col("f"))
+                .select(ci.as("_ci"), x.as("v"), col("f"))
               val brackets = graft.operators.Packing.bracketRowsByAgg(
-                narrowed, "_ci", "v", "f", neededByIdx, boundsByIdx)
+                narrowed, "_ci", "v", "f", neededByCode, boundsByCode)
               qCols.foreach { n =>
-                val rows = brackets.getOrElse(idxOf(n), Array.empty)
+                val rows = brackets.getOrElse(code(n), Array.empty)
                 def valueAt(pos: Long): Double = rows
                   .find(r => r._2 <= pos && r._2 + r._3 > pos)
                   .getOrElse(throw new IllegalStateException(
@@ -439,67 +372,84 @@ object Describe {
                 }
               }
             }
-            members.foreach { case (_, n, _) => // absent = all-null column
-              results(n) = (dByCol.getOrElse(n, 0L), qByCol.get(n).map(_.toSeq))
-            }
+            members.map(m => m -> // absent = all-null column
+              FreqStat(dByCol.getOrElse(m, 0L), qByCol.get(m), madByCol.get(m)))
           } finally if (ambigQ.nonEmpty) release(freq)
         }
 
-        // fallback: per-column jobs for non-family types, run concurrently
-        val rest = want.filterNot(n => familyOf(n).isDefined)
-        if (rest.nonEmpty) {
-          implicit val ec: ExecutionContext = Describe.freqEc
-          val futures = rest.map { name =>
-            name -> Future {
-              val freq = df.filter(col(name).isNotNull)
-                .groupBy(col(name)).agg(count(lit(1)).as(s"${SEP}f"))
-              val withQ = wantsQuantiles(static(name))
-              val exact = gateEstimates.getOrElse(name, 0L) <= exactQuantileMaxDistinct
-              val madMean = madMeanOf(name)
-              val exprs = count(lit(1)).as("d") +:
-                ((if (withQ && exact)
-                  Seq(percentile(quantileInput(name), typedLit(QuantilePs), col(s"${SEP}f")).as("q"))
-                else Nil) ++
-                madMean.map(m => (sum(col(s"${SEP}f") *
-                  abs(col(name).cast(DoubleType) - lit(m))) /
-                  sum(col(s"${SEP}f"))).as("mad")).toSeq)
-              val r = freq.agg(exprs.head, exprs.tail: _*).head()
-              if (madMean.isDefined && r.getAs[Any]("mad") != null)
-                madFromFreq(name) = r.getAs[Double]("mad")
-              val qs =
-                if (withQ && exact && r.getAs[Any]("q") != null)
-                  Some(r.getAs[scala.collection.Seq[Any]]("q").toSeq)
-                else if (withQ && !exact) { // gate fired: KLL over raw rows
-                  val rr = df.filter(col(name).isNotNull)
-                    .agg(graft.plans.KllSketchAgg.kllQuantiles(
-                      quantileInput(name).cast(DoubleType), QuantilePs,
-                      ApproxQuantileK).as("q")).head()
-                  if (rr.isNullAt(0)) None else Some(rr.getSeq[Any](0).toSeq)
-                } else None
-              (r.getAs[Long]("d"), qs)
-            }
-          }
-          futures.foreach { case (name, fut) =>
-            results(name) = Await.result(fut, Duration.Inf)
+        // Cardinality ROUTING estimate for the non-family columns only —
+        // decimals/arrays, whose quantiles must choose between the
+        // bounded Percentile buffer and the t-digest sketch before their
+        // freq job runs. One small HLL job, and only when n even makes
+        // the bound reachable. Family columns need no estimate: their
+        // routing reads the EXACT distinct count off job A and runs the
+        // chosen route over the persisted freq table — no extra scan, no
+        // sketch error. An earlier variant rode HLL sketches on pass 1
+        // instead: approx_count_distinct is an ImperativeAggregate, which
+        // knocks the pass-1 hash agg out of whole-stage codegen
+        // (measured: the 4-column long-form profile went 1.6 s -> 3.7 s
+        // at sf0.1).
+        val gateEstimates: Map[String, Long] = {
+          val qCols = rest.filter(c => wantsQuantiles(static(c)) && n > exactQuantileMaxDistinct)
+          if (qCols.isEmpty) Map.empty
+          else {
+            val est = df.agg(
+              approx_count_distinct(col(qCols.head)).as(qCols.head),
+              qCols.tail.map(c => approx_count_distinct(col(c)).as(c)): _*).head()
+            qCols.map(c => c -> est.getAs[Long](c)).toMap
           }
         }
-        results.toMap
+        def fallbackStats(name: String): (String, FreqStat) = {
+          val freq = df.filter(col(name).isNotNull)
+            .groupBy(col(name)).agg(count(lit(1)).as(s"${SEP}f"))
+          val withQ = wantsQuantiles(static(name))
+          val exact = gateEstimates.getOrElse(name, 0L) <= exactQuantileMaxDistinct
+          val madMean = madMeanOf(name)
+          val exprs = count(lit(1)).as("d") +:
+            ((if (withQ && exact)
+              Seq(percentile(quantileInput(fields(name)), typedLit(QuantilePs), col(s"${SEP}f")).as("q"))
+            else Nil) ++
+            madMean.map(m => (sum(col(s"${SEP}f") *
+              abs(col(name).cast(DoubleType) - lit(m))) /
+              sum(col(s"${SEP}f"))).as("mad")).toSeq)
+          val r = freq.agg(exprs.head, exprs.tail: _*).head()
+          val qs =
+            if (withQ && exact && r.getAs[Any]("q") != null)
+              Some(r.getAs[scala.collection.Seq[Any]]("q").toSeq)
+            else if (withQ && !exact) { // gate fired: KLL over raw rows
+              val rr = df.filter(col(name).isNotNull)
+                .agg(graft.plans.KllSketchAgg.kllQuantiles(
+                  quantileInput(fields(name)).cast(DoubleType), QuantilePs,
+                  ApproxQuantileK).as("q")).head()
+              if (rr.isNullAt(0)) None else Some(rr.getSeq[Any](0).toSeq)
+            } else None
+          val mad = if (madMean.isDefined) Option(r.getAs[Any]("mad")).map(_.asInstanceOf[Double])
+            else None
+          name -> FreqStat(r.getAs[Long]("d"), qs, mad)
+        }
+
+        val tasks: Seq[() => Seq[(String, FreqStat)]] =
+          (if (family.isEmpty) Nil else Seq(() => familyStats(family))) ++
+            rest.map(name => () => Seq(fallbackStats(name)))
+        onPool(df.sparkSession.sparkContext, tasks).flatten.toMap
       }
 
     def distinctOf(name: String): Option[Long] =
       if (approximate) get(name, "distinct_count").map(_.asInstanceOf[Number].longValue())
-      else freqStats.get(name).map(_._1)
+      else freqStats.get(name).map(_.distinct)
     def quantilesOf(name: String): Option[scala.collection.Seq[Any]] =
       if (approximate) get(name, "quantiles").map(_.asInstanceOf[scala.collection.Seq[Any]])
-      else freqStats.get(name).flatMap(_._2)
+      else freqStats.get(name).flatMap(_.quantiles)
 
     // ---- pass 3: mad for columns the freq tables didn't cover ----------
-    // Exact mode harvests every mad from pass 2 (madFromFreq), so this
-    // scan only fires in approximate mode (no freq tables exist there).
-    val numericWithMean = columns.filter { name =>
-      static(name) == SemanticType.Numeric && get(name, "mean").isDefined
+    // Exact mode harvests every mad from pass 2, so this scan only fires
+    // in approximate mode (no freq tables exist there).
+    val madFromFreq: Map[String, Any] =
+      freqStats.flatMap { case (c, s) => s.mad.map(c -> (_: Any)) }
+    val madLeftover = columns.filter { name =>
+      static(name) == SemanticType.Numeric && get(name, "mean").isDefined &&
+        !madFromFreq.contains(name)
     }
-    val madLeftover = numericWithMean.filterNot(madFromFreq.contains)
     val madByCol: Map[String, Any] =
       (if (madLeftover.isEmpty) Map.empty[String, Any]
       else {
@@ -511,7 +461,7 @@ object Describe {
         madLeftover.zipWithIndex.flatMap { case (name, i) =>
           Option(madRow.get(i)).map(name -> _)
         }.toMap
-      }) ++ madFromFreq.map { case (k, v) => k -> (v: Any) }
+      }) ++ madFromFreq
 
     // ---- driver-side assembly, reference stat order --------------------
     columns.map { name =>
@@ -584,8 +534,167 @@ object Describe {
     }
   }
 
-  /** Bounded pool for concurrent per-column frequency jobs (driver-side
-    * job submission only; the work runs on executors). */
+  /** Pass 2's result for one column: exact distinct count, quantiles when
+    * the column takes them, and mad from its frequency table. */
+  private final case class FreqStat(distinct: Long, quantiles: Option[Seq[Any]],
+      mad: Option[Double])
+
+  /** The typed unpivot's value slots, one per frequency-table family. */
+  private val Slots: Seq[(String, DataType)] =
+    Seq("vl" -> LongType, "vd" -> DoubleType, "vs" -> StringType)
+
+  /** A family column's slot and its value there: integral, boolean and
+    * date/time values as longs (date/time as epoch micros), floats as
+    * doubles, strings as strings. Each conversion preserves distinctness
+    * and feeds percentile the same double arithmetic as a direct cast.
+    * None (decimals, arrays): a per-column frequency job instead. */
+  private def slotOf(f: StructField): Option[(String, Column)] = {
+    val c = col(f.name)
+    f.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType =>
+        Some("vl" -> c.cast(LongType))
+      case DateType | TimestampType | TimestampNTZType =>
+        Some("vl" -> unix_micros(c.cast(TimestampType)))
+      case FloatType | DoubleType => Some("vd" -> c.cast(DoubleType))
+      case StringType => Some("vs" -> c)
+      case _ => None
+    }
+  }
+
+  /** A quantile column's values as numbers. NTZ timestamps cast through
+    * TimestampType under the UTC session zone; DATE through epoch days —
+    * both lossless. */
+  private def quantileInput(f: StructField): Column = SemanticType.ofField(f) match {
+    case SemanticType.Date => unix_micros(col(f.name).cast(TimestampType))
+    case _ => col(f.name).cast(DoubleType)
+  }
+
+  /** Pass 1's aggregates for one column, keyed `column SEP stat`. */
+  private def pass1Aggs(f: StructField, approximate: Boolean): Seq[(String, Column)] = {
+    val name = f.name
+    val c = col(name)
+    val st = SemanticType.ofField(f)
+    val out = Seq.newBuilder[(String, Column)]
+    def a(stat: String, e: Column): Unit = out += s"$name$SEP$stat" -> e
+    def cnt(cond: Column): Column = count(when(cond, lit(1)))
+    a("count", count(c))
+    f.dataType match { // memory estimate: var-width measured, fixed derived
+      case StringType | BinaryType => a("bytes", sum(octet_length(c)))
+      case _ => ()
+    }
+    if (approximate && wantsDistinct(st))
+      a("distinct_count", approx_count_distinct(c))
+    if (approximate && wantsQuantiles(st))
+      a("quantiles", graft.plans.KllSketchAgg.kllQuantiles(
+        quantileInput(f).cast(DoubleType), QuantilePs, ApproxQuantileK))
+    st match {
+      case SemanticType.Boolean =>
+        a("mean", avg(c.cast(IntegerType)))
+      case SemanticType.Date =>
+        a("min", min(c)); a("max", max(c))
+      case SemanticType.Numeric =>
+        val d = c.cast(DoubleType)
+        a("min", min(c)); a("max", max(c))
+        a("mean", avg(c)); a("std", stddev_samp(c)); a("variance", var_samp(c))
+        a("kurtosis", kurtosis(c)); a("skewness", skewness(c)); a("sum", sum(c))
+        if (isFloating(f.dataType))
+          a("n_infinite", cnt(d === Double.PositiveInfinity || d === Double.NegativeInfinity))
+        a("n_zeros", cnt(c === lit(0)))
+      case _ => ()
+    }
+    out.result()
+  }
+
+  /** Pass 1's aggregates — the row count, then each column's group —
+    * packed in column order into chunks that whole-stage codegen accepts.
+    * A no-grouping aggregate whose buffer holds more fields than the
+    * session's `spark.sql.codegen.maxFields` (default 100) silently runs
+    * as an interpreted HashAggregate, and one numeric column carries 22-23
+    * buffer fields. Each group's width is read off the analyzed plan's
+    * `aggBufferAttributes`, so a stat added later is counted without a
+    * hand-kept table. A no-grouping aggregate computes every column on its
+    * own, so the split changes no value. Approximate mode keeps one
+    * chunk: its sketches are imperative aggregates, never codegen'd. */
+  private[operators] def pass1Chunks(df: DataFrame, columns: Seq[String],
+      approximate: Boolean): Seq[Seq[(String, Column)]] = {
+    val groups = Seq(s"${SEP}n" -> count(lit(1))) +:
+      columns.map(c => pass1Aggs(df.schema(c), approximate))
+    if (approximate) Seq(groups.flatten)
+    else {
+      val all = groups.flatten.map(_._2)
+      val buffers: Seq[Seq[Attribute]] =
+        df.agg(all.head, all.tail: _*).queryExecution.analyzed match {
+          case a: Aggregate => a.aggregateExpressions.map(_.collect {
+            case e: AggregateExpression => e.aggregateFunction.aggBufferAttributes
+          }.flatten)
+          case other => throw new IllegalStateException(
+            s"pass 1 analyzed to ${other.nodeName}, not an Aggregate")
+        }
+      val conf = df.sparkSession.sessionState.conf
+      def fits(attrs: Seq[Attribute]) = !WholeStageCodegenExec.isTooManyFields(conf,
+        StructType(attrs.map(a => StructField(a.name, a.dataType))))
+      val chunks = Seq.newBuilder[Seq[(String, Column)]]
+      var chunk = Vector.empty[(String, Column)]
+      var width = Vector.empty[Attribute]
+      var rest = buffers
+      groups.foreach { g =>
+        val (mine, tail) = rest.splitAt(g.size)
+        rest = tail
+        val attrs = mine.flatten
+        if (chunk.nonEmpty && !fits(width ++ attrs)) {
+          chunks += chunk
+          chunk = Vector.empty
+          width = Vector.empty
+        }
+        chunk ++= g
+        width ++= attrs
+      }
+      (chunks += chunk).result()
+    }
+  }
+
+  /** Runs pass 1's chunks as ONE action and returns every stat by key.
+    * Each chunk stays its own no-grouping aggregate (own exchange, own
+    * codegen stage) and yields exactly one row; the rows are joined side
+    * by side as a cartesian product, so AQE submits every chunk's map
+    * stage at once and k chunks cost k + 1 jobs, where one action per
+    * chunk would cost 2k. (A union would need each chunk padded to the
+    * shared schema, and the optimizer folds that padding into the final
+    * aggregate, which then outgrows the codegen limit again.) */
+  private def aggregateChunks(df: DataFrame,
+      chunks: Seq[Seq[(String, Column)]]): Map[String, Any] = {
+    val offsets = chunks.scanLeft(0)(_ + _.size)
+    val frames = chunks.zip(offsets).map { case (chunk, off) =>
+      val named = chunk.zipWithIndex.map { case ((_, e), j) => e.as(s"_${off + j}") }
+      df.agg(named.head, named.tail: _*)
+    }
+    val row = frames.reduce((a, b) => a.hint("shuffle_replicate_nl").crossJoin(b)).head()
+    chunks.flatten.map(_._1).zipWithIndex.map { case (key, k) => key -> row.get(k) }.toMap
+  }
+
+  /** Job-local properties a pool task takes over from its caller, so
+    * describe's jobs keep the caller's job group (cancelling the group
+    * cancels them), tags, description and scheduler pool. */
+  private val CallerProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+
+  /** Runs `tasks` on [[freqEc]] and blocks the caller until all finish.
+    * Only the caller waits: a task never awaits another pool future, so
+    * any number of concurrent callers share the fixed pool without
+    * deadlock. */
+  private def onPool[T](sc: SparkContext, tasks: Seq[() => T]): Seq[T] = {
+    val props = CallerProps.map(k => k -> sc.getLocalProperty(k))
+    implicit val ec: ExecutionContext = freqEc
+    tasks.map { t =>
+      Future {
+        props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        t()
+      }
+    }.map(Await.result(_, Duration.Inf))
+  }
+
+  /** Bounded pool for describe's frequency-table tasks (driver-side job
+    * submission only; the work runs on executors). */
   private lazy val freqEc: ExecutionContext = ExecutionContext.fromExecutor(
     java.util.concurrent.Executors.newFixedThreadPool(8, r => {
       val t = new Thread(r, "describe-freq"); t.setDaemon(true); t

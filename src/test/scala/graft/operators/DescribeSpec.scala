@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.core.{Report, SemanticType}
@@ -188,6 +190,121 @@ class DescribeSpec extends SparkSpec {
     assert(q50 === 500.0 || q50 === 501.0)
     assert(guarded("distinct_count") === 1000L) // distinct stays exact
     assert(guarded("mad").asInstanceOf[Number].doubleValue() === 250.0)
+  }
+
+  // 14 columns over every family and the per-column fallback: int, long,
+  // short, float, doubles with NaN/±Inf, date, timestamp_ntz, strings,
+  // boolean, decimal and an all-null column — six numeric columns alone
+  // carry more than 100 pass-1 buffer fields
+  private def wideFrame() = {
+    val rows = (0 until 400).map { i =>
+      val d =
+        if (i % 50 == 0) Double.NaN
+        else if (i % 97 == 0) Double.PositiveInfinity
+        else if (i % 89 == 0) Double.NegativeInfinity
+        else i * 0.37 - 20
+      Row(i, i * 7919L % 100003L, (i % 37) * 1000, d, (i % 7) / 2.0,
+        java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i % 31)),
+        java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusSeconds(i * 86413L),
+        s"s${i % 13}", if (i % 3 == 0) null else s"t$i", i % 4 == 0, null,
+        (i % 5).toShort, i / 3.0f, BigDecimal(i % 41) / 4)
+    }
+    make(rows, "id" -> IntegerType, "l" -> LongType, "i" -> IntegerType,
+      "d" -> DoubleType, "d2" -> DoubleType, "dt" -> DateType,
+      "ts" -> TimestampNTZType, "s" -> StringType, "s2" -> StringType,
+      "b" -> BooleanType, "nul" -> DoubleType, "sh" -> ShortType,
+      "f" -> FloatType, "dec" -> DecimalType(10, 2))
+  }
+
+  test("profiling every column at once equals profiling each alone, bit for bit") {
+    val data = wideFrame()
+    val cols = data.columns.toSeq
+    assert(Describe.pass1Chunks(data, cols, approximate = false).size >= 2,
+      "the frame must span more than one pass-1 chunk")
+    // the default bound routes every quantile through job A; 50 sends
+    // some columns through the tier-2 percentile and the rest through
+    // the bracket chain, over longs, doubles and timestamps together
+    Seq(Describe.PercentileBufferMaxDistinct, 50L).foreach { bound =>
+      val all = Describe.profile(data, cols, percentileBufferMaxDistinct = bound)
+      cols.zip(all).foreach { case (c, p) =>
+        val one = Describe.profile(data, Seq(c), percentileBufferMaxDistinct = bound).head
+        assert(p.column === c)
+        assert(p.contentType === one.contentType, s"$c (bound $bound)")
+        assert(p.stats.keys.toSeq === one.stats.keys.toSeq, s"$c (bound $bound)")
+        p.stats.foreach { case (k, v) =>
+          (v, one.stats(k)) match {
+            case (x: Double, y: Double) =>
+              val same = java.lang.Double.doubleToLongBits(x) ==
+                java.lang.Double.doubleToLongBits(y)
+              // mad sums f·|v - mean| over the frequency table, whose
+              // row order follows the table's layout; the same bound as
+              // DeterminismStressSpec
+              if (k == "mad") assert(same || math.abs(x - y) <= math.ulp(x) * 64,
+                s"$c.$k (bound $bound): $x vs $y")
+              else assert(same, s"$c.$k (bound $bound): $x vs $y")
+            case (x, y) => assert(x === y, s"$c.$k (bound $bound)")
+          }
+        }
+      }
+    }
+  }
+
+  test("exact profile keeps every hash aggregate inside whole-stage codegen") {
+    val data = wideFrame()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val marker = "codegen_guard_marker"
+    @volatile var sawMarker = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) sawMarker = true
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Seq(Describe.PercentileBufferMaxDistinct, 50L).foreach { bound =>
+        Describe.profile(data, data.columns.toSeq, percentileBufferMaxDistinct = bound)
+      }
+      // the listener bus delivers in order: once the marker action has
+      // arrived, so has every profiling action before it
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sawMarker, "listener events did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    val aggs = plans.asScala.toSeq.flatMap(graft.tools.OptProbe.aggregates)
+    assert(aggs.exists(_._1.isInstanceOf[
+      org.apache.spark.sql.execution.aggregate.HashAggregateExec]))
+    aggs.foreach { case (node, inCodegen) =>
+      assert(inCodegen, s"aggregate outside whole-stage codegen:\n${node.treeString}")
+    }
+  }
+
+  test("frequency-table jobs run on the pool under the caller's job group") {
+    val data = wideFrame()
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = "describe-spec-marker"
+    @volatile var sawMarker = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        if (g.contains(marker)) sawMarker = true else groups.add(g.getOrElse("<none>"))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("describe-spec", "profile")
+      try Describe.profile(data, data.columns.toSeq, percentileBufferMaxDistinct = 50L)
+      finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "drain")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sawMarker, "listener events did not drain")
+    } finally sc.removeSparkListener(listener)
+    assert(!groups.isEmpty)
+    assert(groups.asScala.forall(_ == "describe-spec"), groups.asScala.toSeq.distinct)
   }
 
   test("small-n guards: kurtosis undefined below 4, skewness below 3 (pandas parity)") {

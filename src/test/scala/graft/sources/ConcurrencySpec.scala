@@ -42,6 +42,24 @@ class ConcurrencySpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
+  test("ten threads describing on one session share the describe pool without deadlock") {
+    // more callers than the pool's 8 threads: every exact describe runs
+    // its frequency tasks there, and only callers ever wait on them
+    def describe(): Seq[(String, Map[String, Any])] =
+      graft.core.Report(Tables.lineitem(spark, dir)).describe()
+        .map(p => p.column -> (p.stats: Map[String, Any]))
+    val serial = describe()
+    val pool = Executors.newFixedThreadPool(10)
+    try {
+      val futs = (0 until 10).map { _ =>
+        pool.submit(new Callable[Seq[(String, Map[String, Any])]] { def call() = describe() })
+      }
+      futs.zipWithIndex.foreach { case (f, i) =>
+        assert(f.get(300, TimeUnit.SECONDS) === serial, s"caller $i diverged from the serial describe")
+      }
+    } finally pool.shutdownNow()
+  }
+
   test("concurrent sessions with opposing confs and prune knobs reproduce the solo results") {
     import org.apache.spark.sql.functions._
     // solo baselines on the parent session

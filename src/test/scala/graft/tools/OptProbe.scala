@@ -4,6 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
 
 import graft.operators.Materialize.releaseAll
 
@@ -13,7 +16,10 @@ import graft.operators.Materialize.releaseAll
   * Bench methodology (warmup pass, best-of-2 timed `.count()`, caches
   * dropped between passes) while a listener counts jobs / stages /
   * tasks and sums task + shuffle metrics, and optionally dumps
-  * `.explain("formatted")` to plans/<tag>/<name>_<suffix>.txt.
+  * `.explain("formatted")` to plans/<tag>/<name>_<suffix>.txt. One
+  * more, untimed pass materializes the query's own plan (not the
+  * pruned count plan) and reports `codegenMisses`: its hash and sort
+  * aggregates that run outside whole-stage codegen ([[aggregates]]).
   *
   * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * OPTPROBE_PLAN_SUFFIX (e.g. "before"/"after"; empty = no plan dump),
@@ -85,7 +91,11 @@ object OptProbe {
               if (dt < best) { best = dt; bestLine = line }
               releaseAll(spark)
             }
-            println(bestLine)
+            val full = fn(spark, sfDir)
+            full.queryExecution.toRdd.count() // AQE settles its final plan
+            val misses = codegenMisses(full.queryExecution.executedPlan)
+            releaseAll(spark)
+            println(bestLine.dropRight(1) + s""","codegenMisses":$misses}""")
             if (planSuffix.nonEmpty) {
               val plan = fn(spark, sfDir).queryExecution.explainString(
                 org.apache.spark.sql.execution.FormattedMode)
@@ -101,4 +111,32 @@ object OptProbe {
     }
     spark.stop()
   }
+
+  /** Every HashAggregateExec / SortAggregateExec of an executed plan,
+    * paired with whether it runs inside a whole-stage codegen stage. The
+    * walk enters AQE's final plan, its query stages and subqueries; an
+    * InputAdapter or a stage boundary ends the enclosing codegen stage. A
+    * no-grouping aggregate over more buffer fields than
+    * `spark.sql.codegen.maxFields` silently loses its `*(n)` prefix. */
+  def aggregates(plan: SparkPlan): Seq[(SparkPlan, Boolean)] = {
+    def walk(p: SparkPlan, inCodegen: Boolean): Seq[(SparkPlan, Boolean)] = {
+      val here = p match {
+        case _: HashAggregateExec | _: SortAggregateExec => Seq(p -> inCodegen)
+        case _ => Nil
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan -> false)
+        case s: QueryStageExec => Seq(s.plan -> false)
+        case w: WholeStageCodegenExec => Seq(w.child -> true)
+        case i: InputAdapter => Seq(i.child -> false)
+        case other => other.children.map(_ -> inCodegen)
+      }
+      here ++ kids.flatMap { case (c, in) => walk(c, in) } ++
+        p.subqueries.flatMap(walk(_, false))
+    }
+    walk(plan, false)
+  }
+
+  /** Hash and sort aggregates of `plan` outside whole-stage codegen. */
+  def codegenMisses(plan: SparkPlan): Int = aggregates(plan).count(!_._2)
 }
