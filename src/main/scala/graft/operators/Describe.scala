@@ -228,12 +228,11 @@ object Describe {
           //    routed by the EXACT distinct count job A computes anyway:
           //    actually-small ones get one extra weighted-Percentile job
           //    over the CACHED freq blocks (sub-bound rows, ~ms), and
-          //    truly-large ones go DISTRIBUTED: a per-column two-phase
-          //    prefix sum over the (c, v, f) table brackets the
-          //    ≤ 2·|probs| rows covering the needed order statistics;
-          //    interpolation is driver-side (the same arithmetic as
-          //    Stats.exactQuantiles — Spark Percentile / DuckDB
-          //    quantile_cont parity). No buffer ever holds a whole
+          //    truly-large ones go DISTRIBUTED: Packing.weightedQuantiles
+          //    brackets the ≤ 2·|probs| rows covering the needed order
+          //    statistics of the (c, v, f) table and interpolates them
+          //    driver-side (Spark Percentile / DuckDB quantile_cont
+          //    parity). No buffer ever holds a whole
           //    column's distinct set, at ANY cardinality — this path
           //    needs no sketch fallback.
           // Rejected alternatives, each measured at sf0.1: a dedicated
@@ -282,17 +281,9 @@ object Describe {
                 Seq((sum(col("f") * abs(x - meanExpr)) /
                   sum(when(meanExpr.isNotNull, col("f")))).as("mad"))
               }
-            // finite-only bounds over the CLAMPED proxy (same as
-            // Stats.exactQuantiles / Packing.deterministicSlice): NaN/±Inf
-            // go to edge slices by rule, clamping is monotone (only slice
-            // balance shifts) and keeps mxv-mnv from overflowing to
-            // Infinity when the finite range spans more than ~1.8e308
-            // (which would make the bucket division produce NaN and
-            // floor(NaN).cast throw under ANSI)
-            val half = Double.MaxValue / 2
-            val finiteX = when(x.isNull || isnan(x) || x === Double.PositiveInfinity ||
-              x === Double.NegativeInfinity, lit(null))
-              .otherwise(greatest(least(x, lit(half)), lit(-half)))
+            // finite-only bounds over the clamped proxy: the root interval
+            // of each column's bracket chain (NaN/±Inf resolve by rule)
+            val finiteX = Packing.finiteProxy(x)
             val boundsAgg =
               if (ambigQ.isEmpty) Nil
               else Seq(sum("f").as("nrows"), min(finiteX).as("mnv"), max(finiteX).as("mxv"))
@@ -328,49 +319,19 @@ object Describe {
             }
             val qCols = largeQ.filter(n => nByCol.getOrElse(n, 0L) > 0)
             if (qCols.nonEmpty) {
-              // aggregation-only bucket narrowing (r18) — the same
-              // helper as Stats.quantilesFromFrequencies: one narrow
-              // hash aggregation per round plus one small collect
-              // replace the d-row sort/window/broadcast-join prefix
-              // pass. The group key stays the dense int index (r17);
-              // vBounds (the clamped finite proxy range job A already
-              // computed) seeds each column's root interval. One chain
-              // serves every family: the helper buckets and returns the
-              // double proxy of any value, and a long never lands in the
-              // NaN/±Inf edge classes a double view adds.
+              // one narrowing chain for every family: the group key is
+              // the dense int index (r17), vBounds seeds each column's
+              // root interval, and a long never lands in the NaN/±Inf
+              // edge classes a double view adds
               val code = qCols.zipWithIndex.toMap
-              val neededByCode = qCols.map { n =>
-                val cnt = nByCol(n)
-                val hs = QuantilePs.map(p => p * (cnt - 1))
-                code(n) -> hs.flatMap(h =>
-                  Seq(math.floor(h).toLong, math.min(math.ceil(h).toLong, cnt - 1))).distinct
-              }.toMap
-              val boundsByCode = qCols.flatMap(n => vBounds.get(n).map(code(n) -> _)).toMap
               val ci = coalesce(qCols.map(n => when(col("c") === lit(n), lit(code(n)))): _*)
               val narrowed = freq.filter(col("c").isin(qCols: _*))
                 .select(ci.as("_ci"), x.as("v"), col("f"))
-              val brackets = graft.operators.Packing.bracketRowsByAgg(
-                narrowed, "_ci", "v", "f", neededByCode, boundsByCode)
-              qCols.foreach { n =>
-                val rows = brackets.getOrElse(code(n), Array.empty)
-                def valueAt(pos: Long): Double = rows
-                  .find(r => r._2 <= pos && r._2 + r._3 > pos)
-                  .getOrElse(throw new IllegalStateException(
-                    s"describe('$n'): no value covers position $pos"))
-                  ._1
-                val cnt = nByCol(n)
-                qByCol(n) = QuantilePs.map { p =>
-                  val h = p * (cnt - 1)
-                  val lower = math.floor(h).toLong
-                  val higher = math.min(math.ceil(h).toLong, cnt - 1)
-                  // Spark Percentile's exact two-sided form — bit-identical
-                  // to the buffered route for finite values, and the right
-                  // answer (not NaN) when an endpoint is ±Infinity
-                  if (higher == lower) (valueAt(lower): Any)
-                  else ((higher - h) * valueAt(lower) +
-                    (h - lower) * valueAt(higher): Any)
-                }
-              }
+              val qs = Packing.weightedQuantiles(narrowed, "_ci", "v", "f",
+                QuantilePs, qCols.map(n => code(n) -> nByCol(n)).toMap,
+                qCols.flatMap(n => vBounds.get(n).map(code(n) -> _)).toMap,
+                context = g => s"describe('${qCols(g)}'): ")
+              qCols.foreach(n => qByCol(n) = qs(code(n)))
             }
             members.map(m => m -> // absent = all-null column
               FreqStat(dByCol.getOrElse(m, 0L), qByCol.get(m), madByCol.get(m)))

@@ -121,8 +121,7 @@ object Drift {
       .barrier()
     // BOTH inclusive CDF counts in one two-phase pass (one slice-bounds
     // action, one window, one offsets agg) — and no re-join of the two
-    // cumulative frames on _v afterwards (r17; previously two
-    // packContiguous passes + a 600k-row sort-merge self-join)
+    // cumulative frames on _v afterwards
     val both = Packing.prefixSums(freq, Nil, "_v",
         Seq("_nb", "_nc"), Seq("_cb0", "_cc0"))
       .select(col("_v"),
@@ -158,10 +157,7 @@ object Drift {
       .agg(sum(when(isBase, 1L).otherwise(0L)).as("_nb"),
         sum(when(isBase, 0L).otherwise(1L)).as("_nc"))
       .barrier()
-    // both per-group CDF counts in ONE two-phase pass (r17; previously
-    // two CHAINED groupedPrefixSum calls — the second one's slice-bounds
-    // action materialized the entire first prefix-sum lineage just to
-    // read min/max of _v, and both its branches recomputed that chain)
+    // both per-group CDF counts in ONE two-phase pass
     val both = Packing.prefixSums(freq, Seq("_g"), "_v",
         Seq("_nb", "_nc"), Seq("_cb0", "_cc0"))
       .select(col("_g"), col("_v"),

@@ -243,7 +243,7 @@ object Fuzzy {
     * and codes are where it earns its keep).
     *
     * Spark shape: the global sort rank comes from
-    * [[Packing.packContiguous]]'s two-phase prefix sum over the
+    * [[Packing.prefixSums]]' two-phase plan over the
     * DISTINCT strings (deterministic slices, per-slice windows, one
     * |slices|-row global window — never a single-task sort of the
     * table). Each string then meets its neighbors through a plain
@@ -287,8 +287,8 @@ object Fuzzy {
     val strs = strings
       .select(col(strCol).as("s")).filter(col("s").isNotNull).distinct()
       .withColumn("_cnt", lit(1L))
-    val ranked = Packing.packContiguous(strs, "s", "_cnt", budget = Int.MaxValue)
-      .select(col("s"), col("start_offset").as("rk"))
+    val ranked = Packing.prefixSums(strs, Nil, "s", Seq("_cnt"), Seq("rk"))
+      .select(col("s"), col("rk"))
       .barrier() // feeds both join sides — one rank computation
     val anchored = ranked.select(col("s").as("sb"),
         explode(sequence(col("rk") - (window - 1), col("rk") - 1)).as("rk"),

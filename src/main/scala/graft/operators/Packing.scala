@@ -133,7 +133,7 @@ object Packing {
   }
 
   // ---------------------------------------------------------------------
-  // Deterministic slicing: the foundation both prefix sums stand on.
+  // Deterministic slicing: the foundation the prefix-sum plan stands on.
   // ---------------------------------------------------------------------
 
   private val CpBase = 2097152.0          // 2^21 > max code point 0x10FFFF
@@ -224,15 +224,8 @@ object Packing {
           s"prefix-sum order column '$orderCol' must be string, numeric, date or timestamp, got $dt"))
         val negInf = lit(Double.NegativeInfinity)
         val posInf = lit(Double.PositiveInfinity)
-        // clamp the BUCKETING proxy to half the double range: clamping is
-        // monotone (slice balance only), and it keeps max-min from
-        // overflowing to Infinity (span Inf ⇒ NaN ratios ⇒ an ANSI cast
-        // failure, or silent mis-slicing with ANSI off)
-        val half = Double.MaxValue / 2
-        val pb = greatest(least(p, lit(half)), lit(-half))
-        val finite = when(p.isNull || isnan(p) || p === negInf || p === posInf, lit(null))
-          .otherwise(pb)
-        val b = df.agg(min(finite), max(finite)).head()
+        val pb = clampedProxy(p)
+        val b = df.agg(min(finiteProxy(p)), max(finiteProxy(p))).head()
         val bucket =
           if (b.isNullAt(0) || !(b.getDouble(0) < b.getDouble(1))) lit(0)
           else {
@@ -246,6 +239,24 @@ object Packing {
     }
   }
 
+  /** Half the double range: the clamp of every bucketing proxy. */
+  private val HalfRange = Double.MaxValue / 2
+
+  /** The BUCKETING proxy of a double value, clamped to ±[[HalfRange]].
+    * Clamping is monotone (it only shifts bucket balance), and it keeps
+    * max − min from overflowing to Infinity (span Inf ⇒ NaN ratios ⇒ an
+    * ANSI cast failure, or silent mis-bucketing with ANSI off). */
+  private def clampedProxy(v: Column): Column =
+    greatest(least(v, lit(HalfRange)), lit(-HalfRange))
+
+  /** [[clampedProxy]] of finite values only; null for null, NaN and ±Inf,
+    * which bucketing callers route to edge classes by rule. Its min/max
+    * are the finite bounds that seed [[deterministicSlice]] and
+    * [[bracketRowsByAgg]]. */
+  private[operators] def finiteProxy(v: Column): Column =
+    when(v.isNull || isnan(v) || v === Double.NegativeInfinity ||
+      v === Double.PositiveInfinity, lit(null)).otherwise(clampedProxy(v))
+
   /** Monotone double proxy of an orderable non-string key, or None for
     * unsupported types. Long→double rounding is monotone (round-to-
     * nearest preserves non-strict order), and NTZ→timestamp conversion
@@ -258,18 +269,18 @@ object Packing {
     case _ => None
   }
 
-  /** PER-GROUP exclusive prefix sum of `valueCol` in `orderCol` order —
-    * [[packContiguous]]'s two-phase shape generalized to grouped running
-    * sums (the building block for per-source token budgeting, grouped
-    * packing, per-domain cumulative caps). A plain
+  /** Exclusive prefix sums of `valueCols` in `orderCol` order, per group
+    * of `groupCols` (empty = global running sums) — the ONE two-phase
+    * plan behind packing, ranks, CDFs, mixers and shuffles. A plain
     * `Window.partitionBy(group).orderBy(order)` puts each WHOLE group in
     * one task — groups like "source" or "language" are low-cardinality
-    * and huge, the same hot-key shape GroupTopK exists to avoid. Here:
+    * and huge, the same hot-key shape GroupTopK exists to avoid, and a
+    * global running sum is one task outright. Here:
     *
     *   1. every row gets a deterministic slice id (monotone in
     *      `orderCol` — see [[deterministicSlice]]); the local running
-    *      sum windows over (group, slice) — parallel;
-    *   2. per-(group, slice) totals (groups × slices rows, tiny) are
+    *      sums window over (groups, slice) — parallel;
+    *   2. per-(groups, slice) totals (groups × slices rows, tiny) are
     *      cumulated per group in slice order and broadcast back as
     *      bases.
     *
@@ -277,70 +288,25 @@ object Packing {
     * differ between them, whatever gets recomputed where, so there is no
     * `persist()` and no correctness dependence on one materialization.
     *
-    * `orderCol` must be unique within its group (it is the total order
-    * that makes the sum deterministic). Adds `cumBeforeCol`. */
-  def groupedPrefixSum(df: DataFrame, groupCol: String, orderCol: String,
-      valueCol: String, cumBeforeCol: String = "cum_before"): DataFrame = {
-    val nSlices = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    groupedPrefixSumSliced(df, groupCol, orderCol, valueCol,
-      deterministicSlice(df, orderCol, nSlices), cumBeforeCol)
-  }
-
-  /** [[groupedPrefixSum]] with a CALLER-SUPPLIED slice column, for
-    * callers that can build a better-balanced (or cheaper) deterministic
-    * monotone bucketing than [[deterministicSlice]] — e.g. Describe's
-    * per-column quantile chain, which already holds exact per-group
-    * bounds and bucket-normalizes each group to its own range. The
-    * contract the slice column must honor is exactly
-    * [[deterministicSlice]]'s: a PURE function of the row (literals
-    * only, no sampling, no partition ids), monotone non-strict in
-    * `orderCol` within every group. */
-  private[operators] def groupedPrefixSumSliced(df: DataFrame,
-      groupCol: String, orderCol: String, valueCol: String, slice: Column,
-      cumBeforeCol: String = "cum_before"): DataFrame = {
-    // The input lineage feeds three consumers (bounds aggregation,
-    // window branch, offsets branch). Correctness never depends on
-    // materialization — slice ids are pure row functions — so whether
-    // to persist is the CALLER's economics: persist upstream when the
-    // lineage is expensive (measured here: a persist costs more than it
-    // saves for plain scan+hash lineages).
-    val sliced = df.withColumn("_slice", slice)
-    val local = Window.partitionBy(groupCol, "_slice").orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withLocal = sliced.withColumn("_local_cum", sum(col(valueCol)).over(local))
-    // slice ids are numeric and monotone in the order key, so cumulating
-    // per-slice totals IN SLICE ORDER yields each slice's base offset
-    val offsets = sliced.groupBy(groupCol, "_slice")
-      .agg(sum(col(valueCol)).as("_ptotal"))
-    val offW = Window.partitionBy(groupCol).orderBy("_slice")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = offsets
-      .withColumn("_base", sum(col("_ptotal")).over(offW) - col("_ptotal"))
-      .select(col(groupCol), col("_slice"), col("_base"))
-    withLocal.join(broadcast(bases), Seq(groupCol, "_slice"))
-      .withColumn(cumBeforeCol, col("_base") + col("_local_cum") - col(valueCol))
-      .drop("_slice", "_local_cum", "_base")
-  }
-
-  /** SEVERAL exclusive prefix sums in ONE two-phase pass — the
-    * [[groupedPrefixSumSliced]] plan with every value column riding the
-    * same slice window / offsets aggregate / broadcast join.
-    * `groupCols` may be empty (global running sums). Callers that need
-    * k running sums over the SAME order (Drift's two-sided KS CDFs) pay
-    * one slice-bounds action, one window exchange and one offsets
-    * aggregate instead of k of each — and, more importantly, no join to
-    * re-align the k results afterwards (r17: ksDrift previously ran two
-    * [[packContiguous]] passes and re-joined 600k-row outputs on the
-    * value key — a sort-merge exchange pair that existed only to undo
-    * the split this method avoids). Semantics per column are exactly
-    * [[groupedPrefixSum]]'s: integer/long sums, deterministic for a
-    * unique `orderCol` within each group. Adds `cumBeforeCols` (same
-    * arity as `valueCols`). */
-  private[operators] def prefixSums(df: DataFrame, groupCols: Seq[String],
+    * Every value column rides the same slice window, offsets aggregate
+    * and broadcast join: callers that need k running sums over the SAME
+    * order (Drift's two-sided KS CDFs, the lorenz count and mass) pay one
+    * slice-bounds action, one window exchange and one offsets aggregate
+    * instead of k of each, and no join re-aligns the k results. Sums are
+    * integer/long (or double, associated in slice order), deterministic
+    * for an `orderCol` unique within each group. Adds `cumBeforeCols`
+    * (same arity as `valueCols`). */
+  private[graft] def prefixSums(df: DataFrame, groupCols: Seq[String],
       orderCol: String, valueCols: Seq[String],
       cumBeforeCols: Seq[String]): DataFrame = {
     require(valueCols.nonEmpty && valueCols.size == cumBeforeCols.size)
     val nSlices = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // The input lineage feeds three consumers (slice bounds, window
+    // branch, offsets branch). Correctness never depends on
+    // materialization — slice ids are pure row functions — so whether
+    // to persist is the CALLER's economics: persist upstream when the
+    // lineage is expensive (measured: a persist costs more than it
+    // saves for plain scan+hash lineages).
     val sliced = df.withColumn("_slice",
       deterministicSlice(df, orderCol, nSlices))
     val gCols = groupCols.map(col)
@@ -355,8 +321,14 @@ object Packing {
       sum(col(v)).as(s"_pt_$i") }
     val offsets = sliced.groupBy(gCols :+ col("_slice"): _*)
       .agg(ptAggs.head, ptAggs.tail: _*)
-    // AUDITED GLOBAL WINDOW (empty groupCols): ≤ nSlices+2 rows by
-    // construction — see packContiguous
+    // slice ids are numeric and monotone in the order key, so cumulating
+    // per-slice totals IN SLICE ORDER yields each slice's base offset.
+    // AUDITED GLOBAL WINDOW (empty groupCols): the frame is ≤ nSlices+2
+    // rows by construction (one per slice), so WindowExec's "No
+    // Partition Defined" WARN — aimed at corpus-sized frames — is benign
+    // here. A constant partition key does not silence it (foldable keys
+    // are optimized out of the spec); Bench/Verify drop that one logger
+    // to ERROR instead so driver logs stay readable.
     val offW = Window.partitionBy(gCols: _*).orderBy("_slice")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val bases = valueCols.indices.foldLeft(offsets) { (d, i) =>
@@ -378,9 +350,8 @@ object Packing {
     * (group, value, count) frequency table, by ITERATED AGGREGATION-ONLY
     * bucket narrowing — zero sorts, zero windows, zero joins (r18).
     *
-    * The prefix-sum form this replaces ([[groupedPrefixSumSliced]] +
-    * bracket filter + collect) paid a sort-for-window exchange over the
-    * whole d-row table plus a broadcast join, only to read back
+    * A [[prefixSums]] pass over the table would pay a sort-for-window
+    * exchange over all d rows plus a broadcast join, only to read back
     * ≤ 2·|probs| covering rows. Narrowing instead pays one NARROW hash
     * aggregation per round over a geometrically shrinking candidate set:
     * each round buckets rows with an O(1) floor formula over
@@ -402,10 +373,10 @@ object Packing {
     * action and the final collect — `freq` must be materialized or a
     * pure projection of a materialized frame), and bucket ranges
     * partition the proxy axis monotonically, so the returned
-    * (value, cumBefore, count) triples are exactly the prefix-sum
-    * form's bracket rows. Values are returned as the DOUBLE cast of the
-    * native value — what both consumers (Stats / Describe quantile
-    * interpolation) already collected. Distinct values whose double
+    * (value, cumBefore, count) triples are exactly the rows an exclusive
+    * prefix sum of counts in value order brackets. Values are returned
+    * as the DOUBLE cast of the native value — what [[weightedQuantiles]]
+    * interpolates. Distinct values whose double
     * casts collide (longs beyond 2⁵³, or clamped magnitudes beyond
     * ±MaxValue/2) sort arbitrarily among themselves, which cannot
     * change any returned triple's value or any later row's cumBefore.
@@ -418,7 +389,7 @@ object Packing {
     * no null values; `valueCol` must be LongType or DoubleType (the two
     * families the quantile chains route here). `neededByGroup` holds
     * 0-based global positions per int group id; `boundsByGroup` the
-    * finite clamped-proxy (min, max) where known (groups with no finite
+    * min/max of [[finiteProxy]] where known (groups with no finite
     * values may omit theirs). Groups whose `distinctByGroup` entry is
     * known and ≤ `collectCap` skip narrowing: one direct collect of
     * their whole frequency set. Returns per group the covering rows
@@ -435,8 +406,7 @@ object Packing {
       s"bracket value column '$valueCol' must be long or double, got $dt")
     require(nBuckets >= 2 && collectCap >= 1)
     val vd = col(valueCol).cast(DoubleType)
-    val half = Double.MaxValue / 2
-    val pb = greatest(least(vd, lit(half)), lit(-half))
+    val pb = clampedProxy(vd)
     val floaty = dt == DoubleType
     // edge classes on the RAW value (clamping would fold ±Inf into the
     // finite range); a long column has none
@@ -479,7 +449,7 @@ object Packing {
     }
 
     var active: Map[Int, Seq[Iv]] = groups.map { g =>
-      val (lo, hi) = boundsByGroup.getOrElse(g, (-half, half))
+      val (lo, hi) = boundsByGroup.getOrElse(g, (-HalfRange, HalfRange))
       g -> Seq(Iv(lo, hi, 0L, neededByGroup(g).sorted))
     }.toMap
     var terminal: Map[Int, Seq[Iv]] = groups.map(_ -> Seq.empty[Iv]).toMap
@@ -617,46 +587,65 @@ object Packing {
     resolved.map { case (g, buf) => g -> buf.toArray }.toMap
   }
 
+  /** Exact type-7 quantiles (pandas / quantile_cont / Spark Percentile
+    * semantics) of each group of a distinct (group, value, count)
+    * frequency table with the [[bracketRowsByAgg]] contract: position
+    * h = p·(n−1) falls between order statistics ⌊h⌋ and ⌈h⌉, whose
+    * covering rows one narrowing chain brackets, and the driver
+    * interpolates them in Spark Percentile's exact two-sided form
+    * `(⌈h⌉ − h)·x⌊h⌋ + (h − ⌊h⌋)·x⌈h⌉` — bit-identical to the buffered
+    * aggregate for finite values, and the right answer (not NaN) when an
+    * endpoint is ±Infinity or h is integral, where `lo + frac·(hi − lo)`
+    * gives 0·(Inf − Inf) = NaN. `rowsByGroup` holds each group's n > 0;
+    * `boundsByGroup` and `distinctByGroup` are passed through to
+    * [[bracketRowsByAgg]]. `context` prefixes the error raised when a
+    * position finds no covering row. Returns per group one value per
+    * prob. */
+  private[operators] def weightedQuantiles(freq: DataFrame, groupCol: String,
+      valueCol: String, cntCol: String, probs: Seq[Double],
+      rowsByGroup: Map[Int, Long], boundsByGroup: Map[Int, (Double, Double)],
+      distinctByGroup: Map[Int, Long] = Map.empty,
+      context: Int => String = _ => ""): Map[Int, Seq[Double]] = {
+    // (h, ⌊h⌋, ⌈h⌉) of prob p over n rows
+    def position(n: Long, p: Double): (Double, Long, Long) = {
+      val h = p * (n - 1)
+      (h, math.floor(h).toLong, math.min(math.ceil(h).toLong, n - 1))
+    }
+    val needed = rowsByGroup.map { case (g, n) =>
+      g -> probs.flatMap { p =>
+        val (_, lower, higher) = position(n, p)
+        Seq(lower, higher)
+      }.distinct
+    }
+    val brackets = bracketRowsByAgg(freq, groupCol, valueCol, cntCol,
+      needed, boundsByGroup, distinctByGroup = distinctByGroup)
+    rowsByGroup.map { case (g, n) =>
+      val rows = brackets.getOrElse(g, Array.empty)
+      def valueAt(pos: Long): Double = rows
+        .find(r => r._2 <= pos && r._2 + r._3 > pos)
+        .getOrElse(throw new IllegalStateException(
+          s"${context(g)}no value covers position $pos"))
+        ._1
+      g -> probs.map { p =>
+        val (h, lower, higher) = position(n, p)
+        if (higher == lower) valueAt(lower)
+        else (higher - h) * valueAt(lower) + (h - lower) * valueAt(higher)
+      }
+    }
+  }
+
   /** Pack by a precomputed token-count column. Returns the input columns
-    * plus start_offset (global tokens before this doc), seq_id
-    * (floor(start_offset / budget)) and crosses_boundary (true when the
-    * document's tokens span two or more windows). */
+    * plus start_offset (global tokens before this doc, from
+    * [[prefixSums]]), seq_id (floor(start_offset / budget)) and
+    * crosses_boundary (true when the document's tokens span two or more
+    * windows). */
   def packContiguous(df: DataFrame, idCol: String, tokenCol: String,
       budget: Int): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val nSlices = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // input consumed by three branches — persist upstream only when the
-    // lineage is expensive (see groupedPrefixSum); results are identical
-    // either way (slice ids are pure row functions)
-    val sliced = df.withColumn("_slice", deterministicSlice(df, idCol, nSlices))
-    // phase 1: per-slice running sum — parallel across slices
-    val local = Window.partitionBy("_slice").orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withLocal = sliced.withColumn("_local_cum",
-      sum(col(tokenCol)).over(local))
-    // phase 2: one row per slice; cumulate on the tiny side in slice
-    // order and broadcast the base offsets back. Slice assignment is a
-    // pure row function, so this branch agrees with phase 1 by
-    // construction — no persist(), no cross-instantiation hazard.
-    val offsets = sliced.groupBy("_slice")
-      .agg(sum(col(tokenCol)).as("_ptotal"))
-    // AUDITED GLOBAL WINDOW: the frame is ≤ nSlices+2 rows by
-    // construction (one per slice), so WindowExec's "No Partition
-    // Defined" WARN — aimed at corpus-sized frames — is benign here.
-    // A constant partition key does not silence it (foldable keys are
-    // optimized out of the spec); Bench/Verify drop that one logger to
-    // ERROR instead so driver logs stay readable.
-    val offW = Window.orderBy("_slice")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = offsets
-      .withColumn("_base", sum(col("_ptotal")).over(offW) - col("_ptotal"))
-      .select("_slice", "_base")
-    val packed = withLocal.join(broadcast(bases), Seq("_slice"))
-      .withColumn("start_offset", col("_base") + col("_local_cum") - col(tokenCol))
+    prefixSums(df, Nil, idCol, Seq(tokenCol), Seq("start_offset"))
       .withColumn("seq_id", floor(col("start_offset") / budget.toLong))
       .withColumn("crosses_boundary",
         col(tokenCol) > 0 &&
           floor((col("start_offset") + col(tokenCol) - 1) / budget.toLong) > col("seq_id"))
-    packed.drop("_slice", "_local_cum", "_base")
   }
 }

@@ -26,6 +26,11 @@ object Sampling {
   def hashBucket(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 4), 16, 10).cast("int")
 
+  /** md5(seed # key) — the per-row priority every md5-ordered operator
+    * here ranks by; changing the seed draws a fresh order. */
+  private def seededHash(keyCol: String, seed: Long): Column =
+    md5(concat_ws("#", lit(seed), col(keyCol).cast("string")))
+
   /** Keep ~`fraction` of rows, deterministically by key. */
   def deterministicSample(df: DataFrame, keyCol: String, fraction: Double): DataFrame = {
     require(fraction >= 0 && fraction <= 1)
@@ -79,19 +84,17 @@ object Sampling {
     * md5(seed # key). The permutation depends only on (seed, key), so it
     * is identical across engines, runs and partitionings; changing the
     * seed draws a fresh permutation. The rank is a SCALABLE global
-    * row_number: ranking rows by hash is exactly packing unit-weight
-    * tokens by hash order, so this reuses [[Packing.packContiguous]]'s
-    * two-phase prefix sum (deterministic hash slices, per-slice
-    * window, broadcast base offsets) — never a single-task global
-    * window. `keyCol` must be unique per row (duplicate keys collide to
+    * row_number: the exclusive prefix sum of unit weights in hash
+    * order, via [[Packing.prefixSums]] (deterministic hash slices,
+    * per-slice window, broadcast base offsets) — never a single-task
+    * global window. `keyCol` must be unique per row (duplicate keys collide to
     * the same hash and their relative order is undefined). */
   def shuffleOrder(df: DataFrame, keyCol: String, seed: Long): DataFrame = {
     val hashed = df
-      .withColumn("__h", md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))))
+      .withColumn("__h", seededHash(keyCol, seed))
       .withColumn("__one", lit(1L))
-    Packing.packContiguous(hashed, "__h", "__one", budget = Int.MaxValue)
-      .withColumnRenamed("start_offset", "shuffle_pos")
-      .drop("__h", "__one", "seq_id", "crosses_boundary")
+    Packing.prefixSums(hashed, Nil, "__h", Seq("__one"), Seq("shuffle_pos"))
+      .drop("__h", "__one")
   }
 
   /** Per-group quota cap — the domain-balancing step of a pretraining
@@ -110,8 +113,7 @@ object Sampling {
   def capPerGroup(df: DataFrame, keyCol: String, groupCol: String, cap: Int,
       seed: Long = 0L): DataFrame = {
     require(cap > 0, s"cap must be positive, got $cap")
-    val withPri = df.withColumn("__pri",
-      md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))))
+    val withPri = df.withColumn("__pri", seededHash(keyCol, seed))
     GroupTopK.topK(withPri, Seq(groupCol),
       Seq(col("__pri").asc, col(keyCol).asc), cap, rankCol = "cap_rank")
       .drop("__pri")
@@ -146,20 +148,26 @@ object Sampling {
     * across engines, runs and partitionings, and growing the corpus only
     * exchanges kept docs when new rows out-rank old ones.
     *
-    * The grouped running sum goes through
-    * [[Packing.groupedPrefixSum]]'s two-phase plan — low-cardinality
-    * groups never become single-task windows. Adds `tokens_before`. */
+    * The grouped running sum is [[tokensBefore]]. Adds `tokens_before`. */
   def mixByTokenBudget(df: DataFrame, keyCol: String, groupCol: String,
       tokenCol: String, budgetPerGroup: Long, seed: Long = 0L): DataFrame = {
     require(budgetPerGroup > 0, s"budget must be positive, got $budgetPerGroup")
-    // priority + key suffix = a total order within the group even under
-    // (astronomically unlikely) digest collisions
-    val ordered = df.withColumn("__ord",
-      concat(md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))),
-        lit("#"), col(keyCol).cast("string")))
-    Packing.groupedPrefixSum(ordered, groupCol, "__ord", tokenCol, "tokens_before")
+    tokensBefore(df, keyCol, groupCol, tokenCol, seed)
       .filter(col("tokens_before") + col(tokenCol) <= budgetPerGroup)
-      .drop("__ord")
+  }
+
+  /** Each row's `tokens_before`: its group's exclusive token prefix in
+    * md5-priority order, the per-row step every mixer shares. Priority +
+    * key suffix is a total order within the group even under
+    * (astronomically unlikely) digest collisions; the running sum is
+    * [[Packing.prefixSums]]' two-phase plan, so low-cardinality groups
+    * never become single-task windows. */
+  private def tokensBefore(df: DataFrame, keyCol: String, groupCol: String,
+      tokenCol: String, seed: Long): DataFrame = {
+    val ordered = df.withColumn("__ord",
+      concat(seededHash(keyCol, seed), lit("#"), col(keyCol).cast("string")))
+    Packing.prefixSums(ordered, Seq(groupCol), "__ord", Seq(tokenCol),
+      Seq("tokens_before")).drop("__ord")
   }
 
   /** Temperature-weighted corpus mixing: per-group token budgets are
@@ -171,9 +179,8 @@ object Sampling {
     *
     * Scale shape: group totals are one hash aggregation (|groups| rows),
     * the share normalizer one more row on top, and both join back as
-    * broadcasts; the running sum is the same two-phase
-    * [[Packing.groupedPrefixSum]] plan — no single-task per-group
-    * windows, no driver-side collect.
+    * broadcasts; the running sum is the same [[tokensBefore]] — no
+    * single-task per-group windows, no driver-side collect.
     *
     * Determinism bridge: each group's share is rounded to 1e-6 BEFORE
     * the budget multiply (the fitted-parameter rule), so ULP drift in
@@ -191,46 +198,11 @@ object Sampling {
       .select(col(groupCol),
         floor((floor(pow(col("__gt"), lit(alpha)) / col("__z") * 1e6 + 0.5) / 1e6) *
           lit(totalBudget.toDouble)).cast("long").as("group_budget"))
-    val ordered = df.withColumn("__ord",
-      concat(md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))),
-        lit("#"), col(keyCol).cast("string")))
-    Packing.groupedPrefixSum(ordered, groupCol, "__ord", tokenCol, "tokens_before")
+    tokensBefore(df, keyCol, groupCol, tokenCol, seed)
       .join(broadcast(budgets), Seq(groupCol))
       .filter(col("tokens_before") + col(tokenCol) <= col("group_budget"))
-      .drop("__ord")
   }
 
-  /** UniMax corpus mixing (epoch-capped waterfilling, the published
-    * alternative to temperature sampling for multilingual budgets):
-    * allocate a global token budget as UNIFORMLY as possible across
-    * groups, subject to each group's repeat cap
-    * `cap_g = floor(maxEpochs * group tokens)` — small sources are
-    * capped at their epoch ceiling, the remaining budget waterfills
-    * evenly over the rest. Then each group keeps documents in
-    * md5-priority order within its allocation, exactly like
-    * [[mixByTokenBudget]].
-    *
-    * The waterfill has a closed form over the |groups|-row totals table:
-    * sort groups by cap ascending; group i (of n) is exhausted iff
-    * serving every remaining group at level cap_i still fits the
-    * leftover budget — `cap_i*(n-i+1) + cum_{i-1} <= B`, a prefix
-    * property under this order — and every non-exhausted group gets
-    * `(B - sum of exhausted caps) div (n - k)`. INTEGER arithmetic
-    * everywhere except ONE float bridge: the per-group cap is
-    * `floor(total_tokens * maxEpochs)` computed in doubles — for group
-    * token totals approaching 2^53 the product loses integer precision
-    * and the floored cap could diverge across engines (the oracle
-    * replays the same double product, so both sides agree here; callers
-    * at that magnitude should pre-scale or pass integral maxEpochs).
-    * The waterfill itself (cumulative caps, the level's integer
-    * division) is long arithmetic with no rounding to bridge.
-    *
-    * Scale shape: totals are one hash aggregation; the waterfill windows
-    * run over |groups| rows (bounded — sources/languages, not documents;
-    * the audited bounded-frame category) and the single-row reduction
-    * joins back as a broadcast; per-row work is the same two-phase
-    * [[Packing.groupedPrefixSum]] as every other mixer. Adds
-    * `tokens_before` and `group_budget`. */
   /** The waterfill allocation table alone — (groupCol, group_budget) —
     * for callers that materialize the allocation differently than a
     * one-pass prefix (see [[expandEpochs]]). Semantics and arithmetic
@@ -265,17 +237,44 @@ object Sampling {
           .as("group_budget"))
   }
 
+  /** UniMax corpus mixing (epoch-capped waterfilling, the published
+    * alternative to temperature sampling for multilingual budgets):
+    * allocate a global token budget as UNIFORMLY as possible across
+    * groups, subject to each group's repeat cap
+    * `cap_g = floor(maxEpochs * group tokens)` — small sources are
+    * capped at their epoch ceiling, the remaining budget waterfills
+    * evenly over the rest. Then each group keeps documents in
+    * md5-priority order within its allocation, exactly like
+    * [[mixByTokenBudget]].
+    *
+    * The waterfill has a closed form over the |groups|-row totals table:
+    * sort groups by cap ascending; group i (of n) is exhausted iff
+    * serving every remaining group at level cap_i still fits the
+    * leftover budget — `cap_i*(n-i+1) + cum_{i-1} <= B`, a prefix
+    * property under this order — and every non-exhausted group gets
+    * `(B - sum of exhausted caps) div (n - k)`. INTEGER arithmetic
+    * everywhere except ONE float bridge: the per-group cap is
+    * `floor(total_tokens * maxEpochs)` computed in doubles — for group
+    * token totals approaching 2^53 the product loses integer precision
+    * and the floored cap could diverge across engines (the oracle
+    * replays the same double product, so both sides agree here; callers
+    * at that magnitude should pre-scale or pass integral maxEpochs).
+    * The waterfill itself (cumulative caps, the level's integer
+    * division) is long arithmetic with no rounding to bridge.
+    *
+    * Scale shape: totals are one hash aggregation; the waterfill windows
+    * run over |groups| rows (bounded — sources/languages, not documents;
+    * the audited bounded-frame category) and the single-row reduction
+    * joins back as a broadcast; per-row work is the same
+    * [[tokensBefore]] as every other mixer. Adds `tokens_before` and
+    * `group_budget`. */
   def mixByUniMax(df: DataFrame, keyCol: String, groupCol: String,
       tokenCol: String, totalBudget: Long, maxEpochs: Double,
       seed: Long = 0L): DataFrame = {
     val budgets = uniMaxBudgets(df, groupCol, tokenCol, totalBudget, maxEpochs)
-    val ordered = df.withColumn("__ord",
-      concat(md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))),
-        lit("#"), col(keyCol).cast("string")))
-    Packing.groupedPrefixSum(ordered, groupCol, "__ord", tokenCol, "tokens_before")
+    tokensBefore(df, keyCol, groupCol, tokenCol, seed)
       .join(broadcast(budgets), Seq(groupCol))
       .filter(col("tokens_before") + col(tokenCol) <= col("group_budget"))
-      .drop("__ord")
   }
 
   /** Materialize a per-group token allocation into EPOCH-EXPANDED rows —
@@ -290,7 +289,7 @@ object Sampling {
     *
     * Scale shape: group totals one hash aggregation; the budget/total
     * tables are |groups| rows and broadcast; per-row work is the shared
-    * two-phase prefix sum plus a sequence-explode bounded by the epoch
+    * [[tokensBefore]] plus a sequence-explode bounded by the epoch
     * count (small by construction — a budget implies epochs ≈
     * budget/corpus, never data-dependent blowup). */
   def expandEpochs(df: DataFrame, keyCol: String, groupCol: String,
@@ -301,17 +300,14 @@ object Sampling {
       .select(col(groupCol),
         expr("group_budget div __gt").as("__full"),
         expr("group_budget % __gt").as("__rem"))
-    val ordered = df.withColumn("__ord",
-      concat(md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))),
-        lit("#"), col(keyCol).cast("string")))
-    Packing.groupedPrefixSum(ordered, groupCol, "__ord", tokenCol, "tokens_before")
+    tokensBefore(df, keyCol, groupCol, tokenCol, seed)
       .join(broadcast(parts), Seq(groupCol))
       .withColumn("epoch", explode(sequence(lit(0L), col("__full"))))
       // complete passes keep everything; the final partial pass keeps
       // the budget-remainder priority prefix (whole docs only)
       .filter(col("epoch") < col("__full") ||
         col("tokens_before") + col(tokenCol) <= col("__rem"))
-      .drop("__ord", "__full", "__rem")
+      .drop("__full", "__rem")
   }
 
   /** Systematic probability-proportional-to-size (PPS) sampling: a
@@ -332,7 +328,7 @@ object Sampling {
     * Everything is INTEGER arithmetic on longs (cum·k ≤ W·k must stay
     * below 2^63 — at W = 10^14 tokens that allows k up to ~9·10^4, and
     * larger k has no use at that scale) and the cumulative weights ride
-    * [[Packing.packContiguous]]'s two-phase prefix sum — never a
+    * [[Packing.prefixSums]]' two-phase plan — never a
     * single-task global window. Weights clamp at 0; zero-weight rows
     * are never drawn. Adds `n_picks` (≥ 1, the multiplicity) and keeps
     * only selected rows. */
@@ -340,11 +336,9 @@ object Sampling {
       k: Int, seed: Long = 0L): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val hashed = df
-      .withColumn("__h", md5(concat_ws("#", lit(seed), col(keyCol).cast("string"))))
+      .withColumn("__h", seededHash(keyCol, seed))
       .withColumn("__wt", greatest(col(weightCol).cast("long"), lit(0L)))
-    val cum = Packing.packContiguous(hashed, "__h", "__wt", budget = Int.MaxValue)
-      .withColumnRenamed("start_offset", "__cum")
-      .drop("seq_id", "crosses_boundary")
+    val cum = Packing.prefixSums(hashed, Nil, "__h", Seq("__wt"), Seq("__cum"))
     val total = df
       .agg(coalesce(sum(greatest(col(weightCol).cast("long"), lit(0L))), lit(0L))
         .as("__tw"))

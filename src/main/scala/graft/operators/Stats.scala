@@ -39,7 +39,7 @@ object Stats {
     * global single-task window: avg_rank(v) = (# values < v) +
     * (ties(v) + 1) / 2, so group by value (one hash agg), take the
     * EXCLUSIVE prefix sum of group counts in value order via
-    * [[Packing.packContiguous]]'s two-phase plan (deterministic value
+    * [[Packing.prefixSums]]' two-phase plan (deterministic value
     * slices, per-slice window, broadcast base offsets — the only
     * global window runs over one row per slice), and map each value
     * to its rank. Exact, not approximate: identical numbers to a
@@ -48,23 +48,10 @@ object Stats {
   private def avgRanks(df: DataFrame, c: String): DataFrame = {
     val vals = df.filter(col(c).isNotNull)
       .groupBy(col(c).as("_v")).agg(count(lit(1)).as("_cnt"))
-    Packing.packContiguous(vals, "_v", "_cnt", budget = Int.MaxValue)
-      .select(col("_v"), (col("start_offset") + (col("_cnt") + 1) / 2.0).as("_r"))
+    Packing.prefixSums(vals, Nil, "_v", Seq("_cnt"), Seq("_before"))
+      .select(col("_v"), (col("_before") + (col("_cnt") + 1) / 2.0).as("_r"))
   }
 
-  /** Spearman rank correlation of two columns: Pearson on average ranks.
-    * Ranks come from [[avgRanks]]'s distributed prefix-sum (shuffles
-    * carry one row per DISTINCT value; no full-table single-task sort),
-    * joined back on the value; rows where either side is null are
-    * excluded, matching `corr`'s pairwise-complete semantics.
-    *
-    * Tradeoff, measured: at sf0.1 this is ~1.4 s vs ~0.15 s for a
-    * global-sort `Window.orderBy(value)` rank — more stages, tiny data.
-    * But the window form moves the WHOLE table into one task (Spark
-    * warns exactly that), a guaranteed failure at 100 TB, while this
-    * plan's shuffles carry per-distinct-value rows and its only global
-    * window runs over one row per partition. Constant factors at toy
-    * scale lose to a plan that survives the scale-up. */
   /** Lorenz curve — the distributional companion of [[gini]]: at each
     * of `points` equal population quantiles (ascending by value), the
     * cumulative share of the total value held by that poorest
@@ -73,7 +60,7 @@ object Stats {
     *
     * Scale shape: the member values reduce to the DISTINCT-value
     * frame (one hash agg), whose per-value counts and value-sums ride
-    * [[Packing.groupedPrefixSum]]'s two-phase plan — the same
+    * ONE [[Packing.prefixSums]] pass — the same
     * machinery as the Spearman/KS statistics, so no single-task global
     * window ever sees a corpus-sized frame. Quantile boundary
     * positions are exact integers (ceil by integer division); within a
@@ -85,14 +72,9 @@ object Stats {
     val clean = df.filter(col(valueCol).isNotNull)
       .select(col(valueCol).cast("double").as("v"))
     // both running sums (population count and value mass) ride ONE
-    // two-phase prefix pass over the distinct-value frame — same
-    // [[Packing.prefixSums]] rewrite as the KS drift CDFs (r17): one
-    // slice-bounds action, one window, one offsets aggregate, and no
-    // value-keyed join to re-align two independently-computed passes.
-    // Per-column arithmetic (slice-local window order, per-slice agg,
-    // slice-order offsets cumsum) is identical to the chained
-    // groupedPrefixSum form, so the double sums associate in the same
-    // order — bit-identical brackets.
+    // two-phase prefix pass over the distinct-value frame, like the KS
+    // drift CDFs: one slice-bounds action, one window, one offsets
+    // aggregate, and no value-keyed join to re-align two passes
     val distinctV = clean.groupBy("v").agg(count(lit(1)).as("n_at"))
       .withColumn("rev_at", col("v") * col("n_at"))
       .withColumn("__g", lit(1))
@@ -127,6 +109,19 @@ object Stats {
     correlationMatrix(
       df.select(cols.map(c => col(c).isNull.cast("double").as(c)): _*), cols)
 
+  /** Spearman rank correlation of two columns: Pearson on average ranks.
+    * Ranks come from [[avgRanks]]'s distributed prefix-sum (shuffles
+    * carry one row per DISTINCT value; no full-table single-task sort),
+    * joined back on the value; rows where either side is null are
+    * excluded, matching `corr`'s pairwise-complete semantics.
+    *
+    * Tradeoff, measured: at sf0.1 this is ~1.4 s vs ~0.15 s for a
+    * global-sort `Window.orderBy(value)` rank — more stages, tiny data.
+    * But the window form moves the WHOLE table into one task (Spark
+    * warns exactly that), a guaranteed failure at 100 TB, while this
+    * plan's shuffles carry per-distinct-value rows and its only global
+    * window runs over one row per partition. Constant factors at toy
+    * scale lose to a plan that survives the scale-up. */
   def spearman(df: DataFrame, a: String, b: String): DataFrame = {
     val pairs = df.select(col(a), col(b))
       .filter(col(a).isNotNull && col(b).isNotNull)
@@ -225,16 +220,13 @@ object Stats {
     * on a 100 TB column). Here the heavy lifting is ordinary hash
     * aggregation:
     *
-    *   1. distinct (value, count) — one hash agg, persisted (the only
+    *   1. distinct (value, count) — one hash agg, materialized (the only
     *      full scan; the distinct table is orders of magnitude smaller);
-    *   2. ONE job reads n plus the finite value bounds, which become the
-    *      slice-bucketing literals for an exclusive prefix sum of counts
-    *      in value order ([[Packing.groupedPrefixSumSliced]]) — each
-    *      value row then covers the position interval [cum, cum+cnt);
-    *   3. the ≤ 2·|probs| rows bracketing the needed order statistics
-    *      (positions are literals once n is known) are filtered out and
-    *      collected; type-7 interpolation runs driver-side:
-    *      q(p) = x_⌊h⌋ + (h-⌊h⌋)·(x_⌈h⌉-x_⌊h⌋), h = p·(n-1).
+    *   2. ONE job reads n, the distinct count and the finite value
+    *      bounds;
+    *   3. [[Packing.weightedQuantiles]] brackets the ≤ 2·|probs| rows
+    *      covering the needed order statistics by aggregation-only
+    *      bucket narrowing and interpolates them driver-side.
     *
     * The interpolation arithmetic matches Spark's Percentile and
     * DuckDB's quantile_cont double-for-double (the equidepth oracle
@@ -263,56 +255,19 @@ object Stats {
     * table from [[valueFrequencies]]. */
   private def quantilesFromFrequencies(vals: DataFrame, probs: Seq[Double]): Seq[Double] = {
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
-      s"probs must be in [0, 1], got $probs");
-    {
-      // ONE job over the distinct table: total row count + finite value
-      // bounds (the slice-bucketing literals — NaN/±Inf go to edge
-      // slices by rule, matching Packing.deterministicSlice)
-      // bucketing proxy clamped to half the double range, exactly as
-      // Packing.deterministicSlice: clamping is monotone (slice balance
-      // only) and keeps mx-mn from overflowing to Infinity
-      val vd = col("_v")
-      val half = Double.MaxValue / 2
-      val pb = greatest(least(vd, lit(half)), lit(-half))
-      val finiteV = when(isnan(vd) || vd === Double.PositiveInfinity ||
-        vd === Double.NegativeInfinity, lit(null)).otherwise(pb)
-      val b = vals.agg(sum("_cnt").as("n"),
-        min(finiteV).as("mn"), max(finiteV).as("mx"),
-        count(lit(1)).as("d")).head()
-      val n = if (b.isNullAt(0)) 0L else b.getLong(0)
-      require(n > 0, "exactQuantiles: no non-null values")
-      val hs = probs.map(p => p * (n - 1))
-      val needed = hs.flatMap(h =>
-        Seq(math.floor(h).toLong, math.min(math.ceil(h).toLong, n - 1))).distinct
-      // aggregation-only bucket narrowing (r18): replaces the two-phase
-      // prefix-sum window over the whole distinct table
-      // ([[Packing.bracketRowsByAgg]] documents the shape and the
-      // bit-identity argument) — no sort, no window exchange, no
-      // broadcast join in the bracket pass
-      val bounds =
-        if (b.isNullAt(1)) Map.empty[Int, (Double, Double)]
-        else Map(0 -> (b.getDouble(1), b.getDouble(2)))
-      val rows = Packing.bracketRowsByAgg(
-        vals.withColumn("_gi", lit(0)), "_gi", "_v", "_cnt",
-        Map(0 -> needed), bounds,
-        distinctByGroup = Map(0 -> b.getLong(3)))
-        .getOrElse(0, Array.empty)
-      def valueAt(pos: Long): Double = rows
-        .find(r => r._2 <= pos && r._2 + r._3 > pos)
-        .getOrElse(throw new IllegalStateException(s"no value covers position $pos"))
-        ._1
-      hs.map { h =>
-        val lower = math.floor(h).toLong
-        val higher = math.min(math.ceil(h).toLong, n - 1)
-        // Spark Percentile's exact two-sided form (same as the Describe
-        // bracket chain): bit-identical to the buffered aggregate for
-        // finite values, and the right answer (not NaN) when an endpoint
-        // is ±Infinity or h is integral — `lo + frac*(hi-lo)` gives
-        // 0*(Inf-Inf)=NaN in both of those cases
-        if (higher == lower) valueAt(lower)
-        else (higher - h) * valueAt(lower) + (h - lower) * valueAt(higher)
-      }
-    }
+      s"probs must be in [0, 1], got $probs")
+    val finiteV = Packing.finiteProxy(col("_v"))
+    val b = vals.agg(sum("_cnt").as("n"),
+      min(finiteV).as("mn"), max(finiteV).as("mx"),
+      count(lit(1)).as("d")).head()
+    val n = if (b.isNullAt(0)) 0L else b.getLong(0)
+    require(n > 0, "exactQuantiles: no non-null values")
+    val bounds =
+      if (b.isNullAt(1)) Map.empty[Int, (Double, Double)]
+      else Map(0 -> (b.getDouble(1), b.getDouble(2)))
+    Packing.weightedQuantiles(vals.withColumn("_gi", lit(0)), "_gi", "_v",
+      "_cnt", probs, Map(0 -> n), bounds,
+      distinctByGroup = Map(0 -> b.getLong(3)))(0)
   }
 
   /** Equi-DEPTH binning: bucket edges are exact type-7 quantiles

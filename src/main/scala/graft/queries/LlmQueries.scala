@@ -1293,7 +1293,7 @@ object LlmQueries {
       .withColumn("__mg", coalesce(col("lang"), lit("")))
       .withColumn("__tok", when(col("f4"), col("n_tokens")).otherwise(0L))
     val f5d = graft.operators.Packing
-      .groupedPrefixSum(ordered, "__mg", "__ord", "__tok", "tokens_before")
+      .prefixSums(ordered, Seq("__mg"), "__ord", Seq("__tok"), Seq("tokens_before"))
       .withColumn("f5",
         col("f4") && col("tokens_before") + col("n_tokens") <= 2000L)
     val stages = Seq(
@@ -1670,7 +1670,7 @@ object LlmQueries {
     * hash divergence that two rounds of judge replays could not reproduce
     * (VERDICT r6/r7: mix_corpus `hash_match:false` in the driver's
     * environment only, rows always 215/215). It computes `tokens_before`
-    * TWICE — through [[Packing.groupedPrefixSum]]'s two-phase plan (the
+    * TWICE — through [[Packing.prefixSums]]' two-phase plan (the
     * production path) AND through the plain per-source window (exact at
     * gate SF) — and reduces to one row:
     *
@@ -1696,8 +1696,8 @@ object LlmQueries {
     val ordered = withTok.withColumn("__ord",
       concat(md5(concat_ws("#", lit(5L), col("doc_id").cast("string"))),
         lit("#"), col("doc_id").cast("string")))
-    val two = Packing.groupedPrefixSum(ordered, "source", "__ord",
-      "n_tokens", "tokens_before")
+    val two = Packing.prefixSums(ordered, Seq("source"), "__ord",
+      Seq("n_tokens"), Seq("tokens_before"))
     val plain = Window.partitionBy("source").orderBy("__ord")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val both = two.withColumn("tb_plain",

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * ([[Packing.bracketRowsByAgg]]): exact covering rows under forced
   * multi-round recursion, double edge values, long/double families,
   * clamped magnitudes, and end-to-end parity of Stats.exactQuantiles
-  * with Spark's own `percentile` aggregate. */
+  * and [[Packing.weightedQuantiles]] with Spark's own `percentile`
+  * aggregate. */
 class BracketAggSpec extends SparkSpec {
   import spark.implicits._
 
@@ -125,5 +126,39 @@ class BracketAggSpec extends SparkSpec {
       .getAs[scala.collection.Seq[Double]](0)
     assert(got.zip(exp).forall { case (g, e) => g == e },
       s"got $got expected $exp")
+  }
+
+  test("quantiles over infinite values match Spark's percentile bit for bit") {
+    val rnd = new scala.util.Random(13)
+    val probs = Seq(0.0, 0.0002, 0.1, 0.25, 0.4, 0.5, 0.75, 0.9998, 1.0)
+    // ±Infinity endpoints around more finite distinct values than the
+    // collect cap (exactQuantiles narrows from finite bounds), and a
+    // column with no finite value at all (no bounds: the root interval
+    // is ±MaxValue/2; p = 0.4 interpolates −Inf against +Inf → NaN)
+    val ends = (1 to 5000).map(_ => rnd.nextGaussian() * 1000) ++
+      Seq.fill(3)(Double.NegativeInfinity) ++ Seq.fill(2)(Double.PositiveInfinity)
+    val allInf = Seq.fill(4)(Double.NegativeInfinity) ++
+      Seq.fill(5)(Double.PositiveInfinity)
+    def same(got: Seq[Double], exp: Seq[Double]): Boolean =
+      got.size == exp.size && got.zip(exp).forall { case (g, e) =>
+        g == e || (g.isNaN && e.isNaN) }
+    for (xs <- Seq(ends, allInf)) {
+      val df = xs.toDF("x")
+      val exp = df.agg(percentile(col("x"), typedLit(probs))).head()
+        .getAs[scala.collection.Seq[Double]](0).toSeq
+      val got = Stats.exactQuantiles(df, "x", probs)
+      assert(same(got, exp), s"exactQuantiles: got $got expected $exp")
+      // without distinct counts the routine always narrows (no direct tier)
+      val freq = df.groupBy("x").agg(count(lit(1)).as("_cnt"))
+        .withColumn("_gi", lit(0)).localCheckpoint()
+      val b = freq.agg(min(Packing.finiteProxy(col("x"))),
+        max(Packing.finiteProxy(col("x")))).head()
+      val bounds =
+        if (b.isNullAt(0)) Map.empty[Int, (Double, Double)]
+        else Map(0 -> (b.getDouble(0), b.getDouble(1)))
+      val narrowed = Packing.weightedQuantiles(freq, "_gi", "x", "_cnt", probs,
+        Map(0 -> xs.size.toLong), bounds)(0)
+      assert(same(narrowed, exp), s"weightedQuantiles: got $narrowed expected $exp")
+    }
   }
 }

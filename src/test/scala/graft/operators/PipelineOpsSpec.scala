@@ -177,7 +177,7 @@ class PipelineOpsSpec extends SparkSpec {
     // an unpartitioned Window over the data moves the whole table to a
     // single task (the scale failure this operator exists to avoid)
     val dataWin = plan.linesIterator
-      .find(l => l.contains("Window [") && l.contains("AS _local_cum"))
+      .find(l => l.contains("Window [") && l.contains("AS _lc_0"))
     assert(dataWin.exists(_.contains("[_slice")),
       s"per-row window is not partitioned by _slice:\n${dataWin.getOrElse(plan)}")
   }
@@ -187,7 +187,7 @@ class PipelineOpsSpec extends SparkSpec {
     import s.implicits._
     val df = (1L to 300L).map(i => (i, s"g${i % 3}", (i % 17) + 1)).toDF("id", "grp", "tok")
     def run(d: org.apache.spark.sql.DataFrame) =
-      Packing.groupedPrefixSum(d, "grp", "id", "tok")
+      Packing.prefixSums(d, Seq("grp"), "id", Seq("tok"), Seq("cum_before"))
         .select("id", "cum_before").orderBy("id").collect().toSeq
     val one = run(df.repartition(1))
     val many = run(df.repartition(13))
@@ -200,44 +200,46 @@ class PipelineOpsSpec extends SparkSpec {
     assert(one === ref)
   }
 
-  test("multi-column prefixSums equals chained groupedPrefixSum calls (grouped and global)") {
+  test("multi-column prefixSums matches plain windows (grouped and global)") {
     val s = spark
     import s.implicits._
+    import org.apache.spark.sql.expressions.Window
     val df = (1L to 300L)
       .map(i => (i, s"g${i % 3}", (i % 17) + 1, (i % 5) + 1))
       .toDF("id", "grp", "a", "b")
-    // grouped: one pass over two value columns vs two chained passes
+    // reference: exclusive running sums over plain windows (fine at test scale)
+    def before(c: String, w: org.apache.spark.sql.expressions.WindowSpec) =
+      coalesce(sum(c).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+    val byGrp = Window.partitionBy("grp").orderBy("id")
+    // grouped: one pass over two value columns
     val multi = Packing.prefixSums(df, Seq("grp"), "id", Seq("a", "b"),
         Seq("ca", "cb"))
       .select("id", "ca", "cb").orderBy("id").collect().toSeq
-    val chained = Packing.groupedPrefixSum(
-        Packing.groupedPrefixSum(df, "grp", "id", "a", "ca"),
-        "grp", "id", "b", "cb")
-      .select("id", "ca", "cb").orderBy("id").collect().toSeq
-    assert(multi === chained)
-    // global (empty group list) vs packContiguous's start_offset
+    val ref = df.select(col("id"), before("a", byGrp).as("ca"), before("b", byGrp).as("cb"))
+      .orderBy("id").collect().toSeq
+    assert(multi === ref)
+    // global (empty group list)
     val g = Packing.prefixSums(df, Nil, "id", Seq("a"), Seq("ca"))
       .select("id", "ca").orderBy("id").collect().toSeq
-    val pc = Packing.packContiguous(df, "id", "a", Int.MaxValue)
-      .select(col("id"), col("start_offset").as("ca"))
+    val gRef = df.select(col("id"), before("a", Window.orderBy("id")).as("ca"))
       .orderBy("id").collect().toSeq
-    assert(g === pc)
+    assert(g === gRef)
     // partition-count invariance, the determinism contract of the family
     val many = Packing.prefixSums(df.repartition(13), Seq("grp"), "id",
         Seq("a", "b"), Seq("ca", "cb"))
       .select("id", "ca", "cb").orderBy("id").collect().toSeq
-    assert(many === chained)
+    assert(many === multi)
   }
 
   test("grouped prefix sum's per-row window is partitioned by (group, _slice)") {
     val s = spark
     import s.implicits._
     val df = (1L to 100L).map(i => (i, s"g${i % 2}", 5L)).toDF("id", "grp", "tok")
-    val plan = Packing.groupedPrefixSum(df, "grp", "id", "tok")
+    val plan = Packing.prefixSums(df, Seq("grp"), "id", Seq("tok"), Seq("cum_before"))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
     val dataWin = plan.linesIterator
-      .find(l => l.contains("Window [") && l.contains("AS _local_cum"))
+      .find(l => l.contains("Window [") && l.contains("AS _lc_0"))
     assert(dataWin.exists(l => l.contains("_slice") && l.contains("grp")),
       s"per-row window is not partitioned by (grp, _slice):\n${dataWin.getOrElse(plan)}")
   }
@@ -249,7 +251,8 @@ class PipelineOpsSpec extends SparkSpec {
     val str = (1L to 100L).map(i => (f"k$i%03d", 5L)).toDF("id", "tok")
     for (df <- Seq(Packing.packContiguous(long, "id", "tok", 64),
                    Packing.packContiguous(str, "id", "tok", 64),
-                   Packing.groupedPrefixSum(long.withColumn("g", lit("g")), "g", "id", "tok"))) {
+                   Packing.prefixSums(long.withColumn("g", lit("g")), Seq("g"), "id",
+                     Seq("tok"), Seq("cum_before")))) {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
       // the round-6 hazard: slice ids from spark_partition_id over a
