@@ -39,7 +39,7 @@ final class Report private (
   import Report.KeyCol
 
   private var describeCache: ListMap[String, Describe.ColumnProfile] = ListMap.empty
-  private var validateCache: ListMap[String, DataFrame] = ListMap.empty
+  private var validateCache: ListMap[String, Validation.ColumnChecks] = ListMap.empty
 
   /** Dataset-level profile (petk/exploration.py:34-68): one row per
     * (section, metric) with a Long value. One aggregation job. */
@@ -76,18 +76,16 @@ final class Report private (
   /** Schema-driven validation (petk/exploration.py:80-126): lazy findings
     * DataFrame (column, index, function, notes), ordered by
     * (column, index, function) like the reference (petk/exploration.py:
-    * 116-124). Memoized per column. */
+    * 116-124). Every requested row-local rule (accepted, range,
+    * bounding_box) of every requested column runs in ONE scan of `df`
+    * ([[Validation.scan]]); only geospatial and sliver keep their own
+    * branches. Each column's rules are memoized. */
   def validate(columns: Seq[String] = Nil, verbose: Boolean = false): DataFrame = {
     val cols = findColumns(columns)
-    val spark = df.sparkSession
     cols.filter(schema.contains).filterNot(validateCache.contains).foreach { c =>
-      validateCache += c -> Validation.findingsFor(df, KeyCol, c, schema(c))
+      validateCache += c -> Validation.checksFor(df, KeyCol, c, schema(c))
     }
-    val parts = cols.flatMap(validateCache.get)
-    val findings =
-      if (parts.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Validation.findingsSchema(df.schema(KeyCol).dataType))
-      else parts.reduce(_ unionByName _)
+    val findings = Validation.findings(df, KeyCol, cols.flatMap(validateCache.get))
     // notes as the final tiebreak: the reference sorts by (column, index,
     // function) only (petk/exploration.py:120-122), but rows sharing all
     // three keys (possible with non-unique row keys) need a total order

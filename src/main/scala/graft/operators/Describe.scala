@@ -15,6 +15,8 @@ import org.apache.spark.sql.types._
 
 import graft.core.SemanticType
 import graft.operators.Materialize._
+import graft.plans.MomentsAgg.moments
+import graft.plans.WeightedPercentileAgg.weightedPercentile
 
 /** Per-column statistics kernel — the Spark-native equivalent of the
   * reference's `get_description` (petk/tools.py:14-70).
@@ -27,25 +29,30 @@ import graft.operators.Materialize._
   *     hash aggregations, packed into chunks whose aggregation buffer
   *     stays within `spark.sql.codegen.maxFields` ([[pass1Chunks]]): one
   *     aggregation over more buffer fields silently loses whole-stage
-  *     codegen, and a numeric column carries 22-23 of them, so ONE wide
-  *     aggregation fell back to the interpreted path from about five
-  *     numeric columns on. The chunks run as one action (a cartesian
+  *     codegen. std, variance, skewness and kurtosis share ONE
+  *     `(n, avg, m2, m3, m4)` buffer ([[graft.plans.MomentsAgg]], Spark's
+  *     own update, merge and result expressions), so a numeric column
+  *     carries 12-13 buffer fields instead of 22-23 (11 lineitem columns:
+  *     108 fields, not 188). The chunks run as one action (a cartesian
   *     product of their one-row results): k chunks cost k + 1 AQE jobs.
   *  2. Exact distinct counts and exact (type-7) percentiles do NOT join
-  *     pass 1: mixing a distinct aggregate and the TypedImperative
-  *     Percentile in one agg forces an Expand-based plan that benched
-  *     2-6x slower than running the pieces separately (57s vs ~15s at
-  *     sf0.1) and single-reducer Percentile cannot scale. Instead every
+  *     pass 1: mixing a distinct aggregate and an imperative percentile
+  *     in one agg forces an Expand-based plan that benched 2-6x slower
+  *     than running the pieces separately (57s vs ~15s at sf0.1), and a
+  *     single-reducer percentile cannot scale. Instead every
   *     long/double/string-family column is unpivoted into ONE typed
   *     `(c, vl, vd, vs)` relation and counted into ONE two-phase
   *     frequency table — a scalable hash aggregation that shuffles only
   *     distinct values — from which one job (job A) reads distinct_count,
   *     mad and, per family, the frequency-weighted exact percentile over
-  *     that family's own typed value. Columns whose distinct count pass 1
-  *     cannot bound read the same table again (a weighted-percentile job
-  *     or the distributed bracket chain). Columns outside the families
-  *     (decimals, arrays) get per-column frequency jobs; they and the
-  *     family table run concurrently on a fixed driver pool.
+  *     that family's own typed value
+  *     ([[graft.plans.WeightedPercentileAgg]]: primitive arrays and
+  *     `percentile`'s exact arithmetic, without its boxed hash map).
+  *     Columns whose distinct count pass 1 cannot bound read the same
+  *     table again (a weighted-percentile job or the distributed bracket
+  *     chain). Columns outside the families (decimals, arrays) get
+  *     per-column frequency jobs with the same weighted percentile; they
+  *     and the family table run concurrently on a fixed driver pool.
   *  3. `approximate = true` (the 100 TB mode) folds distinct + quantiles
   *     back into pass 1 as mergeable sketches (HLL++
   *     `approx_count_distinct`, KLL quantiles
@@ -63,10 +70,11 @@ import graft.operators.Materialize._
   *     columns together.
   *
   * Stat-definition parity with the reference (pandas):
-  *  - quantiles: linear (type-7) interpolation — Spark `percentile`
-  *    matches pandas `Series.quantile` (petk/tools.py:47-48).
-  *  - std/variance: sample, ddof=1 — `stddev_samp`/`var_samp`
-  *    (petk/tools.py:56-57).
+  *  - quantiles: linear (type-7) interpolation — Spark `percentile`'s
+  *    arithmetic ([[graft.plans.WeightedPercentileAgg]]) matches pandas
+  *    `Series.quantile` (petk/tools.py:47-48).
+  *  - std/variance: sample, ddof=1 — `stddev_samp`/`var_samp`'s results
+  *    off the shared moment buffer (petk/tools.py:56-57).
   *  - kurtosis/skewness: pandas returns bias-corrected G2/G1
   *    (petk/tools.py:59-60); Spark returns population g2/g1, corrected
   *    driver-side:
@@ -98,7 +106,7 @@ object Describe {
       contentType: SemanticType,
       stats: ListMap[String, Any])
 
-  private val SEP = ""
+  private val SEP = "\u0001"
 
   private def isFloating(dt: DataType) = dt match {
     case DoubleType | FloatType => true
@@ -113,7 +121,7 @@ object Describe {
 
   /** Exact-percentile guard (SURVEY.md §4.2): a column's exact
     * frequency-weighted percentile puts its whole distinct-value set into
-    * ONE TypedImperative Percentile buffer — fine at oracle scale, an OOM
+    * ONE percentile buffer — fine at oracle scale, an OOM
     * for a near-unique column at 100 TB. Above this many distinct values
     * the quantiles fall back to the mergeable KLL sketch
     * ([[graft.plans.KllSketchAgg]]), same as `approximate = true`; distinct_count
@@ -125,7 +133,7 @@ object Describe {
   /** Family-path quantile ROUTING bound (performance, not correctness —
     * both routes are exact): columns whose distinct count is PROVABLY at
     * or under this — via the free static bound min(n, max-min+1 for
-    * integral/date values) — ride the weighted Percentile inside job A
+    * integral/date values) — ride the weighted percentile inside job A
     * (buffer bounded by this constant, ~10 MB); all others use the
     * distributed bracket chain, which holds no whole-column buffer at
     * any cardinality. */
@@ -223,10 +231,10 @@ object Describe {
           //  - PROVABLY-small columns — static bound min(n, max-min+1 for
           //    integral/date values, all known from pass 1) at or under
           //    PercentileBufferMaxDistinct — ride job A's weighted
-          //    Percentile directly: no extra job, bounded buffer;
+          //    percentile directly: no extra job, bounded buffer;
           //  - AMBIGUOUS columns (high-n doubles, wide-range longs) are
           //    routed by the EXACT distinct count job A computes anyway:
-          //    actually-small ones get one extra weighted-Percentile job
+          //    actually-small ones get one extra weighted-percentile job
           //    over the CACHED freq blocks (sub-bound rows, ~ms), and
           //    truly-large ones go DISTRIBUTED: Packing.weightedQuantiles
           //    brackets the ≤ 2·|probs| rows covering the needed order
@@ -258,8 +266,8 @@ object Describe {
             def percentiles(qs: Seq[String]): Seq[Column] = Seq("vl", "vd").flatMap { s =>
               val mine = qs.filter(q => slotOf(fields(q)).exists(_._1 == s))
               if (mine.isEmpty) None
-              else Some(percentile(when(col("c").isin(mine: _*), col(s)),
-                typedLit(QuantilePs), col("f")).as(s"q$s"))
+              else Some(weightedPercentile(when(col("c").isin(mine: _*), col(s)),
+                QuantilePs, col("f")).as(s"q$s"))
             }
             def quantilesIn(r: Row): Option[Seq[Any]] = Seq("qvl", "qvd").collectFirst {
               case k if r.schema.fieldNames.contains(k) && !r.isNullAt(r.fieldIndex(k)) =>
@@ -340,7 +348,7 @@ object Describe {
 
         // Cardinality ROUTING estimate for the non-family columns only —
         // decimals/arrays, whose quantiles must choose between the
-        // bounded Percentile buffer and the t-digest sketch before their
+        // bounded percentile buffer and the KLL sketch before their
         // freq job runs. One small HLL job, and only when n even makes
         // the bound reachable. Family columns need no estimate: their
         // routing reads the EXACT distinct count off job A and runs the
@@ -368,7 +376,7 @@ object Describe {
           val madMean = madMeanOf(name)
           val exprs = count(lit(1)).as("d") +:
             ((if (withQ && exact)
-              Seq(percentile(quantileInput(fields(name)), typedLit(QuantilePs), col(s"${SEP}f")).as("q"))
+              Seq(weightedPercentile(quantileInput(fields(name)), QuantilePs, col(s"${SEP}f")).as("q"))
             else Nil) ++
             madMean.map(m => (sum(col(s"${SEP}f") *
               abs(col(name).cast(DoubleType) - lit(m))) /
@@ -556,8 +564,8 @@ object Describe {
       case SemanticType.Numeric =>
         val d = c.cast(DoubleType)
         a("min", min(c)); a("max", max(c))
-        a("mean", avg(c)); a("std", stddev_samp(c)); a("variance", var_samp(c))
-        a("kurtosis", kurtosis(c)); a("skewness", skewness(c)); a("sum", sum(c))
+        a("mean", avg(c)); a("sum", sum(c))
+        out += s"$name$SEP" -> moments(c) // variance, std, skewness, kurtosis
         if (isFloating(f.dataType))
           a("n_infinite", cnt(d === Double.PositiveInfinity || d === Double.NegativeInfinity))
         a("n_zeros", cnt(c === lit(0)))
@@ -570,7 +578,7 @@ object Describe {
     * packed in column order into chunks that whole-stage codegen accepts.
     * A no-grouping aggregate whose buffer holds more fields than the
     * session's `spark.sql.codegen.maxFields` (default 100) silently runs
-    * as an interpreted HashAggregate, and one numeric column carries 22-23
+    * as an interpreted HashAggregate, and one numeric column carries 12-13
     * buffer fields. Each group's width is read off the analyzed plan's
     * `aggBufferAttributes`, so a stat added later is counted without a
     * hand-kept table. A no-grouping aggregate computes every column on its
@@ -630,7 +638,12 @@ object Describe {
       df.agg(named.head, named.tail: _*)
     }
     val row = frames.reduce((a, b) => a.hint("shuffle_replicate_nl").crossJoin(b)).head()
-    chunks.flatten.map(_._1).zipWithIndex.map { case (key, k) => key -> row.get(k) }.toMap
+    chunks.flatten.map(_._1).zipWithIndex.flatMap { case (key, k) =>
+      row.get(k) match { // a struct stat (MomentsAgg) yields one key per field
+        case r: Row => r.schema.fieldNames.toSeq.zipWithIndex.map { case (f, i) => s"$key$f" -> r.get(i) }
+        case v => Seq(key -> v)
+      }
+    }.toMap
   }
 
   /** Job-local properties a pool task takes over from its caller, so

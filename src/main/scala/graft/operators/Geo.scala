@@ -9,8 +9,9 @@ import graft.functions.GeoFunctions._
 /** Geospatial profiling + validation operators (SURVEY.md A13–A17,
   * A48–A50), over WKT geometry columns.
   *
-  * All dataset-level metrics fold into single aggregations; per-row rules
-  * are lazy filter+projects like every other validation rule.
+  * All dataset-level metrics fold into single aggregations; the row-local
+  * `bounding_box` rule is a [[Validation.RowRule]] that joins the other
+  * row-local rules' single scan.
   */
 object Geo {
 
@@ -110,20 +111,16 @@ object Geo {
 
   /** `bounding_box` rule (petk/validation.py:11-19): rows whose geometry
     * does NOT intersect the box (geopandas `.cx` slice semantics). */
-  def boundingBox(df: DataFrame, keyCol: String, column: String,
-      box: (Double, Double, Double, Double)): DataFrame = {
+  def boundingBox(column: String, box: (Double, Double, Double, Double)): Validation.RowRule = {
     val (xmin, xmax, ymin, ymax) = box
     require(xmin < xmax && ymin < ymax, "Invalid bounding box given")
     val g = col(column)
     // SINGLE WKT parse per row: the intersection test is one UDF eval
     // (see [[graft.functions.GeoFunctions.stEnvelopeIntersectsBox]] for
     // why the compositional envelope forms pay four parses here).
-    df.filter(g.isNotNull && !envelopeIntersects(g, xmin, xmax, ymin, ymax))
-      .select(
-        lit(column).as("column"),
-        col(keyCol).as("index"),
-        lit("bounding_box").as("function"),
-        lit(s"Geometry outside of bbox($xmin, $xmax, $ymin, $ymax)").as("notes"))
+    Validation.RowRule(column, "bounding_box",
+      g.isNotNull && !envelopeIntersects(g, xmin, xmax, ymin, ymax),
+      lit(s"Geometry outside of bbox($xmin, $xmax, $ymin, $ymax)"))
   }
 
   /** `sliver` rule (petk/validation.py:53-60): explode multi-part

@@ -7,11 +7,20 @@ import org.apache.spark.sql.types._
 import graft.core.{Bounds, ColumnRules}
 
 /** Schema-driven validation rules — Spark equivalents of
-  * petk/validation.py. Each rule is a lazy filter+project over the keyed,
-  * normalized input producing per-row findings
-  * `(column, index, function, notes)` (petk/exploration.py:107-114); rules
-  * never collect, so findings stay distributed and Catalyst pushes the
-  * predicates into the scan.
+  * petk/validation.py, producing per-row findings
+  * `(column, index, function, notes)` (petk/exploration.py:107-114).
+  * Rules never collect, so findings stay distributed and Catalyst pushes
+  * the predicates into the scan.
+  *
+  * Two execution shapes:
+  *  - ROW-LOCAL rules (accepted, range, bounding_box) are [[RowRule]]s —
+  *    a condition and a note over one row — and every requested one, over
+  *    every column, runs in ONE scan ([[findings]]): one filter on "any
+  *    rule fires", then each surviving row explodes into one finding per
+  *    rule that fires on it. k rules cost one scan, not k.
+  *  - WIDENED rules (geospatial, sliver) parse geometry on a repartitioned
+  *    source, and sliver aggregates per key, so each keeps its own
+  *    branch, unioned with the scan's findings.
   *
   * Dispatch is an explicit registry rather than the reference's
   * module-introspection (`np.intersect1d(schema keys, module callables)`,
@@ -25,39 +34,61 @@ object Validation {
     StructField("function", StringType, nullable = false),
     StructField("notes", StringType)))
 
-  /** All findings for one column's rules, unioned (petk/exploration.py:
-    * 101-114). */
-  def findingsFor(df: DataFrame, keyCol: String, column: String, rules: ColumnRules): DataFrame = {
-    val parts = Seq.newBuilder[DataFrame]
+  /** A row-local rule: a row where `cond` is true yields the finding
+    * (column, index, function, notes). */
+  final case class RowRule(column: String, function: String, cond: Column, notes: Column)
+
+  /** One column's rules by execution shape: its row-local rules and its
+    * widened branches' findings. */
+  final case class ColumnChecks(rowLocal: Seq[RowRule], widened: Seq[DataFrame])
+
+  /** One column's rules (petk/exploration.py:101-114). */
+  def checksFor(df: DataFrame, keyCol: String, column: String, rules: ColumnRules): ColumnChecks = {
+    val widened = Seq.newBuilder[DataFrame]
     // implicit validity audit for the column literally named `geometry`
     // (petk/exploration.py:95-99 — runs whenever that column has a schema
     // entry, regardless of which rules it declares)
-    if (column == "geometry") parts += Geo.geospatial(df, keyCol, column)
-    rules.accepted.foreach(vs => parts += accepted(df, keyCol, column, vs))
-    rules.range.foreach(b => parts += range(df, keyCol, column, b))
-    rules.boundingBox.foreach(b => parts += Geo.boundingBox(df, keyCol, column, b))
-    rules.sliver.foreach(p => parts += Geo.sliver(df, keyCol, column, p))
-    val all = parts.result()
-    if (all.isEmpty)
+    if (column == "geometry") widened += Geo.geospatial(df, keyCol, column)
+    rules.sliver.foreach(p => widened += Geo.sliver(df, keyCol, column, p))
+    ColumnChecks(
+      rules.accepted.map(vs => accepted(column, vs)).toSeq ++
+        rules.range.map(b => range(column, b)) ++
+        rules.boundingBox.map(b => Geo.boundingBox(column, b)),
+      widened.result())
+  }
+
+  /** All findings of `checks` over `df`: every row-local rule in one
+    * [[scan]], unioned with the widened branches; an empty frame of
+    * [[findingsSchema]] when there is nothing to check. */
+  def findings(df: DataFrame, keyCol: String, checks: Seq[ColumnChecks]): DataFrame = {
+    val rowLocal = checks.flatMap(_.rowLocal)
+    val parts = (if (rowLocal.isEmpty) Nil else Seq(scan(df, keyCol, rowLocal))) ++
+      checks.flatMap(_.widened)
+    if (parts.isEmpty)
       df.sparkSession.createDataFrame(
         df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         findingsSchema(df.schema(keyCol).dataType))
-    else all.reduce(_ unionByName _)
+    else parts.reduce(_ unionByName _)
   }
 
-  private def shape(df: DataFrame, keyCol: String, column: String,
-      function: String, cond: Column, notes: Column): DataFrame =
-    df.filter(cond).select(
-      lit(column).as("column"),
-      col(keyCol).as("index"),
-      lit(function).as("function"),
-      notes.as("notes"))
+  /** Findings of row-local `rules` in ONE pass over `df`: keep rows where
+    * any rule fires, then explode each into one finding per firing rule.
+    * A condition is evaluated again only on the kept rows. A null
+    * condition never fires, in the filter and the explode alike. */
+  def scan(df: DataFrame, keyCol: String, rules: Seq[RowRule]): DataFrame = {
+    val hits = rules.map(r => when(r.cond, struct(
+      lit(r.column).as("column"), col(keyCol).as("index"),
+      lit(r.function).as("function"), r.notes.as("notes"))))
+    df.filter(rules.map(_.cond).reduce(_ || _))
+      .select(explode(filter(array(hits: _*), _.isNotNull)).as("f"))
+      .select("f.*")
+  }
 
   /** petk/validation.py:47-51 — value outside the accepted list. pandas
     * `~series.isin(values)` is TRUE for NaN, so the reference flags nulls
     * too; `!coalesce(isin, false)` replicates that exactly. */
-  def accepted(df: DataFrame, keyCol: String, column: String, values: Seq[Any]): DataFrame =
-    shape(df, keyCol, column, "accepted",
+  def accepted(column: String, values: Seq[Any]): RowRule =
+    RowRule(column, "accepted",
       !coalesce(col(column).isin(values: _*), lit(false)),
       lit("Value not within the accepted range"))
 
@@ -65,13 +96,13 @@ object Validation {
     * check. Nulls never compare true, matching pandas (NaN < x is False).
     * Deviation (documented, SURVEY.md A47): the reference's truthiness test
     * also disables a bound equal to 0; we only disable absent bounds. */
-  def range(df: DataFrame, keyCol: String, column: String, bounds: Bounds): DataFrame = {
+  def range(column: String, bounds: Bounds): RowRule = {
     val c = col(column)
     // lower-bound check first, matching the reference's if/elif order
     var notes: Column = when(lit(false), lit(null).cast(StringType))
     bounds.lower.foreach(l => notes = notes.when(c < lit(l), lit("Value is less than the lower bound")))
     bounds.upper.foreach(u => notes = notes.when(c > lit(u), lit("Value is greater than the upper bound")))
-    shape(df, keyCol, column, "range", notes.isNotNull, notes)
+    RowRule(column, "range", notes.isNotNull, notes)
   }
 
   /** DATA-DRIVEN fence validation: rows outside the Tukey fences

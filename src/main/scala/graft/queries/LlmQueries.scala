@@ -1439,7 +1439,7 @@ object LlmQueries {
     val perSession = shardLayoutReady.computeIfAbsent(spark,
       _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
     val path = perSession.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/docs"
+      val tmp = graft.sources.ScratchDir.create("graft-shards") + "/docs"
       graft.sources.Sinks.writeTrainingShards(
         Tables.documents(spark, dir).select("doc_id", "n_chars"),
         tmp, "doc_id", seed = 42L, shards = 8)

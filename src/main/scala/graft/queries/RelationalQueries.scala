@@ -715,7 +715,7 @@ object RelationalQueries {
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
     val (liTable, ordTable) = (s"graft_li_bucketed_$tag", s"graft_ord_bucketed_$tag")
     graft.sources.Memo.onceFor(spark, dir, "bucketed-tables") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+      val tmp = graft.sources.ScratchDir.create("graft-bucketed")
       graft.sources.Sinks.writeBucketedExternal(
         Tables.lineitem(spark, dir).select("l_orderkey", "l_extendedprice", "l_discount"),
         liTable, s"$tmp/li", "l_orderkey", 8)
@@ -782,7 +782,7 @@ object RelationalQueries {
     * in either format fails the hash compare. Key/name columns only: CSV
     * is not the place for free-text comment columns. */
   def csvJsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-roundtrip").toString
+    val tmp = graft.sources.ScratchDir.create("graft-roundtrip")
     val nation = Tables.nation(spark, dir).select("n_nationkey", "n_name", "n_regionkey")
     val region = Tables.region(spark, dir).select("r_regionkey", "r_name")
     graft.sources.Sinks.writeCsv(nation, s"$tmp/nation_csv")
@@ -807,7 +807,7 @@ object RelationalQueries {
     * must match DuckDB reading the ORIGINAL parquet, so the format
     * conversion is proven lossless for longs, strings and doubles. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val tmp = graft.sources.ScratchDir.create("graft-orc")
     val supplier = Tables.supplier(spark, dir)
       .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
     graft.sources.Sinks.writeOrc(supplier, s"$tmp/supplier_orc")

@@ -14,11 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * passes time what a pipeline actually re-runs.
   *
   * On a cluster the scratch directory would be shared storage (the
-  * standing-index tables of an ingestion pipeline); `createTempDirectory`
+  * standing-index tables of an ingestion pipeline); a [[ScratchDir]]
   * is the local[] stand-in. Session keys are WEAK: a stopped
   * SparkSession must be collectable, not pinned by the registry (the
-  * temp dirs live until the OS tmp reaper; production callers manage
-  * their own scratch paths).
+  * scratch dirs live until JVM exit; production callers manage their
+  * own scratch paths).
   */
 object Memo {
 
@@ -41,8 +41,7 @@ object Memo {
     val perSession = tables.computeIfAbsent(spark,
       _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
     val path = perSession.computeIfAbsent(s"$dir#$key", { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-memo-$key")
-        .toString + "/t"
+      val tmp = ScratchDir.create(s"graft-memo-$key") + "/t"
       build.write.parquet(tmp)
       tmp
     })

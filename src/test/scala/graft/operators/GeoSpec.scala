@@ -118,7 +118,7 @@ class GeoSpec extends SparkSpec {
       (1L, "POINT (5 5)"), // inside
       (2L, "POINT (20 20)"), // outside
       (3L, "POLYGON ((9 9, 11 9, 11 11, 9 11, 9 9))")) // straddles the edge -> intersects
-    val out = Geo.boundingBox(df, "id", "geometry", (0.0, 10.0, 0.0, 10.0)).collect()
+    val out = Validation.scan(df, "id", Seq(Geo.boundingBox("geometry", (0.0, 10.0, 0.0, 10.0)))).collect()
     assert(out.map(_.getLong(1)).toSeq === Seq(2L))
     assert(out.head.getString(3) === "Geometry outside of bbox(0.0, 10.0, 0.0, 10.0)")
   }
@@ -128,7 +128,7 @@ class GeoSpec extends SparkSpec {
       (1L, null),
       (2L, "NOT A GEOMETRY"),
       (3L, "POINT (20 20)")) // genuinely outside
-    val out = Geo.boundingBox(df, "id", "geometry", (0.0, 10.0, 0.0, 10.0)).collect()
+    val out = Validation.scan(df, "id", Seq(Geo.boundingBox("geometry", (0.0, 10.0, 0.0, 10.0)))).collect()
     assert(out.map(_.getLong(1)).toSeq === Seq(3L))
   }
 
@@ -143,9 +143,8 @@ class GeoSpec extends SparkSpec {
   }
 
   test("bounding_box rejects an invalid box") {
-    val df = wkts((1L, "POINT (0 0)"))
     val e = intercept[IllegalArgumentException](
-      Geo.boundingBox(df, "id", "geometry", (10.0, 0.0, 0.0, 10.0)))
+      Geo.boundingBox("geometry", (10.0, 0.0, 0.0, 10.0)))
     assert(e.getMessage.contains("Invalid bounding box"))
   }
 

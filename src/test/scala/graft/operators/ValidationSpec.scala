@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -106,5 +108,67 @@ class ValidationSpec extends SparkSpec {
       StructType(Seq(StructField("id", LongType), StructField("v", DoubleType))))
     val flagged = Validation.iqrOutliers(withNull, "id", "v", 1.5).collect()
     assert(flagged.forall(!_.isNullAt(1)))
+  }
+
+  private val geoSchema = StructType(Seq(
+    StructField("id", LongType),
+    StructField("status", StringType),
+    StructField("amount", DoubleType),
+    StructField("geometry", StringType)))
+
+  private val geoRules = Map(
+    "status" -> ColumnRules(accepted = Some(Seq("O", "F"))),
+    "amount" -> ColumnRules(range = Some(Bounds(Some(0.0), Some(100.0)))),
+    "geometry" -> ColumnRules(boundingBox = Some((0.0, 10.0, 0.0, 10.0))))
+
+  /** The per-rule shape the single scan replaced: one filter + project
+    * per row-local rule, unioned with the widened branches. */
+  private def perRuleUnion(r: Report, rules: Map[String, ColumnRules]): DataFrame = {
+    val checks = rules.toSeq.map { case (c, cr) => Validation.checksFor(r.df, Report.KeyCol, c, cr) }
+    (checks.flatMap(_.rowLocal).map(rr => r.df.filter(rr.cond).select(
+      lit(rr.column).as("column"), col(Report.KeyCol).as("index"),
+      lit(rr.function).as("function"), rr.notes.as("notes"))) ++
+      checks.flatMap(_.widened)).reduce(_ unionByName _)
+  }
+
+  test("one-scan validate equals the per-rule union: several rules on one row, a geometry column, duplicate keys") {
+    val bowtie = "POLYGON ((0 0, 2 2, 0 2, 2 0, 0 0))"
+    val r = Report(spark.createDataFrame(Seq(
+      Row(1L, "O", 50.0, "POINT (5 5)"), // clean
+      Row(2L, "X", 150.0, "POINT (20 20)"), // accepted + range + bounding_box
+      Row(3L, null, -1.0, null), // accepted (null) + range + geospatial (null)
+      Row(4L, "F", null, bowtie), // geospatial only
+      Row(5L, "Z", 10.0, "POINT (1 1)"), // accepted, on a duplicated key
+      Row(5L, "O", 101.0, "POINT (30 1)"), // range + bounding_box, same key
+      Row(6L, "O", 100.0, "NOT A GEOMETRY")).asJava, geoSchema), // geospatial only
+      schema = geoRules, key = Some("id"))
+    val order = Seq("column", "index", "function", "notes").map(col)
+    val expected = perRuleUnion(r, geoRules)
+    val out = r.validate().collect().toSeq
+    assert(out === expected.orderBy(order: _*).collect().toSeq)
+    assert(out.map(x => (x.getString(0), x.getLong(1), x.getString(2))).count(_._2 == 2L) === 3)
+    assert(out.exists(x => x.getString(2) == "geospatial" && x.getLong(1) == 4L))
+    val verbose = r.validate(verbose = true)
+    assert(verbose.collect().toSeq ===
+      expected.join(r.df, Seq(Report.KeyCol), "left").select(verbose.columns.map(col): _*)
+        .orderBy(order: _*).collect().toSeq)
+    assert(r.validate(Seq("amount")).collect().toSeq ===
+      perRuleUnion(r, geoRules.filter(_._1 == "amount")).orderBy(order: _*).collect().toSeq)
+  }
+
+  test("verbose validate with k row-local rules scans the source twice, not k + 1 times") {
+    val dir = java.nio.file.Files.createTempDirectory("validate-scans")
+    try {
+      val path = s"$dir/t"
+      spark.createDataFrame(Seq(Row(1L, "X", 150.0), Row(2L, "O", 1.0)).asJava, schema)
+        .write.parquet(path)
+      val r = Report(spark.read.parquet(path), key = Some("id"), schema = Map(
+        "status" -> ColumnRules(accepted = Some(Seq("O"))),
+        "amount" -> ColumnRules(range = Some(Bounds(Some(0.0), Some(100.0))))))
+      val verbose = r.validate(verbose = true)
+      val scans = verbose.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size === 2, verbose.queryExecution.sparkPlan.treeString)
+      assert(verbose.count() === 2)
+    } finally graft.sources.ScratchDir.deleteTree(dir)
   }
 }

@@ -13,8 +13,16 @@ case class IdxDoc(doc_id: Long, text: String)
   * compaction through sink behavior. */
 class IndexStoreSpec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  private def tmp(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try made.forEach(d => graft.sources.ScratchDir.deleteTree(d)) finally super.afterAll()
 
   private def writeBatchDir(liveDir: String, id: Long, values: Seq[String]): Unit = {
     val s = spark
