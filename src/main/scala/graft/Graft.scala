@@ -16,11 +16,4 @@ object Graft {
       .withExtensions(new GraftExtensions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-
-  /** Convenience for local experimentation. */
-  def localSession(): SparkSession = {
-    val s = sessionBuilder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -26,9 +26,4 @@ object VectorFunctions {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
-
-  def euclidean(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(toDoubleArray(a), toDoubleArray(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

@@ -92,16 +92,6 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
-  /** MinHash signature as a Column expression (numHashes permutation-
-    * minimums over the shingle set via seeded xxhash64). NOTE: higher-order
-    * functions are interpreted, not codegen'd — this is fine for ad-hoc or
-    * small-array use, but bulk signing must go through
-    * [[minhashSignatures]] (explode + codegen'd aggregation), which
-    * benched >50x faster on a 5k-document corpus. */
-  def minhashSignature(shingles: Column, numHashes: Int, seed: Int = 42): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      s => array_min(transform(shingles, sh => xxhash64(s + lit(seed), sh))))
-
   /** Distinct k-word shingles in ROW form — (id, s) — built from
     * posexplode + window lead instead of array higher-order functions.
     * HOF lambdas are interpreted per element; this shape is whole-stage

@@ -30,14 +30,6 @@ object Merge {
       .unionByName(updates)
   }
 
-  /** Delete-aware variant: tombstone keys are removed from the result
-    * entirely (the GDPR/right-to-be-forgotten path). */
-  def upsertWithDeletes(
-      base: DataFrame, updates: DataFrame, deletes: DataFrame,
-      keys: Seq[String]): DataFrame =
-    upsert(base, updates, keys)
-      .join(deletes.select(keys.map(col): _*).distinct(), keys, "left_anti")
-
   /** SCD-type-2 history build: `history` holds every version of every
     * key with its version timestamp; each row gets
     * `valid_from = versionCol`, `valid_to` = the NEXT version's

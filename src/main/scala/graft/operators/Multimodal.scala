@@ -71,29 +71,6 @@ object Multimodal {
     })
   }
 
-  /** Resize stub: deterministic re-sampling of the payload to exactly
-    * `outBytes` bytes — evenly spaced byte picks, zero-padded (a real
-    * pipeline resizes decoded images; without a codec the byte-level
-    * contract — binary in, FIXED-width binary out — is the plumbing that
-    * matters: downstream batching can rely on the width). */
-  def stubResize(payload: Column, outBytes: Int): Column = {
-    require(outBytes > 0)
-    val len = octet_length(payload)
-    val picks = transform(sequence(lit(0), lit(outBytes - 1)), i =>
-      substring(payload, (i * len / outBytes + 1).cast(IntegerType), lit(1)))
-    // binary-safe join + zero-pad (concat_ws would round-trip through
-    // UTF-8 and corrupt arbitrary bytes), then cut to the fixed width
-    val joined = aggregate(picks, lit(Array.emptyByteArray), (acc, x) => concat(acc, x))
-    substring(concat(joined, lit(Array.fill[Byte](outBytes)(0))), 1, outBytes)
-  }
-
-  /** Frame-sample stub: pick `k` deterministic byte offsets (the real
-    * pipeline would sample video frames); returns the bytes at those
-    * offsets as ints. */
-  def sampleBytes(payload: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), i =>
-      get(split(hex(payload), ""), pmod(i * 7919, greatest(octet_length(payload), lit(1)))))
-
   /** Feature extraction over a payload column: adds an
     * ArrayType(FloatType) features column (classified VECTOR by the
     * describe ladder). Pure expression — no shuffle, survives any

@@ -859,15 +859,6 @@ object TextAnalysis {
     * portable (any engine computes the identical digest). */
   def fingerprintMd5(text: Column): Column = md5(trim(lower(text)))
 
-  /** Polynomial rolling hash (base 31 mod 1e9+7) over the character
-    * codepoints — cheap locality-free fingerprint when a cryptographic
-    * digest is overkill. Modular so the fold never overflows ANSI longs. */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      transform(sequence(lit(1), greatest(length(text), lit(1))),
-        i => ascii(substring(text, i, lit(1))).cast("long")),
-      lit(0L), (acc, c) => pmod(acc * 31L + c, lit(1000000007L)))
-
   /** Character-trigram language-ID: fit collects the top-k most frequent
     * trigrams per language from a labeled corpus (driver-side — the
     * profile is a few KB), classify scores each document by profile

@@ -373,11 +373,6 @@ object KllSketchAgg {
     Bridge.column(KllWeightedSketchAgg(Bridge.expression(v), Bridge.expression(w),
       k, probs, emitBytes = false).toAggregateExpression())
 
-  /** The serialized weighted sketch — unions with any other KLL sketch. */
-  def kllWeightedSketch(v: Column, w: Column, k: Int = 200): Column =
-    Bridge.column(KllWeightedSketchAgg(Bridge.expression(v), Bridge.expression(w),
-      k, Nil, emitBytes = true).toAggregateExpression())
-
   /** Quantile estimates (array<double>, one per prob) for a grouped column. */
   def kllQuantiles(c: Column, probs: Seq[Double], k: Int = 200): Column =
     Bridge.column(KllSketchAgg(Bridge.expression(c), k, probs, emitBytes = false).toAggregateExpression())
@@ -389,8 +384,4 @@ object KllSketchAgg {
   /** Quantile estimates from a column of stored sketches. */
   def kllUnionQuantiles(c: Column, probs: Seq[Double], k: Int = 200): Column =
     Bridge.column(KllUnionAgg(Bridge.expression(c), k, probs, emitBytes = false).toAggregateExpression())
-
-  /** Merged sketch bytes from a column of stored sketches. */
-  def kllUnion(c: Column, k: Int = 200): Column =
-    Bridge.column(KllUnionAgg(Bridge.expression(c), k, Nil, emitBytes = true).toAggregateExpression())
 }

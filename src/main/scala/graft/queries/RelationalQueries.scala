@@ -1705,17 +1705,12 @@ object RelationalQueries {
 
   /** The memoized hive-partitioned events layout (directory per
     * event_type), shared by the query and PlanSpec's pruning assert. */
-  def partitionedEvents(spark: SparkSession, dir: String): DataFrame = {
-    val tag = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_events_parted_$tag"
-    graft.sources.Memo.onceFor(spark, dir, "events-partitioned") {
-      graft.sources.Sinks.writePartitioned(
-        Tables.events(spark, dir), path, Seq("event_type"))
-    }
-    spark.read.parquet(path)
-  }
+  def partitionedEvents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(
+      graft.sources.Memo.pathFor(spark, dir, "events-partitioned") { path =>
+        graft.sources.Sinks.writePartitioned(
+          Tables.events(spark, dir), path, Seq("event_type"))
+      })
 
   private val partitionPrunedJoinOracle: String =
     s"""SELECT event_type, count(*) AS n, ${rSql("sum(value)", 4)} AS sum_value
@@ -1732,20 +1727,14 @@ object RelationalQueries {
     * path. Day index from epoch seconds: flooring nanos to micros to
     * seconds never crosses a day boundary (86400e9 % 1000 == 0), so both
     * engines bucket identically (same argument as [[zorderEvents]]). */
-  def dayShardedEvents(spark: SparkSession, dir: String): String = {
-    val tag = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft_events_dayshard_$tag"
-    graft.sources.Memo.onceFor(spark, dir, "events-dayshard") {
+  def dayShardedEvents(spark: SparkSession, dir: String): String =
+    graft.sources.Memo.pathFor(spark, dir, "events-dayshard") { path =>
       val ev = Tables.events(spark, dir)
         .withColumn("ts_day",
           floor(unix_timestamp(col("ts")) / 86400).cast("double"))
       graft.sources.Sinks.writeShardedWithProfiles(
         ev, path, col("ts_day"), Seq("ts_day", "value", "ts"))
     }
-    path
-  }
 
   /** Profile-sidecar pruned scan — the reader half of the shard-profile
     * bargain: a week-long range predicate on the day-sharded events

@@ -32,21 +32,27 @@ object Memo {
       new java.util.WeakHashMap[SparkSession,
         java.util.concurrent.ConcurrentHashMap[String, Unit]]())
 
+  /** The memoized scratch path `key` for (session, dir): a fresh
+    * [[ScratchDir]] path that `write` fills exactly once per
+    * (session, dir, key); every call returns the same path. Concurrent
+    * first calls for the same key block on the single write
+    * (ConcurrentHashMap.computeIfAbsent is atomic). */
+  def pathFor(spark: SparkSession, dir: String, key: String)
+      (write: String => Unit): String =
+    tables.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
+      .computeIfAbsent(s"$dir#$key", { _ =>
+        val path = ScratchDir.create(s"graft-memo-$key") + "/t"
+        write(path)
+        path
+      })
+
   /** The memoized table `key` for (session, dir): built and written to
     * parquet exactly once per (session, dir, key) by `build`, read back
-    * on every call. Concurrent first calls for the same key block on the
-    * single build (ConcurrentHashMap.computeIfAbsent is atomic). */
+    * on every call. */
   def tableFor(spark: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    val perSession = tables.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-    val path = perSession.computeIfAbsent(s"$dir#$key", { _ =>
-      val tmp = ScratchDir.create(s"graft-memo-$key") + "/t"
-      build.write.parquet(tmp)
-      tmp
-    })
-    spark.read.parquet(path)
-  }
+      (build: => DataFrame): DataFrame =
+    spark.read.parquet(pathFor(spark, dir, key)(p => build.write.parquet(p)))
 
   /** Run side-effecting `setup` exactly once per (session, dir, key) —
     * for seams whose artifact is not a single table (catalog-registered

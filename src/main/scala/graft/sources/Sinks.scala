@@ -12,9 +12,6 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * pre-paid once at write time. */
 object Sinks {
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupStateTimeout
 import graft.operators.Materialize._
 
 /** Running per-key numeric profile state: Welford-merged moments +
@@ -21,28 +21,6 @@ case class ProfileUpdate(
   * a downstream consumer can union them with batch shard profiles. */
 case class QuantileUpdate(
     key: String, count: Long, quantiles: Seq[Double], sketch: Array[Byte])
-
-/** One emitted trending-terms update (per key, per micro-batch): the
-  * current Misra–Gries counters sorted by residual count — a guaranteed
-  * superset of every term above a 1/(capacity+1) share of the stream so
-  * far, with counts as lower bounds. */
-case class TrendingUpdate(
-    key: String, processed: Long, terms: Seq[(String, Long)])
-
-/** One emitted engagement update (per key, per micro-batch): the decayed
-  * sum AS OF `last_seen_us` (each key's own latest event). A consumer
-  * comparing keys at instant `now` decays each score once more:
-  * score·2^(−(now − last_seen_us)/halfLife) — the state never needs a
-  * wall clock. */
-case class EngagementUpdate(
-    key: String, n_events: Long, decayed_sum: Double, last_seen_us: Long)
-
-/** One emitted rate verdict (per key × touched hour, per micro-batch):
-  * the hour's running count, the trailing-baseline size, and the
-  * z-score against that baseline (None while the baseline is degenerate
-  * — fewer than 2 trailing hours or zero variance). */
-case class RateUpdate(
-    key: String, hour_us: Long, cnt: Long, n_baseline: Long, z: Option[Double])
 
 /** Structured-Streaming operators (SURVEY.md §2.C row 14). Each transform
   * is written against the unified DataFrame API, so the same function
@@ -74,19 +52,6 @@ object Streams {
     df.groupBy(session_window(col(tsCol), gap), col(keyCol))
       .agg(count(lit(1)).as("n_events"))
       .select(col(keyCol), col("session_window.start").as("session_start"), col("n_events"))
-
-  /** Streaming wrapper: watermarked tumbling aggregation — late events
-    * beyond `watermark` are dropped and window state is evicted. */
-  def watermarkedTumbling(stream: DataFrame, tsCol: String, watermark: String,
-      duration: String, keyCol: String): DataFrame =
-    tumblingAgg(stream.withWatermark(tsCol, watermark), tsCol, duration, keyCol)
-
-  /** Streaming dedup on ids within the watermark horizon — bounded state,
-    * unlike a global dropDuplicates. */
-  def streamingDedup(stream: DataFrame, tsCol: String, watermark: String,
-      idCols: Seq[String]): DataFrame =
-    stream.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(idCols)
 
   /** Incremental per-key describe(): custom keyed state via
     * mapGroupsWithState maintaining Welford-merged running moments
@@ -146,192 +111,6 @@ object Streams {
       }
   }
 
-  /** Streaming recency-weighted engagement: the incremental twin of
-    * [[graft.operators.Stats.decayedSum]]. Per-key state is THREE
-    * numbers — (n_events, decayed_sum as of last_seen, last_seen_us) —
-    * folded forward by re-referencing both sides to the later instant:
-    *   ref' = max(last_seen, t);
-    *   s'   = s·e^(−λ(ref'−last_seen)) + v·e^(−λ(ref'−t))
-    * Exponential decay to a common reference composes, so the fold is
-    * ORDER-INVARIANT across events and micro-batches (late events decay
-    * themselves instead of corrupting the running sum) and the final
-    * state equals the batch Σ v·e^(−λ(last_seen−t)) exactly (up to
-    * float association). O(keys) state, no window, no event retention.
-    * Works identically on a batch Dataset. */
-  def engagementMonitor(stream: DataFrame, keyCol: String, tsCol: String,
-      valueCol: String, halfLifeDays: Double): Dataset[EngagementUpdate] = {
-    require(halfLifeDays > 0, s"half-life must be positive, got $halfLifeDays")
-    val lambdaUs = math.log(2.0) / (halfLifeDays * 86400.0 * 1e6)
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream
-      .select(col(keyCol).cast("string").as("_1"),
-        unix_micros(col(tsCol)).as("_2"), col(valueCol).cast("double").as("_3"))
-      .as[(String, Option[Long], Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double, Long), EngagementUpdate](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        var (n, s, last) = state.getOption.getOrElse((0L, 0.0, Long.MinValue))
-        rows.foreach {
-          case (_, Some(t), Some(v)) =>
-            val ref = math.max(last, t)
-            s = (if (last == Long.MinValue) 0.0
-                 else s * math.exp(-lambdaUs * (ref - last))) +
-              v * math.exp(-lambdaUs * (ref - t).toDouble)
-            last = ref
-            n += 1
-          case _ => // null ts or value: excluded, matching the batch op
-        }
-        // A key whose every event so far was null-ts/null-value has never
-        // folded anything: emitting would leak the Long.MinValue last_seen
-        // sentinel (and n=0, s=0) to consumers who'd compute a garbage
-        // now−last_seen decay delta. Keep it silent until a real event.
-        if (last == Long.MinValue) Iterator.empty
-        else { state.update((n, s, last)); Iterator(EngagementUpdate(key, n, s, last)) }
-      }
-  }
-
-  /** Streaming event-rate anomaly monitor: the incremental twin of
-    * [[graft.operators.Sequences.rateAnomalies]]. Per-key state is the
-    * map hourBucket → running count, bounded to the trailing
-    * `trailingHours` + 1 buckets behind the key's LATEST hour (older
-    * buckets evict each batch) — O(keys · trailingHours), independent
-    * of stream length. Each micro-batch folds its per-hour increments,
-    * then re-scores every TOUCHED hour against the trailing buckets
-    * present in state (same mean/stddev_samp/z as the batch operator;
-    * z = None on a degenerate baseline). Late events within the
-    * retained span fold into their own hour exactly; events older than
-    * the span are dropped (the state's watermark, mirroring the batch
-    * RANGE frame's horizon). Works identically on a batch Dataset. */
-  def rateMonitor(stream: DataFrame, keyCol: String, tsCol: String,
-      trailingHours: Int = 24): Dataset[RateUpdate] = {
-    require(trailingHours > 0, s"trailingHours must be positive")
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream
-      .select(col(keyCol).cast("string").as("_1"),
-        expr(s"unix_micros(`$tsCol`) div 3600000000L").as("_2"))
-      .as[(String, Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Map[Long, Long], RateUpdate](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        var counts = state.getOption.getOrElse(Map.empty[Long, Long])
-        val touched = scala.collection.mutable.Set[Long]()
-        rows.foreach {
-          case (_, Some(h)) =>
-            val newest = counts.keysIterator.foldLeft(h)(math.max)
-            if (h >= newest - trailingHours) {
-              counts = counts.updated(h, counts.getOrElse(h, 0L) + 1L)
-              touched += h
-            }
-          case _ => // null ts: excluded, matching the batch op
-        }
-        if (touched.isEmpty) Iterator.empty
-        else {
-          val newest = counts.keysIterator.max
-          counts = counts.filter { case (h, _) => h >= newest - trailingHours }
-          state.update(counts)
-          touched.iterator.filter(counts.contains).map { h =>
-            val base = counts.collect {
-              case (b, c) if b >= h - trailingHours && b < h => c.toDouble
-            }.toSeq
-            val z =
-              if (base.size < 2) None
-              else {
-                val m = base.sum / base.size
-                val v = base.map(x => (x - m) * (x - m)).sum / (base.size - 1)
-                if (v > 0) Some((counts(h) - m) / math.sqrt(v)) else None
-              }
-            RateUpdate(key, h * 3600000000L, counts(h), base.size, z)
-          }.toList.sortBy(_.hour_us).iterator
-        }
-      }
-  }
-
-  /** Streaming trending terms: the frequent-items twin of
-    * [[quantileMonitor]]. Per-key state is a Misra–Gries counter map of
-    * at most `capacity` entries ([[graft.plans.FreqItemsAgg]] — the same
-    * sketch the batch heavy-hitters pass folds map-side), advanced one
-    * MG step per token each micro-batch. State is O(keys · capacity),
-    * independent of stream length and of the (unbounded) term universe —
-    * the monitor never holds a full term count map. Each update emits the
-    * current counters (superset guarantee + lower-bound counts as in the
-    * batch sketch); an exact recount of the emitted candidates, as in
-    * [[graft.operators.TextAnalysis.exactHeavyHitters]] pass 2, turns
-    * any snapshot into exact trending counts. Works identically on a
-    * batch Dataset. */
-  def trendingTermsMonitor(stream: DataFrame, keyCol: String, textCol: String,
-      capacity: Int = 256): Dataset[TrendingUpdate] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream
-      .select(col(keyCol).cast("string").as("_1"),
-        graft.operators.TextAnalysis.tokens(col(textCol)).as("_2"))
-      .as[(String, Seq[String])]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Array[Byte]), TrendingUpdate](GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          val (seen0, bytes0) = state.getOption.getOrElse((0L, Array.empty[Byte]))
-          val counts =
-            if (bytes0.isEmpty) scala.collection.mutable.HashMap.empty[String, Long]
-            else graft.plans.FreqItemsAgg.deserializeCounts(bytes0)
-          var seen = seen0
-          rows.foreach { case (_, toks) =>
-            toks.foreach { t =>
-              graft.plans.FreqItemsAgg.mgUpdate(counts, t, capacity)
-              seen += 1L
-            }
-          }
-          state.update((seen, graft.plans.FreqItemsAgg.serializeCounts(counts)))
-          TrendingUpdate(key, seen,
-            counts.toSeq.sortBy { case (t, c) => (-c, t) })
-      }
-  }
-
-  /** The 100 TB form of [[incrementalProfile]]: per-key state is DROPPED
-    * once a key has been idle past `idleGap` of event time — an
-    * EventTimeTimeout fires when the stream's watermark passes
-    * (last event time seen for the key + idleGap); the final profile is
-    * emitted once more and the state removed, so a later event restarts
-    * the key from zero. State size is O(keys active within the idle
-    * horizon), not O(keys ever seen) — the difference between a bounded
-    * and an unbounded state store on an unbounded key space. */
-  def incrementalProfileEvicting(
-      stream: DataFrame, tsCol: String, watermark: String,
-      keyCol: String, valueCol: String, idleGapMs: Long): Dataset[ProfileUpdate] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream.withWatermark(tsCol, watermark)
-      // no cast on the event-time column: a cast would strip the watermark
-      // metadata the EventTimeTimeout checker looks for
-      .select(col(keyCol).cast("string").as("_1"),
-        col(valueCol).cast("double").as("_2"),
-        col(tsCol).as("_3"))
-      .as[(String, Option[Double], java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[ProfileState, ProfileUpdate](GroupStateTimeout.EventTimeTimeout) {
-        (key, rows, state) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove() // eviction: the watermark passed the idle horizon
-            render(key, s)
-          } else {
-            var s = state.getOption.getOrElse(emptyState)
-            var lastSeen = Long.MinValue
-            rows.foreach { case (_, v, t) =>
-              lastSeen = math.max(lastSeen, t.getTime)
-              s = welford(s, v)
-            }
-            state.update(s)
-            // timeout must sit beyond the current watermark: a key fed only
-            // watermark-old events still gets a (near-immediate) horizon
-            state.setTimeoutTimestamp(
-              math.max(lastSeen + idleGapMs, state.getCurrentWatermarkMs + 1))
-            render(key, s)
-          }
-      }
-  }
-
   /** Watermarked stream-stream interval join (the impression/click shape):
     * inner-join rows of the same `key` where the right event time falls in
     * [left.ts - beforeMs, left.ts + afterMs]. Both sides carry watermarks
@@ -351,39 +130,6 @@ object Streams {
         col(tsCol + "_r") >= col(tsCol) - expr(s"INTERVAL $beforeMs MILLISECONDS") &&
         col(tsCol + "_r") <= col(tsCol) + expr(s"INTERVAL $afterMs MILLISECONDS"))
   }
-
-  /** LEFT OUTER stream-stream interval join: like [[intervalJoin]] but a
-    * left event with no right match within the interval is EMITTED with
-    * null right columns ONCE the watermark passes its join window —
-    * the "order with no payment within an hour" alert shape. Outer
-    * emission is watermark-driven by the engine: a missing match is only
-    * provable when no qualifying right event can still arrive, so
-    * unmatched rows surface with watermark latency (exactly the
-    * documented Structured Streaming contract), while matches emit as
-    * they meet. State on both sides is bounded by watermark + interval. */
-  def intervalJoinLeftOuter(
-      left: DataFrame, right: DataFrame, key: String, tsCol: String,
-      watermark: String, beforeMs: Long, afterMs: Long): DataFrame = {
-    val l = left.withWatermark(tsCol, watermark)
-    val r0 = right.columns.foldLeft(right)((d, c) => d.withColumnRenamed(c, c + "_r"))
-    val r = r0.withWatermark(tsCol + "_r", watermark)
-    l.join(r,
-      col(key) === col(key + "_r") &&
-        col(tsCol + "_r") >= col(tsCol) - expr(s"INTERVAL $beforeMs MILLISECONDS") &&
-        col(tsCol + "_r") <= col(tsCol) + expr(s"INTERVAL $afterMs MILLISECONDS"),
-      "leftOuter")
-  }
-
-  /** Stream-static enrichment: every micro-batch joins the static
-    * dimension with an explicit broadcast hint — stateless (nothing to
-    * evict; the static side is re-resolved per batch, so a refreshed
-    * dimension snapshot is picked up on the next batch). The 100 TB
-    * shape: the stream never shuffles, the dimension ships once per
-    * executor. Left join keeps un-enrichable events (null dim columns)
-    * rather than silently dropping them. */
-  def enrichWithStatic(stream: DataFrame, static: DataFrame,
-      streamKey: String, staticKey: String): DataFrame =
-    stream.join(broadcast(static), col(streamKey) === col(staticKey), "left")
 
   /** Streaming CDC maintenance: maintain a keyed table under
     * [[graft.operators.Merge.upsert]] semantics as DELTA dirs plus
@@ -684,42 +430,6 @@ object Streams {
         } finally Seq(shB, bkB, kept).filter(_ != null).foreach(release)
     }
 
-  /** Streaming DECONTAMINATION — the eval-gram-set filter at ingest
-    * time, the streaming twin of [[graft.operators.Contamination.bloomKeep]]:
-    * every micro-batch's documents are probed against a STANDING
-    * benchmark/eval gram index and any document sharing at least one
-    * distinct word n-gram with the eval set is dropped BEFORE the batch
-    * lands in the corpus. The index
-    * ([[graft.operators.Contamination.evalGramIndex]]) is built ONCE at
-    * sink construction — the eval set is fixed for the life of the sink
-    * — so per-batch work is one shingle pass over the batch, a map-side
-    * Bloom probe (the batch's gram table never shuffles), and the exact
-    * verify join that kills Bloom false positives: the drop set is
-    * EXACT per batch.
-    *
-    * Replay safety mirrors [[dedupIngestSink]]'s layout: survivors land
-    * in `targetDir/docs/batch=<batchId>` and a recovering batch
-    * OVERWRITES its own subdirectory — idempotent. (The filter itself is
-    * stateless across batches — the eval set, unlike the dedup index,
-    * never grows — so replay safety is just the per-batch dir.) A
-    * contaminated document is dropped in WHICHEVER batch it arrives,
-    * including re-arrivals in later batches. */
-  def deconIngestSink(stream: DataFrame, idCol: String, textCol: String,
-      bench: DataFrame, benchIdCol: String, benchTextCol: String,
-      targetDir: String, n: Int = 3,
-      expectedGrams: Long = 1L << 17, fpp: Double = 0.03)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Contamination
-    val index = Contamination.evalGramIndex(
-      bench, benchIdCol, benchTextCol, n, expectedGrams, fpp)
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val bad = Contamination.contaminatedIds(batch.toDF(), idCol, textCol, index)
-        batch.join(bad, Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$targetDir/docs/batch=$id")
-    }
-  }
-
   /** Streaming DRIFT MONITOR: every micro-batch is scored with
     * [[graft.operators.Drift.psi]] against a STATIC reference frame
     * (yesterday's corpus, the training distribution) and the one-row
@@ -736,29 +446,6 @@ object Streams {
         val tagged = reference.select(col(valueCol), lit(true).as("__base"))
           .unionByName(batch.select(col(valueCol), lit(false).as("__base")))
         graft.operators.Drift.psi(tagged, valueCol, col("__base"))
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(logDir)
-    }
-
-  /** Streaming CATEGORICAL drift monitor — [[psiMonitor]]'s twin for
-    * enum-shaped columns (language codes, sources, priorities): every
-    * micro-batch is scored with
-    * [[graft.operators.Drift.categoricalPsi]] against the STATIC
-    * reference and the one-row verdict (psi, counts, category count,
-    * batch id) is appended to a parquet log. The share-based tail
-    * pooling inside the operator keeps each batch's category frame
-    * bounded no matter the column's cardinality. The reference is
-    * re-resolved per batch (cache it outside when hot), same as
-    * [[psiMonitor]]. */
-  def categoricalPsiMonitor(stream: DataFrame, reference: DataFrame,
-      valueCol: String, logDir: String, maxShareDenom: Long = 1000)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val tagged = reference.select(col(valueCol), lit(true).as("__base"))
-          .unionByName(batch.select(col(valueCol), lit(false).as("__base")))
-        graft.operators.Drift.categoricalPsi(tagged, valueCol, col("__base"),
-            maxShareDenom = maxShareDenom)
           .withColumn("batch_id", lit(id))
           .write.mode("append").parquet(logDir)
     }
@@ -907,18 +594,11 @@ object Streams {
     * replays pass the current batch id). Resolved through the path's
     * Hadoop FileSystem so remote targets (s3://, hdfs://) work —
     * java.io.File returns null for non-local URIs, which would silently
-    * discard the maintained base table on remote storage. */
-  def latestVersion(targetDir: String, below: Long = Long.MaxValue): Option[String] = {
-    val path = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = path.getFileSystem(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .flatMap(st => scala.util.Try(st.getPath.getName.stripPrefix("v=").toLong)
-        .toOption.filter(_ < below).map(v => (v, st.getPath.toString)))
-      .sortBy(_._1).lastOption.map(_._2)
-  }
+    * discard the maintained base table on remote storage. Completion
+    * markers are not checked ([[latestTable]] is the reader that does). */
+  def latestVersion(targetDir: String, below: Long = Long.MaxValue): Option[String] =
+    dirIds(IndexStore.hadoopFs(SparkSession.active, targetDir), targetDir, "v=")
+      .filter(_._1 < below).maxByOption(_._1).map(_._2.toString)
 
   private val emptyState =
     ProfileState(0L, 0L, 0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)

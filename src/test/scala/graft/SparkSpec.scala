@@ -19,7 +19,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        graft.sources.ScratchDir.create("graft-warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -18,7 +18,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("barrier returns identical rows under local, reliable and persist") {
     val expected = base.collect().map(_.toSeq).toSet
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = graft.sources.ScratchDir.create("graft-ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
     for (strategy <- Seq("local", "reliable", "persist")) {
       spark.conf.set(Materialize.ConfKey, strategy)
@@ -68,7 +68,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("release is harmless under reliable: the checkpoint stays readable") {
     spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      graft.sources.ScratchDir.create("graft-ckpt"))
     withStrategy("reliable") {
       val expected = frame(3).collect().map(_.toSeq).toSet
       val b = frame(3).barrier()

@@ -61,27 +61,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(merges.map(m => (m._2, m._3)) === Seq(("a", "b"), ("c", "d")))
   }
 
-  test("multimodal resize stub always yields exactly outBytes, deterministically") {
-    val df = Multimodal.withPayload(
-      docs((1L, "a much longer payload than the target size"),
-        (2L, "tiny"), (3L, "")), "text", "text/plain")
-    val out = df.select(col("doc_id"), Multimodal.stubResize(col("payload"), 8).as("r"))
-      .orderBy("doc_id").collect().map(r => r.getAs[Array[Byte]](1))
-    assert(out.forall(_.length === 8)) // fixed width incl. shorter-than-target and empty
-    val again = df.select(Multimodal.stubResize(col("payload"), 8))
-      .orderBy(col("doc_id")).collect().map(_.getAs[Array[Byte]](0))
-    assert(out.map(_.toSeq).toSeq === again.map(_.toSeq).toSeq)
-    assert(out(0).toSeq !== out(1).toSeq) // different payloads resample differently
-  }
-
-  test("multimodal byte sampling is deterministic with fixed width") {
-    val df = Multimodal.withPayload(docs((1L, "hello world payload")), "text", "text/plain")
-    val a = df.select(Multimodal.sampleBytes(col("payload"), 4)).head().getSeq[String](0)
-    val b = df.select(Multimodal.sampleBytes(col("payload"), 4)).head().getSeq[String](0)
-    assert(a === b)
-    assert(a.length === 4)
-  }
-
   test("mapPartitions batch decode: init once per partition, bit-identical to the expression stub") {
     val s = spark
     import s.implicits._
@@ -163,15 +142,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out.getString(0) === "hello world from a@b.io now")
     assert(out.getString(1) === "hello world from [REDACTED] now")
     assert(out.getString(2) === "call <num> or 42")
-  }
-
-  test("rolling hash is deterministic and respects content") {
-    val out = docs((1L, "abc"), (2L, "abc"), (3L, "abd"))
-      .select(TextAnalysis.rollingHash(col("text")).as("h")).collect().map(_.getLong(0))
-    assert(out(0) === out(1))
-    assert(out(0) !== out(2))
-    // manual: ((0*31+97)*31+98)*31+99 mod 1e9+7
-    assert(out(0) === ((97L * 31 + 98) * 31 + 99) % 1000000007L)
   }
 
   test("language-ID classifies by trigram-profile overlap, deterministically") {

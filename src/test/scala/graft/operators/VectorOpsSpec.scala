@@ -145,17 +145,6 @@ class VectorOpsSpec extends SparkSpec {
     assert(out.toSeq === Seq((1L, "a", 10.0), (2L, "B", 99.0), (3L, "c", 30.0), (9L, "new", 1.0)))
   }
 
-  test("upsertWithDeletes removes tombstoned keys entirely") {
-    val s = spark
-    import s.implicits._
-    val base = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("k", "x")
-    val upd = Seq((2L, 9.0)).toDF("k", "x")
-    val del = Seq(Tuple1(1L)).toDF("k")
-    val out = Merge.upsertWithDeletes(base, upd, del, Seq("k")).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(out.toSeq === Seq((2L, 9.0), (3L, 3.0)))
-  }
-
   test("scd2 chains versions into valid_from/valid_to with one open current row per key") {
     val s = spark
     import s.implicits._

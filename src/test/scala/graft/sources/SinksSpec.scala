@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,7 +16,7 @@ class SinksSpec extends SparkSpec {
     import s.implicits._
     val df = Seq((1L, "a", 1.5), (2L, "b", -2.25)).toDF("id", "name", "v")
     val pq = tmp("pq"); val csv = tmp("csv"); val js = tmp("js")
-    Sinks.writeParquet(df, pq); Sinks.writeCsv(df, csv); Sinks.writeJson(df, js)
+    df.write.mode(SaveMode.Overwrite).parquet(pq); Sinks.writeCsv(df, csv); Sinks.writeJson(df, js)
     assert(spark.read.parquet(pq).orderBy("id").collect() === df.orderBy("id").collect())
     val backCsv = spark.read.option("header", "true").option("inferSchema", "true").csv(csv)
     assert(backCsv.count() === 2 && backCsv.columns.toSeq === Seq("id", "name", "v"))

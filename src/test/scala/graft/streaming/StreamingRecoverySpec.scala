@@ -78,76 +78,6 @@ class StreamingRecoverySpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("trending monitor restores its Misra-Gries counters from the checkpoint") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Doc]
-    val ckpt = tmpCkpt("mg")
-    val buf = ArrayBuffer[TrendingUpdate]()
-    def monitor = Streams.trendingTermsMonitor(
-      mem.toDF().withColumn("k", org.apache.spark.sql.functions.lit("all")),
-      "k", "text", capacity = 8)
-
-    val q1 = runWithCheckpoint(monitor, ckpt, buf)
-    try {
-      mem.addData(Doc(1L, "alpha alpha beta"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(buf.last.processed === 3L)
-
-    val q2 = runWithCheckpoint(monitor, ckpt, buf)
-    try {
-      mem.addData(Doc(2L, "alpha gamma"))
-      q2.processAllAvailable()
-      val last = buf.synchronized(buf.last)
-      assert(last.processed === 5L,
-        s"processed-token count must continue from state, got ${last.processed}")
-      val counts = last.terms.toMap
-      // MG at capacity 8 over 4 distinct terms is exact
-      assert(counts("alpha") === 3L)
-      assert(counts("beta") === 1L)
-      assert(counts("gamma") === 1L)
-    } finally q2.stop()
-  }
-
-  test("rate monitor restores its trailing hour buckets from the checkpoint") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val ckpt = tmpCkpt("rate")
-    val buf = ArrayBuffer[RateUpdate]()
-    def monitor = Streams.rateMonitor(mem.toDF(), "user_id", "ts", trailingHours = 24)
-
-    // batch 1: baseline hours 10:xx=1, 11:xx=3, 12:xx=2 events
-    val q1 = runWithCheckpoint(monitor, ckpt, buf)
-    try {
-      mem.addData(
-        Ev(ts("2024-01-01 10:00:00"), 1L, 0.0, 1),
-        Ev(ts("2024-01-01 11:00:00"), 1L, 0.0, 2),
-        Ev(ts("2024-01-01 11:10:00"), 1L, 0.0, 3),
-        Ev(ts("2024-01-01 11:20:00"), 1L, 0.0, 4),
-        Ev(ts("2024-01-01 12:00:00"), 1L, 0.0, 5),
-        Ev(ts("2024-01-01 12:10:00"), 1L, 0.0, 6))
-      q1.processAllAvailable()
-    } finally q1.stop()
-
-    // restart, then a 5-event spike in hour 13: baseline must be the
-    // RESTORED {1, 3, 2} buckets -> mean 2, sd 1, z = (5-2)/1 = 3
-    val q2 = runWithCheckpoint(monitor, ckpt, buf)
-    try {
-      mem.addData((1 to 5).map(i =>
-        Ev(ts(s"2024-01-01 13:0$i:00"), 1L, 0.0, 10L + i)): _*)
-      q2.processAllAvailable()
-      val spike = buf.synchronized(
-        buf.filter(u => u.cnt === 5L).last)
-      assert(spike.n_baseline === 3L,
-        s"baseline must come from checkpointed buckets, got ${spike.n_baseline}")
-      assert(spike.z === Some(3.0))
-    } finally q2.stop()
-  }
-
   // ---------------------------------------------------------------- sinks
   //
   // Mid-batch KILL tests for the parquet-maintaining sinks: a poison row
@@ -347,82 +277,5 @@ class StreamingRecoverySpec extends SparkSpec {
         .select("id").distinct().collect().map(_.getLong(0)).toSet
       assert(ids === Set(1L, 2L, 11L, 99L), s"$idx index out of sync: $ids")
     }
-  }
-
-  test("deconIngestSink: a killed batch replays its contamination filter exactly once") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.functions.col
-    implicit val sqlCtx = spark.sqlContext
-    def body(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    val bench = Seq((100L, body("eval"))).toDF("doc_id", "text")
-    val mem = MemoryStream[Doc]
-    val out = tmpDir("decon")
-    val ckpt = tmpCkpt("decon_kill")
-    val flag = s"${tmpDir("decon_flag")}/armed"
-    val poison = poisonOn(flag, badId = 99L)
-    def start() = Streams.deconIngestSink(
-        mem.toDF().filter(poison(col("doc_id"))), "doc_id", "text",
-        bench, "doc_id", "text", out)
-      .option("checkpointLocation", ckpt).start()
-
-    val q1 = start()
-    try {
-      mem.addData(Doc(1L, body("a")))
-      q1.processAllAvailable()
-    } finally q1.stop()
-
-    // batch 1: a contaminated doc (quotes an eval 3-gram), a clean doc,
-    // and the poison doc; first attempt dies
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(flag))
-    mem.addData(Doc(10L, body("eval")), Doc(11L, body("c")), Doc(99L, body("d")))
-    val q2 = start()
-    intercept[Exception] { q2.processAllAvailable() }
-    q2.stop()
-    // torn write: partial batch dir holding one survivor already — the
-    // replay must not double it
-    Seq(Doc(11L, body("c")))
-      .toDF().write.mode("overwrite").parquet(s"$out/docs/batch=1")
-
-    java.nio.file.Files.delete(java.nio.file.Paths.get(flag))
-    val q3 = start()
-    try q3.processAllAvailable() finally q3.stop()
-
-    val corpus = spark.read.parquet(s"$out/docs")
-      .select("doc_id").collect().map(_.getLong(0))
-    assert(corpus.sorted.toSeq === Seq(1L, 11L, 99L),
-      s"contaminated doc dropped, survivors exactly once: ${corpus.toSeq.sorted}")
-  }
-
-  test("engagement monitor restores its decay fold from the checkpoint") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val ckpt = tmpCkpt("eng")
-    val buf = ArrayBuffer[EngagementUpdate]()
-    // half-life 1 day; batch 2's event lands exactly one day after batch
-    // 1's, so the restored sum decays by exactly 1/2
-    def monitor = Streams.engagementMonitor(mem.toDF(), "user_id", "ts", "value", 1.0)
-
-    val q1 = runWithCheckpoint(monitor, ckpt, buf)
-    try {
-      mem.addData(Ev(ts("2024-01-01 10:00:00"), 1L, 4.0, 1))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(buf.last.decayed_sum === 4.0)
-
-    val q2 = runWithCheckpoint(monitor, ckpt, buf)
-    try {
-      mem.addData(Ev(ts("2024-01-02 10:00:00"), 1L, 1.0, 2))
-      q2.processAllAvailable()
-      val last = buf.synchronized(buf.last)
-      assert(last.n_events === 2L,
-        s"event count must continue from state, got ${last.n_events}")
-      // 4.0 halved over one half-life + the new 1.0 at the reference
-      assert(math.abs(last.decayed_sum - 3.0) < 1e-9)
-      assert(last.last_seen_us ===
-        ts("2024-01-02 10:00:00").getTime * 1000L)
-    } finally q2.stop()
   }
 }

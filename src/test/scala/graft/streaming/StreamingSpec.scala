@@ -19,55 +19,6 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("watermarked tumbling aggregation drops events later than the watermark") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val agg = Streams.watermarkedTumbling(
-      mem.toDF(), "ts", "10 minutes", "1 hour", "user_id")
-    val q = agg.writeStream.format("memory").queryName("wm_tumbling")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        Ev(ts("2024-01-01 10:05:00"), 1L, 1.0, 1),
-        Ev(ts("2024-01-01 10:55:00"), 1L, 2.0, 2))
-      q.processAllAvailable()
-      // advance event time far enough to close the 10:00 window
-      mem.addData(Ev(ts("2024-01-01 12:00:00"), 1L, 4.0, 3))
-      q.processAllAvailable()
-      // a late event for the already-closed 10:00 window: dropped
-      mem.addData(Ev(ts("2024-01-01 10:30:00"), 1L, 100.0, 4))
-      q.processAllAvailable()
-      val rows = spark.table("wm_tumbling")
-        .select("wstart", "n", "total_value").orderBy("wstart").collect()
-      assert(rows.length === 1) // only the closed 10:00 window emitted so far
-      assert(rows.head.getTimestamp(0) === ts("2024-01-01 10:00:00"))
-      assert(rows.head.getLong(1) === 2L) // late event NOT counted
-      assert(rows.head.getDouble(2) === 3.0)
-    } finally q.stop()
-  }
-
-  test("streaming dedup within watermark removes re-deliveries, bounded state") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val out = Streams.streamingDedup(mem.toDF(), "ts", "30 minutes", Seq("event_id"))
-    val q = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(
-        Ev(ts("2024-01-01 10:00:00"), 1L, 1.0, 100),
-        Ev(ts("2024-01-01 10:01:00"), 1L, 1.0, 100), // duplicate id
-        Ev(ts("2024-01-01 10:02:00"), 2L, 2.0, 101))
-      q.processAllAvailable()
-      mem.addData(Ev(ts("2024-01-01 10:03:00"), 1L, 1.0, 100)) // re-delivery
-      q.processAllAvailable()
-      assert(spark.table("dedup_stream").count() === 2)
-    } finally q.stop()
-  }
-
   test("streaming session windows merge events within the gap per user") {
     val s = spark
     import s.implicits._
@@ -171,146 +122,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("rate monitor z-scores a spike against its trailing hours across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val monitor = Streams.rateMonitor(mem.toDF(), "user_id", "ts", trailingHours = 24)
-    val q = monitor.writeStream.format("memory").queryName("rate_monitor")
-      .outputMode("update").start()
-    try {
-      // batch 1: a flat baseline — hours 10:00..13:00 at 5 events each
-      val base = for {
-        h <- 10 to 13; i <- 1 to 5
-      } yield Ev(ts(f"2024-01-01 $h%02d:15:00"), 1L, 1.0, (h * 100 + i).toLong)
-      mem.addData(base: _*)
-      q.processAllAvailable()
-      // batch 2: a 25-event spike at 14:00 — z vs {5,5,5,5} (std 0) is
-      // None... so vary the baseline slightly first
-      mem.addData(Ev(ts("2024-01-01 13:40:00"), 1L, 1.0, 9000L))
-      q.processAllAvailable()
-      val spike = (1 to 25).map(i => Ev(ts("2024-01-01 14:05:00"), 1L, 1.0, 9100L + i))
-      mem.addData(spike: _*)
-      q.processAllAvailable()
-      val rows = spark.table("rate_monitor").collect()
-        .map(r => (r.getAs[Long]("hour_us"), r.getAs[Long]("cnt"),
-          r.getAs[Long]("n_baseline"), Option(r.getAs[java.lang.Double]("z"))))
-      val hour14 = ts("2024-01-01 14:00:00").getTime * 1000L
-      val spikeRow = rows.filter(_._1 == hour14).last
-      assert(spikeRow._2 === 25L, "spike hour count")
-      assert(spikeRow._3 === 4L, "baseline = the 4 trailing hours in state")
-      // baseline {5,5,5,6}: mean 5.25, std 0.5 → z = (25 − 5.25)/0.5 = 39.5
-      assert(spikeRow._4.exists(z => math.abs(z - 39.5) < 1e-9), s"z was ${spikeRow._4}")
-      // the flat-baseline emission for hour 13 (batch 2) had std 0 → z None
-      val hour13 = ts("2024-01-01 13:00:00").getTime * 1000L
-      val h13 = rows.filter(_._1 == hour13).last
-      assert(h13._2 === 6L && h13._4.isEmpty, "flat baseline yields no z")
-    } finally q.stop()
-  }
-
-  test("rate monitor evicts hours beyond the trailing span (bounded state)") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val monitor = Streams.rateMonitor(mem.toDF(), "user_id", "ts", trailingHours = 2)
-    val q = monitor.writeStream.format("memory").queryName("rate_monitor_evict")
-      .outputMode("update").start()
-    try {
-      mem.addData(Ev(ts("2024-01-01 00:30:00"), 1L, 1.0, 1L),
-        Ev(ts("2024-01-01 01:30:00"), 1L, 1.0, 2L))
-      q.processAllAvailable()
-      // jump far ahead: hour 10 — hours 0 and 1 must evict, so its
-      // baseline is empty; and a LATE event for hour 0 is now dropped
-      mem.addData(Ev(ts("2024-01-01 10:00:00"), 1L, 1.0, 3L))
-      q.processAllAvailable()
-      mem.addData(Ev(ts("2024-01-01 00:45:00"), 1L, 1.0, 4L)) // too old
-      q.processAllAvailable()
-      val rows = spark.table("rate_monitor_evict").collect()
-        .map(r => (r.getAs[Long]("hour_us"), r.getAs[Long]("cnt"), r.getAs[Long]("n_baseline")))
-      val hour10 = ts("2024-01-01 10:00:00").getTime * 1000L
-      assert(rows.filter(_._1 == hour10).last._3 === 0L, "evicted baseline")
-      val hour0 = ts("2024-01-01 00:00:00").getTime * 1000L
-      // the late event beyond the span emitted nothing new for hour 0
-      assert(!rows.exists(r => r._1 == hour0 && r._2 == 2L), "late drop")
-    } finally q.stop()
-  }
-
-  test("trending monitor keeps MG guarantees across micro-batches with bounded state") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Doc]
-    val cap = 8
-    val monitor = Streams.trendingTermsMonitor(
-      mem.toDF().withColumn("k", lit("all")), "k", "text", capacity = cap)
-    val q = monitor.writeStream.format("memory").queryName("trending")
-      .outputMode("update").start()
-    // far more distinct terms than capacity; "hot" dominates batch 1,
-    // "surge" takes over in batch 2
-    def doc(id: Long, words: Seq[String]) = Doc(id, words.mkString(" "))
-    val rnd = new scala.util.Random(31)
-    def noise(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(500)}")
-    try {
-      mem.addData((0L until 20L).map(i => doc(i, Seq.fill(12)("hot") ++ noise(8))): _*)
-      q.processAllAvailable()
-      val b1 = spark.table("trending").orderBy("processed").collect().last
-      val terms1 = b1.getSeq[Row](b1.fieldIndex("terms")).map(r => (r.getString(0), r.getLong(1)))
-      assert(b1.getAs[Long]("processed") === 400L)
-      assert(terms1.size <= cap)
-      assert(terms1.head._1 === "hot") // 240/400 — far above the n/(cap+1) blind spot
-      assert(terms1.head._2 <= 240L)   // MG counts are lower bounds
-      // batch 2: a new term surges; the standing state must admit it
-      mem.addData((100L until 140L).map(i => doc(i, Seq.fill(15)("surge") ++ noise(5))): _*)
-      q.processAllAvailable()
-      val b2 = spark.table("trending").orderBy("processed").collect().last
-      val terms2 = b2.getSeq[Row](b2.fieldIndex("terms")).map(r => (r.getString(0), r.getLong(1)))
-      assert(b2.getAs[Long]("processed") === 1200L)
-      assert(terms2.size <= cap)
-      val asMap = terms2.toMap
-      // both true heavies (hot 240/1200=20%, surge 600/1200=50%) survive:
-      // each clears the 1/(cap+1)=11% blind spot of the full stream
-      assert(asMap.contains("surge") && asMap.contains("hot"))
-      assert(asMap("surge") <= 600L && asMap("hot") <= 240L)
-      // lower-bound error is within the MG guarantee n/(cap+1)
-      assert(600L - asMap("surge") <= 1200L / (cap + 1))
-    } finally q.stop()
-  }
-
-  test("evicting profile drops state for keys idle past the watermark horizon") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    // 10-minute watermark, 1-hour idle gap
-    val profiles = Streams.incrementalProfileEvicting(
-      mem.toDF(), "ts", "10 minutes", "user_id", "value", idleGapMs = 3600 * 1000L)
-    val q = profiles.writeStream.format("memory").queryName("inc_profile_evict")
-      .outputMode("update").start()
-    try {
-      mem.addData(
-        Ev(ts("2024-01-01 10:00:00"), 1L, 2.0, 1),
-        Ev(ts("2024-01-01 10:01:00"), 1L, 4.0, 2),
-        Ev(ts("2024-01-01 10:00:00"), 2L, 1.0, 3))
-      q.processAllAvailable()
-      // key 2 keeps flowing; key 1 goes silent. Watermark moves to 12:50,
-      // far past key 1's timeout (10:01 + 1h) -> its state is evicted.
-      mem.addData(Ev(ts("2024-01-01 13:00:00"), 2L, 1.0, 4))
-      q.processAllAvailable()
-      mem.addData(Ev(ts("2024-01-01 13:01:00"), 2L, 1.0, 5)) // let the timeout batch run
-      q.processAllAvailable()
-      // key 1 comes back: a fresh profile, NOT a continuation
-      mem.addData(Ev(ts("2024-01-01 13:02:00"), 1L, 10.0, 6))
-      q.processAllAvailable()
-      val key1 = spark.table("inc_profile_evict").filter($"key" === "1")
-        .select("count", "mean").collect().map(r => (r.getLong(0), r.getDouble(1)))
-      assert(key1.contains((2L, 3.0)))  // pre-eviction profile of [2,4]
-      assert(key1.contains((1L, 10.0))) // restarted from zero after eviction
-      assert(!key1.exists(_._1 === 3L)) // never merged across the eviction
-    } finally q.stop()
-  }
-
   test("file-source stream: hourly aggregation over the events parquet") {
     val dir = java.nio.file.Files.createTempDirectory("evstream")
     java.nio.file.Files.copy(
@@ -370,69 +181,6 @@ class StreamingSpec extends SparkSpec {
         .filter($"user_id" < 9).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(rows.toSet === Set((1L, 10L, 11L)))
-    } finally q.stop()
-  }
-
-  test("left-outer interval join emits unmatched lefts with nulls after the watermark passes") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val orders = MemoryStream[Ev]
-    val payments = MemoryStream[Ev]
-    // payments join their order within [0, 10 min]; an order with no
-    // payment must still surface (null right) once provably unmatched
-    val joined = Streams.intervalJoinLeftOuter(
-      orders.toDF(), payments.toDF(), "user_id", "ts", "5 minutes",
-      beforeMs = 0L, afterMs = 10 * 60 * 1000L)
-      .select(col("user_id"), col("event_id"), col("event_id_r"))
-    val q = joined.writeStream.format("memory").queryName("ss_left_join")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      orders.addData(
-        Ev(ts("2024-01-01 10:00:00"), 1L, 1.0, 10), // will be paid in time
-        Ev(ts("2024-01-01 10:00:00"), 2L, 1.0, 20)) // never paid in window
-      payments.addData(
-        Ev(ts("2024-01-01 10:05:00"), 1L, 1.0, 11),
-        Ev(ts("2024-01-01 10:30:00"), 2L, 1.0, 21)) // too late to match
-      q.processAllAvailable()
-      // push both watermarks far past the join window so the engine can
-      // PROVE order 20 is unmatched and emit its null row
-      orders.addData(Ev(ts("2024-01-01 12:00:00"), 9L, 1.0, 90))
-      payments.addData(Ev(ts("2024-01-01 12:00:00"), 9L, 1.0, 91))
-      q.processAllAvailable()
-      val rows = spark.table("ss_left_join")
-        .filter($"user_id" < 9).collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2)))
-      assert(rows.toSet === Set((1L, 10L, 11L), (2L, 20L, -1L)),
-        s"matched pair + null-padded unmatched order: ${rows.toSeq}")
-    } finally q.stop()
-  }
-
-  test("stream-static broadcast enrichment joins each micro-batch, keeps unmatched events") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val dims = Seq((1L, "gold"), (2L, "silver")).toDF("dim_user", "segment")
-    val enriched = Streams.enrichWithStatic(mem.toDF(), dims, "user_id", "dim_user")
-      .select("event_id", "user_id", "segment")
-    val q = enriched.writeStream.format("memory").queryName("enriched")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(Ev(ts("2024-01-01 10:00:00"), 1L, 1.0, 1))
-      q.processAllAvailable()
-      mem.addData(
-        Ev(ts("2024-01-01 10:01:00"), 2L, 1.0, 2),
-        Ev(ts("2024-01-01 10:02:00"), 99L, 1.0, 3)) // no dim row
-      q.processAllAvailable()
-      val rows = spark.table("enriched").collect()
-        .map(r => (r.getLong(0), Option(r.getString(2)))).toSet
-      assert(rows === Set((1L, Some("gold")), (2L, Some("silver")), (3L, None)))
-      // the per-batch plan must broadcast the dimension, not shuffle the stream
-      val plan = spark.table("enriched").sparkSession.streams.active
-        .find(_.name == "enriched").get.lastProgress
-      assert(plan != null)
     } finally q.stop()
   }
 
@@ -685,38 +433,6 @@ class StreamingSpec extends SparkSpec {
       s"novel docs kept, every planted near-dup dropped: $probe")
   }
 
-  test("deconIngestSink drops planted contaminated docs across batch boundaries") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def body(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    // the eval set: one benchmark document whose 3-grams are the poison
-    val bench = Seq((100L, body("eval"))).toDF("doc_id", "text")
-    val mem = MemoryStream[Doc]
-    val out = java.nio.file.Files.createTempDirectory("stream_decon").toString
-    val q = Streams.deconIngestSink(mem.toDF(), "doc_id", "text",
-      bench, "doc_id", "text", out).start()
-    try {
-      def corpus() = spark.read.parquet(s"$out/docs")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      // batch 0: clean doc + a doc quoting an eval 3-gram mid-text
-      mem.addData(Doc(1L, body("a")),
-        Doc(2L, "prefix words eval3 eval4 eval5 suffix here"))
-      q.processAllAvailable()
-      assert(corpus() === Set(1L), s"batch-0 contaminated doc must drop: ${corpus()}")
-      // batch 1 (across the boundary): another contaminated doc — the
-      // standing eval index, not per-batch state, must catch it — plus a
-      // clean doc sharing no gram
-      mem.addData(Doc(10L, body("eval")), Doc(11L, body("c")))
-      q.processAllAvailable()
-      assert(corpus() === Set(1L, 11L), s"batch-1 contaminated doc must drop: ${corpus()}")
-      // sub-n overlap is NOT contamination: 2 shared words, no shared 3-gram
-      mem.addData(Doc(20L, "eval1 eval2 unrelated tail words padding four"))
-      q.processAllAvailable()
-      assert(corpus() === Set(1L, 11L, 20L), s"2-word overlap must survive: ${corpus()}")
-    } finally q.stop()
-  }
-
   test("noveltyMonitor seen-set flip: identical log to the full-shuffle anti-join") {
     val s = spark
     import s.implicits._
@@ -916,31 +632,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("categoricalPsiMonitor flags a category-mix break vs a static reference") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Doc]
-    val log = java.nio.file.Files.createTempDirectory("catpsi_log").toString
-    // reference: four languages in equal shares (text plays the category)
-    val ref = (0 until 100).map(i => s"lang_${i % 4}").toDF("text")
-    val q = Streams.categoricalPsiMonitor(mem.toDF(), ref, "text", log).start()
-    try {
-      // batch 0 matches the reference mix; batch 1 collapses to one value
-      mem.addData((0 until 100).map(i => Doc(i.toLong, s"lang_${i % 4}")): _*)
-      q.processAllAvailable()
-      mem.addData((0 until 100).map(i => Doc(i.toLong, "lang_0")): _*)
-      q.processAllAvailable()
-      val logged = spark.read.parquet(log)
-        .select("batch_id", "psi", "n_categories").collect()
-        .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
-      assert(logged.size === 2)
-      assert(logged(0L)._1 < 0.01, s"matching mix must be stable: ${logged(0L)}")
-      assert(logged(1L)._1 > 0.25, s"collapsed mix must flag a break: ${logged(1L)}")
-      assert(logged(0L)._2 === 4L)
-    } finally q.stop()
-  }
-
   test("batch and streaming session windows agree on the same data") {
     val s = spark
     import s.implicits._
@@ -951,70 +642,5 @@ class StreamingSpec extends SparkSpec {
     val out = Streams.sessionAgg(batch, "ts", "10 minutes", "user_id")
       .orderBy("session_start").collect()
     assert(out.map(_.getLong(2)).toSeq === Seq(2L, 1L))
-  }
-
-  test("engagement monitor folds exact half-life decay across batches; late events self-decay") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val t0 = ts("2024-01-02 00:00:00")
-    val t7 = ts("2024-01-09 00:00:00") // exactly one 7-day half-life later
-    val monitor = Streams.engagementMonitor(mem.toDF(), "user_id", "ts", "value", 7.0)
-    val q = monitor.writeStream.format("memory").queryName("engagement")
-      .outputMode("update").start()
-    try {
-      mem.addData(Ev(t0, 1L, 8.0, 1), Ev(t0, 2L, 4.0, 2))
-      q.processAllAvailable()
-      val b1 = spark.table("engagement").collect()
-        .map(r => r.getString(0) -> r.getDouble(2)).toMap
-      assert(math.abs(b1("1") - 8.0) < 1e-9 && math.abs(b1("2") - 4.0) < 1e-9)
-      // batch 2: user 1 advances one half-life (8 -> 4, +10) and then a
-      // LATE event at t0 arrives, decaying itself (2 -> 1)
-      mem.addData(Ev(t7, 1L, 10.0, 3), Ev(t0, 1L, 2.0, 4))
-      q.processAllAvailable()
-      val b2 = spark.table("engagement").collect()
-        .filter(_.getString(0) == "1").maxBy(_.getLong(1))
-      assert(b2.getLong(1) === 3L)
-      assert(math.abs(b2.getDouble(2) - (8.0 * 0.5 + 10.0 + 2.0 * 0.5)) < 1e-9,
-        s"got ${b2.getDouble(2)}")
-      assert(b2.getLong(3) === t7.getTime * 1000L)
-      // the folded state equals the batch operator on the same events
-      // (user 1's last-seen IS the global max ts, so references coincide)
-      val batch = Seq(Ev(t0, 1L, 8.0, 1), Ev(t7, 1L, 10.0, 3), Ev(t0, 1L, 2.0, 4)).toDF()
-      val ref = graft.operators.Stats.decayedSum(batch, "user_id", "ts", "value", 7.0)
-        .head()
-      assert(math.abs(ref.getDouble(2) - b2.getDouble(2)) < 1e-9)
-    } finally q.stop()
-  }
-
-  test("engagement monitor stays silent for keys that have only null events") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // Row-typed stream so ts can actually be null per event.
-    val mem = MemoryStream[(String, Option[Timestamp], Option[Double])]
-    val t0 = ts("2024-01-02 00:00:00")
-    val monitor = Streams.engagementMonitor(
-      mem.toDF().toDF("user_id", "ts", "value"), "user_id", "ts", "value", 7.0)
-    val q = monitor.writeStream.format("memory").queryName("engagement_null")
-      .outputMode("update").start()
-    try {
-      // key "n" never folds a valid event — no update may leak the
-      // Long.MinValue last_seen sentinel; key "1" emits normally.
-      mem.addData(("n", None, Some(1.0)), ("n", Some(t0), None),
-        ("1", Some(t0), Some(8.0)))
-      q.processAllAvailable()
-      val rows = spark.table("engagement_null").collect()
-      assert(rows.map(_.getString(0)).toSet === Set("1"))
-      // once a real event arrives, the key surfaces with n counting only
-      // the valid folds
-      mem.addData(("n", Some(t0), Some(2.0)))
-      q.processAllAvailable()
-      val n = spark.table("engagement_null").collect()
-        .filter(_.getString(0) == "n")
-      assert(n.length === 1 && n.head.getLong(1) === 1L &&
-        n.head.getLong(3) === t0.getTime * 1000L)
-    } finally q.stop()
   }
 }

@@ -5,21 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Dev-only SUSTAINED-STREAM evidence harness (VERDICT r12 #4): the
-  * stateful monitors and ingest sinks are correctness-proven (23
-  * StreamingSpec cases + kill-and-replay recovery), but their 100 TB
+  * stateful monitors and ingest sinks are correctness-proven
+  * (StreamingSpec + kill-and-replay recovery), but their 100 TB
   * claim — per-key state stays O(keys × sketch) FLAT over an unbounded
   * stream, and throughput does not sag as state ages — was argued from
-  * big-O, never measured. This drives three production shapes through
+  * big-O, never measured. This drives the monitors and sinks through
   * ~100 MemoryStream micro-batches and records per-batch wall time plus
   * the state store's own accounting (`lastProgress.stateOperators`:
-  * numRowsTotal / stateMemory), or the on-disk index footprint for the
-  * foreachBatch ingest sink:
+  * numRowsTotal / stateMemory) for the keyed monitor, or the on-disk
+  * footprint for the foreachBatch sinks. Scenarios: quantile_monitor,
+  * dedup_ingest, novelty_monitor, psi_monitor and upsert_maintain; for
+  * example:
   *
   *  - quantile_monitor: KLL(k=200) per key via mapGroupsWithState — the
   *    sketch is size-capped, so state bytes must PLATEAU once every key
   *    has been seen, no matter how many rows stream through.
-  *  - trending_terms: Misra–Gries(256) per key — counter map capped at
-  *    capacity, same plateau contract.
   *  - dedup_ingest: the LSH dedup sink — state is the on-disk
   *    shingle/band index, which GROWS with unique kept docs by design;
   *    the measured claim is that per-batch latency grows sub-linearly
@@ -108,42 +108,6 @@ object StreamBench {
       report("quantile_monitor", secs.result(),
         batches.toLong * rowsPerBatch, stRows.result(), stBytes.result())
       spark.catalog.dropTempView("sb_quantile")
-    }
-
-    // ----- 2. trendingTermsMonitor: Misra–Gries(256) per key ------------
-    if (wanted("trending_terms")) {
-      val vocab = (0 until 2000).map(i => s"w$i")
-      def text(): String =
-        // zipf-ish: low ids dominate, the MG counters see real contention
-        (0 until 10).map { _ =>
-          vocab(math.min(vocab.size - 1,
-            (math.pow(rnd.nextDouble(), 3) * vocab.size).toInt))
-        }.mkString(" ")
-      val mem = MemoryStream[(String, String)]
-      val q = graft.streaming.Streams
-        .trendingTermsMonitor(mem.toDF().toDF("k", "text"), "k", "text",
-          capacity = 256)
-        .writeStream.format("memory").queryName("sb_trending")
-        .outputMode(OutputMode.Update()).start()
-      val secs = Vector.newBuilder[Double]
-      val stRows = Vector.newBuilder[Long]
-      val stBytes = Vector.newBuilder[Long]
-      val docsPerBatch = math.max(200, rowsPerBatch / 10)
-      try {
-        (0 until batches).foreach { _ =>
-          mem.addData((0 until docsPerBatch).map(_ =>
-            (s"k${rnd.nextInt(keys)}", text())))
-          val t0 = System.nanoTime()
-          q.processAllAvailable()
-          secs += (System.nanoTime() - t0) / 1e9
-          val so = q.lastProgress.stateOperators
-          stRows += so.map(_.numRowsTotal).sum
-          stBytes += so.map(_.memoryUsedBytes).sum
-        }
-      } finally q.stop()
-      report("trending_terms", secs.result(),
-        batches.toLong * docsPerBatch, stRows.result(), stBytes.result())
-      spark.catalog.dropTempView("sb_trending")
     }
 
     // ----- 3. dedupIngestSink: on-disk LSH index, foreachBatch ----------
@@ -393,115 +357,6 @@ object StreamBench {
         s""""pending_deltas":$pending,"reads":20,""" +
         s""""sec_per_read_med":${r3(med(readSecs))},""" +
         s""""reads_per_sec":${r3(1.0 / med(readSecs))}}""")
-    }
-
-    // ----- 3e. rateMonitor: trailing-hour z-scores, bounded keyed state -
-    // State is O(keys × trailingHours) by eviction; the longevity claim
-    // (VERDICT r15 #5) is FLAT latency + plateaued state over a stream
-    // whose event time advances continuously.
-    if (wanted("rate_monitor")) {
-      val mem = MemoryStream[(String, java.sql.Timestamp)]
-      val q = graft.streaming.Streams
-        .rateMonitor(mem.toDF().toDF("k", "ts"), "k", "ts", trailingHours = 24)
-        .writeStream.format("memory").queryName("sb_rate")
-        .outputMode(OutputMode.Update()).start()
-      val secs = Vector.newBuilder[Double]
-      val stRows = Vector.newBuilder[Long]
-      val stBytes = Vector.newBuilder[Long]
-      val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
-      try {
-        (0 until batches).foreach { b =>
-          // each batch advances ~20 min; counts vary so z has variance
-          mem.addData((0 until rowsPerBatch).map { i =>
-            (s"k${rnd.nextInt(keys)}", java.sql.Timestamp.from(
-              base.plusSeconds(b * 1200L + rnd.nextInt(1200))))
-          })
-          val t0 = System.nanoTime()
-          q.processAllAvailable()
-          secs += (System.nanoTime() - t0) / 1e9
-          val so = q.lastProgress.stateOperators
-          stRows += so.map(_.numRowsTotal).sum
-          stBytes += so.map(_.memoryUsedBytes).sum
-        }
-      } finally q.stop()
-      report("rate_monitor", secs.result(),
-        batches.toLong * rowsPerBatch, stRows.result(), stBytes.result())
-      spark.catalog.dropTempView("sb_rate")
-    }
-
-    // ----- 3f. engagementMonitor: 3-number decayed state per key --------
-    if (wanted("engagement_monitor")) {
-      val mem = MemoryStream[(String, java.sql.Timestamp, Double)]
-      val q = graft.streaming.Streams
-        .engagementMonitor(mem.toDF().toDF("k", "ts", "v"), "k", "ts", "v",
-          halfLifeDays = 7.0)
-        .writeStream.format("memory").queryName("sb_engage")
-        .outputMode(OutputMode.Update()).start()
-      val secs = Vector.newBuilder[Double]
-      val stRows = Vector.newBuilder[Long]
-      val stBytes = Vector.newBuilder[Long]
-      val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
-      try {
-        (0 until batches).foreach { b =>
-          mem.addData((0 until rowsPerBatch).map { _ =>
-            (s"k${rnd.nextInt(keys)}", java.sql.Timestamp.from(
-              base.plusSeconds(b * 600L + rnd.nextInt(600))),
-              rnd.nextDouble())
-          })
-          val t0 = System.nanoTime()
-          q.processAllAvailable()
-          secs += (System.nanoTime() - t0) / 1e9
-          val so = q.lastProgress.stateOperators
-          stRows += so.map(_.numRowsTotal).sum
-          stBytes += so.map(_.memoryUsedBytes).sum
-        }
-      } finally q.stop()
-      report("engagement_monitor", secs.result(),
-        batches.toLong * rowsPerBatch, stRows.result(), stBytes.result())
-      spark.catalog.dropTempView("sb_engage")
-    }
-
-    // ----- 4. evicting profile: UNBOUNDED key space, bounded state ------
-    // Every batch mints brand-new keys and advances event time one
-    // minute; the 5-minute idle horizon must evict old keys as the
-    // watermark passes, so state rows plateau at O(active keys within
-    // the horizon) — NOT O(keys ever seen). This is the difference
-    // between a bounded and an unbounded state store on a 100 TB
-    // stream; the monitor itself is incrementalProfileEvicting
-    // (EventTimeTimeout + watermark), recovery-proven in specs.
-    if (wanted("evicting_profile")) {
-      val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-      val q = graft.streaming.Streams
-        .incrementalProfileEvicting(
-          mem.toDF().toDF("ts", "k", "v"), "ts", "2 minutes", "k", "v",
-          idleGapMs = 5 * 60 * 1000L)
-        .writeStream.format("memory").queryName("sb_evict")
-        .outputMode(OutputMode.Update()).start()
-      val secs = Vector.newBuilder[Double]
-      val stRows = Vector.newBuilder[Long]
-      val stBytes = Vector.newBuilder[Long]
-      val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
-      val keysPerBatch = math.max(10, keys / 5)
-      try {
-        (0 until batches).foreach { b =>
-          val t = java.sql.Timestamp.from(base.plusSeconds(b * 60L))
-          mem.addData((0 until rowsPerBatch).map { i =>
-            (t, s"b${b}_k${i % keysPerBatch}", rnd.nextGaussian() + b)
-          })
-          val t0 = System.nanoTime()
-          q.processAllAvailable()
-          secs += (System.nanoTime() - t0) / 1e9
-          val so = q.lastProgress.stateOperators
-          stRows += so.map(_.numRowsTotal).sum
-          stBytes += so.map(_.memoryUsedBytes).sum
-        }
-      } finally q.stop()
-      val rows = stRows.result()
-      // visibility: keys ever seen vs the plateau the store actually holds
-      println(s"""{"scenario_note":"evicting_profile","keys_ever_seen":${
-        batches * keysPerBatch},"state_rows_max":${rows.max}}""")
-      report("evicting_profile", secs.result(),
-        batches.toLong * rowsPerBatch, rows, stBytes.result())
     }
 
     spark.stop()
