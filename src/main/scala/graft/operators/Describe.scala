@@ -1,10 +1,7 @@
 package graft.operators
 
 import scala.collection.immutable.ListMap
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
@@ -39,9 +36,9 @@ import graft.plans.WeightedPercentileAgg.weightedPercentile
   *     pass 1: mixing a distinct aggregate and an imperative percentile
   *     in one agg forces an Expand-based plan that benched 2-6x slower
   *     than running the pieces separately (57s vs ~15s at sf0.1), and a
-  *     single-reducer percentile cannot scale. Instead every
-  *     long/double/string-family column is unpivoted into ONE typed
-  *     `(c, vl, vd, vs)` relation and counted into ONE two-phase
+  *     single-reducer percentile cannot scale. Instead every column is
+  *     unpivoted into ONE typed `(c, vl, vd, vs, ...)` relation
+  *     ([[slotOf]]) and counted into ONE two-phase
   *     frequency table — a scalable hash aggregation that shuffles only
   *     distinct values — from which one job (job A) reads distinct_count,
   *     mad and, per family, the frequency-weighted exact percentile over
@@ -50,9 +47,10 @@ import graft.plans.WeightedPercentileAgg.weightedPercentile
   *     `percentile`'s exact arithmetic, without its boxed hash map).
   *     Columns whose distinct count pass 1 cannot bound read the same
   *     table again (a weighted-percentile job or the distributed bracket
-  *     chain). Columns outside the families (decimals, arrays) get
-  *     per-column frequency jobs with the same weighted percentile; they
-  *     and the family table run concurrently on a fixed driver pool.
+  *     chain). Decimals, vectors and binaries join the same table (in a
+  *     slot of their own type, a float vector as a string key), so the
+  *     number of jobs does not grow with the number of columns, and every
+  *     quantile stays exact at any cardinality.
   *  3. `approximate = true` (the 100 TB mode) folds distinct + quantiles
   *     back into pass 1 as mergeable sketches (HLL++
   *     `approx_count_distinct`, KLL quantiles
@@ -119,18 +117,7 @@ object Describe {
   private def wantsQuantiles(st: SemanticType) =
     st == SemanticType.Date || st == SemanticType.Numeric
 
-  /** Exact-percentile guard (SURVEY.md §4.2): a column's exact
-    * frequency-weighted percentile puts its whole distinct-value set into
-    * ONE percentile buffer — fine at oracle scale, an OOM
-    * for a near-unique column at 100 TB. Above this many distinct values
-    * the quantiles fall back to the mergeable KLL sketch
-    * ([[graft.plans.KllSketchAgg]]), same as `approximate = true`; distinct_count
-    * stays exact either way (the frequency table is a scalable hash agg).
-    * ~4M doubles ≈ a few hundred MB of buffer — the default keeps well
-    * under a normal executor's headroom. */
-  val DefaultExactQuantileMaxDistinct: Long = 4L * 1000 * 1000
-
-  /** Family-path quantile ROUTING bound (performance, not correctness —
+  /** Quantile ROUTING bound (performance, not correctness —
     * both routes are exact): columns whose distinct count is PROVABLY at
     * or under this — via the free static bound min(n, max-min+1 for
     * integral/date values) — ride the weighted percentile inside job A
@@ -145,7 +132,6 @@ object Describe {
       df: DataFrame,
       columns: Seq[String],
       approximate: Boolean = false,
-      exactQuantileMaxDistinct: Long = DefaultExactQuantileMaxDistinct,
       percentileBufferMaxDistinct: Long = PercentileBufferMaxDistinct): Seq[ColumnProfile] = {
     // NOT widened via Parallelize.cpuBound: the pass-1 aggregates carry
     // FP-accumulating stats (mean/std/mad) whose rounded values sit on
@@ -166,19 +152,14 @@ object Describe {
 
     // ---- pass 2 (exact mode): one frequency table ---------------------
     // distinct_count + frequency-weighted exact percentile + mad. Every
-    // family column (see slotOf) is UNPIVOTED into ONE typed
-    // (c, vl, vd, vs) relation, so the pass is one scan and one job A
-    // whatever the mix of types (one scan per type family, run one after
-    // another, cost 3 chains of 3 AQE jobs on an 11-column table).
-    // Columns outside the families (arrays, decimals) get per-column
-    // frequency jobs, run concurrently with the family table's.
+    // column is UNPIVOTED into ONE typed (c, vl, vd, vs, ...) relation
+    // (see slotOf), so the pass is one scan and one job A whatever the
+    // mix of types, and its job count does not grow with the columns.
+    val members = if (approximate) Nil else columns.filter(c => wantsDistinct(static(c)))
     val freqStats: Map[String, FreqStat] =
-      if (approximate) Map.empty
+      if (members.isEmpty) Map.empty
       else {
-        val want = columns.filter(c => wantsDistinct(static(c)))
-        val (family, rest) = want.partition(c => slotOf(fields(c)).isDefined)
-
-        // mad rides the frequency tables (exact mode): avg(|x - mean|)
+        // mad rides the frequency table (exact mode): avg(|x - mean|)
         // over rows == sum(f·|v - mean|)/sum(f) over the distinct table,
         // so the dedicated pass-3 full scan disappears — the distinct
         // table is never larger than the data and usually far smaller.
@@ -210,197 +191,146 @@ object Describe {
               .getOrElse(false)
           }
 
-        def familyStats(members: Seq[String]): Seq[(String, FreqStat)] = {
-          def unpivoted(name: String): Seq[Column] = {
-            val (slot, v) = slotOf(fields(name)).get
-            lit(name).as("c") +: Slots.map { case (s, t) =>
-              (if (s == slot) v else lit(null).cast(t)).as(s)
-            }
-          }
-          // single member: plain projection, no explode machinery (r17 —
-          // describe_numeric/long/date profile exactly one column; the
-          // 1-element array explode bought nothing)
-          val pairs = (members match {
-            case Seq(one) => df.select(unpivoted(one): _*)
-            case _ =>
-              df.select(explode(array(members.map(m => struct(unpivoted(m): _*)): _*)).as("p"))
-                .select("p.*")
-          }).filter(Slots.map { case (s, _) => col(s).isNotNull }.reduce(_ || _))
-          // Exact type-7 quantiles, routed in two FREE tiers (both routes
-          // are exact, so routing can never change a value):
-          //  - PROVABLY-small columns — static bound min(n, max-min+1 for
-          //    integral/date values, all known from pass 1) at or under
-          //    PercentileBufferMaxDistinct — ride job A's weighted
-          //    percentile directly: no extra job, bounded buffer;
-          //  - AMBIGUOUS columns (high-n doubles, wide-range longs) are
-          //    routed by the EXACT distinct count job A computes anyway:
-          //    actually-small ones get one extra weighted-percentile job
-          //    over the CACHED freq blocks (sub-bound rows, ~ms), and
-          //    truly-large ones go DISTRIBUTED: Packing.weightedQuantiles
-          //    brackets the ≤ 2·|probs| rows covering the needed order
-          //    statistics of the (c, v, f) table and interpolates them
-          //    driver-side (Spark Percentile / DuckDB quantile_cont
-          //    parity). No buffer ever holds a whole
-          //    column's distinct set, at ANY cardinality — this path
-          //    needs no sketch fallback.
-          // Rejected alternatives, each measured at sf0.1: a dedicated
-          // HLL routing job ≈ one extra full scan per profile; HLL riding
-          // pass 1 knocks the wide agg out of whole-stage codegen (the
-          // 4-column profile went 1.6 s -> 3.7 s); exact-d routing for
-          // EVERY column forces persist + a second round trip on the
-          // provably-small majority.
-          val (smallQ, ambigQ) = members.filter(m => wantsQuantiles(static(m)))
-            .partition(provablySmall)
-          val freq0 = pairs.groupBy("c", Slots.map(_._1): _*).agg(count(lit(1)).as("f"))
-          // localCheckpoint, not persist (r17): the cached-plan form
-          // pinned every consumer stage (job A, tier-2 percentile, the
-          // bracket chain) at full shuffle width — AQE cannot coalesce
-          // through a persisted subplan — measured as 145 tasks for the
-          // one-column numeric profile; the checkpoint materializes
-          // with AQE-coalesced partitions and the same three consumers
-          // read its blocks. Only ambiguous columns add those consumers.
-          val freq = if (ambigQ.nonEmpty) freq0.barrier() else freq0
-          try {
-            // one percentile column per family, each over that family's
-            // own typed value: no value is coerced into another family
-            def percentiles(qs: Seq[String]): Seq[Column] = Seq("vl", "vd").flatMap { s =>
-              val mine = qs.filter(q => slotOf(fields(q)).exists(_._1 == s))
-              if (mine.isEmpty) None
-              else Some(weightedPercentile(when(col("c").isin(mine: _*), col(s)),
-                QuantilePs, col("f")).as(s"q$s"))
-            }
-            def quantilesIn(r: Row): Option[Seq[Any]] = Seq("qvl", "qvd").collectFirst {
-              case k if r.schema.fieldNames.contains(k) && !r.isNullAt(r.fieldIndex(k)) =>
-                r.getAs[scala.collection.Seq[Any]](k).toSeq
-            }
-            // the numeric value as a double: mad and the bracket chain
-            // read it (strings are null here)
-            val x = coalesce(col("vl").cast(DoubleType), col("vd"))
-            val madMembers = members.flatMap(m => madMeanOf(m).map(m -> _))
-            // job A — ONE aggregation over the freq table: distinct
-            // counts, small-column percentiles, large-column row counts
-            // and value bounds (feeding the bracket chain), and mad;
-            // each group's mad uses its own pass-1 mean
-            val madAgg =
-              if (madMembers.isEmpty) Nil
-              else {
-                val meanExpr = coalesce(madMembers.map { case (m, mean) =>
-                  when(col("c") === lit(m), lit(mean)) }: _*)
-                Seq((sum(col("f") * abs(x - meanExpr)) /
-                  sum(when(meanExpr.isNotNull, col("f")))).as("mad"))
-              }
-            // finite-only bounds over the clamped proxy: the root interval
-            // of each column's bracket chain (NaN/±Inf resolve by rule)
-            val finiteX = Packing.finiteProxy(x)
-            val boundsAgg =
-              if (ambigQ.isEmpty) Nil
-              else Seq(sum("f").as("nrows"), min(finiteX).as("mnv"), max(finiteX).as("mxv"))
-            val aggExprs = count(lit(1)).as("d") +: (percentiles(smallQ) ++ boundsAgg ++ madAgg)
-            val qByCol = scala.collection.mutable.Map.empty[String, Seq[Any]]
-            val dByCol = scala.collection.mutable.Map.empty[String, Long]
-            val nByCol = scala.collection.mutable.Map.empty[String, Long]
-            val vBounds = scala.collection.mutable.Map.empty[String, (Double, Double)]
-            val madByCol = scala.collection.mutable.Map.empty[String, Double]
-            val madSet = madMembers.map(_._1).toSet
-            freq.groupBy("c").agg(aggExprs.head, aggExprs.tail: _*).collect().foreach { r =>
-              val c = r.getString(0)
-              dByCol(c) = r.getAs[Long]("d")
-              if (smallQ.contains(c)) quantilesIn(r).foreach(qByCol(c) = _)
-              if (ambigQ.contains(c)) {
-                nByCol(c) = r.getAs[Long]("nrows")
-                if (r.getAs[Any]("mnv") != null)
-                  vBounds(c) = (r.getAs[Double]("mnv"), r.getAs[Double]("mxv"))
-              }
-              if (madSet.contains(c) && r.getAs[Any]("mad") != null)
-                madByCol(c) = r.getAs[Double]("mad")
-            }
-            // tier 2: the exact d settles the ambiguous columns
-            val (lateSmallQ, largeQ) = ambigQ.partition(qn =>
-              dByCol.getOrElse(qn, 0L) <= percentileBufferMaxDistinct)
-            if (lateSmallQ.nonEmpty) {
-              // sub-bound groups only, over the CACHED freq blocks — the
-              // scan was already paid by job A's materialization
-              val ps = percentiles(lateSmallQ)
-              freq.filter(col("c").isin(lateSmallQ: _*)).groupBy("c")
-                .agg(ps.head, ps.tail: _*)
-                .collect().foreach(r => quantilesIn(r).foreach(qByCol(r.getString(0)) = _))
-            }
-            val qCols = largeQ.filter(n => nByCol.getOrElse(n, 0L) > 0)
-            if (qCols.nonEmpty) {
-              // one narrowing chain for every family: the group key is
-              // the dense int index (r17), vBounds seeds each column's
-              // root interval, and a long never lands in the NaN/±Inf
-              // edge classes a double view adds
-              val code = qCols.zipWithIndex.toMap
-              val ci = coalesce(qCols.map(n => when(col("c") === lit(n), lit(code(n)))): _*)
-              val narrowed = freq.filter(col("c").isin(qCols: _*))
-                .select(ci.as("_ci"), x.as("v"), col("f"))
-              val qs = Packing.weightedQuantiles(narrowed, "_ci", "v", "f",
-                QuantilePs, qCols.map(n => code(n) -> nByCol(n)).toMap,
-                qCols.flatMap(n => vBounds.get(n).map(code(n) -> _)).toMap,
-                context = g => s"describe('${qCols(g)}'): ")
-              qCols.foreach(n => qByCol(n) = qs(code(n)))
-            }
-            members.map(m => m -> // absent = all-null column
-              FreqStat(dByCol.getOrElse(m, 0L), qByCol.get(m), madByCol.get(m)))
-          } finally if (ambigQ.nonEmpty) release(freq)
-        }
-
-        // Cardinality ROUTING estimate for the non-family columns only —
-        // decimals/arrays, whose quantiles must choose between the
-        // bounded percentile buffer and the KLL sketch before their
-        // freq job runs. One small HLL job, and only when n even makes
-        // the bound reachable. Family columns need no estimate: their
-        // routing reads the EXACT distinct count off job A and runs the
-        // chosen route over the persisted freq table — no extra scan, no
-        // sketch error. An earlier variant rode HLL sketches on pass 1
-        // instead: approx_count_distinct is an ImperativeAggregate, which
-        // knocks the pass-1 hash agg out of whole-stage codegen
-        // (measured: the 4-column long-form profile went 1.6 s -> 3.7 s
-        // at sf0.1).
-        val gateEstimates: Map[String, Long] = {
-          val qCols = rest.filter(c => wantsQuantiles(static(c)) && n > exactQuantileMaxDistinct)
-          if (qCols.isEmpty) Map.empty
-          else {
-            val est = df.agg(
-              approx_count_distinct(col(qCols.head)).as(qCols.head),
-              qCols.tail.map(c => approx_count_distinct(col(c)).as(c)): _*).head()
-            qCols.map(c => c -> est.getAs[Long](c)).toMap
+        // the unpivot's slots: the three families, then one slot per
+        // distinct type of the members that have no family slot
+        val types = members.map(fields(_).dataType).distinct
+        def own(t: DataType): String = s"vt${types.indexOf(t)}"
+        val slotsOf = members.map(m => m -> slotOf(fields(m), own)).toMap
+        val used = slotsOf.values.flatten.map(_._1).toSet
+        val slots = Slots ++ types.map(t => own(t) -> t).filter(s => used(s._1))
+        def unpivoted(name: String): Seq[Column] = {
+          val mine = slotsOf(name).toMap
+          lit(name).as("c") +: slots.map { case (s, t) =>
+            mine.getOrElse(s, lit(null).cast(t)).as(s)
           }
         }
-        def fallbackStats(name: String): (String, FreqStat) = {
-          val freq = df.filter(col(name).isNotNull)
-            .groupBy(col(name)).agg(count(lit(1)).as(s"${SEP}f"))
-          val withQ = wantsQuantiles(static(name))
-          val exact = gateEstimates.getOrElse(name, 0L) <= exactQuantileMaxDistinct
-          val madMean = madMeanOf(name)
-          val exprs = count(lit(1)).as("d") +:
-            ((if (withQ && exact)
-              Seq(weightedPercentile(quantileInput(fields(name)), QuantilePs, col(s"${SEP}f")).as("q"))
-            else Nil) ++
-            madMean.map(m => (sum(col(s"${SEP}f") *
-              abs(col(name).cast(DoubleType) - lit(m))) /
-              sum(col(s"${SEP}f"))).as("mad")).toSeq)
-          val r = freq.agg(exprs.head, exprs.tail: _*).head()
-          val qs =
-            if (withQ && exact && r.getAs[Any]("q") != null)
-              Some(r.getAs[scala.collection.Seq[Any]]("q").toSeq)
-            else if (withQ && !exact) { // gate fired: KLL over raw rows
-              val rr = df.filter(col(name).isNotNull)
-                .agg(graft.plans.KllSketchAgg.kllQuantiles(
-                  quantileInput(fields(name)).cast(DoubleType), QuantilePs,
-                  ApproxQuantileK).as("q")).head()
-              if (rr.isNullAt(0)) None else Some(rr.getSeq[Any](0).toSeq)
-            } else None
-          val mad = if (madMean.isDefined) Option(r.getAs[Any]("mad")).map(_.asInstanceOf[Double])
-            else None
-          name -> FreqStat(r.getAs[Long]("d"), qs, mad)
-        }
-
-        val tasks: Seq[() => Seq[(String, FreqStat)]] =
-          (if (family.isEmpty) Nil else Seq(() => familyStats(family))) ++
-            rest.map(name => () => Seq(fallbackStats(name)))
-        onPool(df.sparkSession.sparkContext, tasks).flatten.toMap
+        // single member: plain projection, no explode machinery (r17 —
+        // describe_numeric/long/date profile exactly one column; the
+        // 1-element array explode bought nothing)
+        val pairs = (members match {
+          case Seq(one) => df.select(unpivoted(one): _*)
+          case _ =>
+            df.select(explode(array(members.map(m => struct(unpivoted(m): _*)): _*)).as("p"))
+              .select("p.*")
+        }).filter(slots.map { case (s, _) => col(s).isNotNull }.reduce(_ || _))
+        // Exact type-7 quantiles, routed in two FREE tiers (both routes
+        // are exact, so routing can never change a value):
+        //  - PROVABLY-small columns — static bound min(n, max-min+1 for
+        //    integral/date values, all known from pass 1) at or under
+        //    PercentileBufferMaxDistinct — ride job A's weighted
+        //    percentile directly: no extra job, bounded buffer;
+        //  - AMBIGUOUS columns (high-n doubles, wide-range longs) are
+        //    routed by the EXACT distinct count job A computes anyway:
+        //    actually-small ones get one extra weighted-percentile job
+        //    over the CACHED freq blocks (sub-bound rows, ~ms), and
+        //    truly-large ones go DISTRIBUTED: Packing.weightedQuantiles
+        //    brackets the ≤ 2·|probs| rows covering the needed order
+        //    statistics of the (c, v, f) table and interpolates them
+        //    driver-side (Spark Percentile / DuckDB quantile_cont
+        //    parity). No buffer ever holds a whole
+        //    column's distinct set, at ANY cardinality — this path
+        //    needs no sketch fallback.
+        // Rejected alternatives, each measured at sf0.1: a dedicated
+        // HLL routing job ≈ one extra full scan per profile; HLL riding
+        // pass 1 knocks the wide agg out of whole-stage codegen (the
+        // 4-column profile went 1.6 s -> 3.7 s); exact-d routing for
+        // EVERY column forces persist + a second round trip on the
+        // provably-small majority.
+        val (smallQ, ambigQ) = members.filter(m => wantsQuantiles(static(m)))
+          .partition(provablySmall)
+        val freq0 = pairs.groupBy("c", slots.map(_._1): _*).agg(count(lit(1)).as("f"))
+        // localCheckpoint, not persist (r17): the cached-plan form
+        // pinned every consumer stage (job A, tier-2 percentile, the
+        // bracket chain) at full shuffle width — AQE cannot coalesce
+        // through a persisted subplan — measured as 145 tasks for the
+        // one-column numeric profile; the checkpoint materializes
+        // with AQE-coalesced partitions and the same three consumers
+        // read its blocks. Only ambiguous columns add those consumers.
+        val freq = if (ambigQ.nonEmpty) freq0.barrier() else freq0
+        try {
+          // one percentile column per numeric family, each over that
+          // family's own typed value (a decimal reads its double in vd)
+          def percentiles(qs: Seq[String]): Seq[Column] = Seq("vl", "vd").flatMap { s =>
+            val mine = qs.filter(q => slotsOf(q).exists(_._1 == s))
+            if (mine.isEmpty) None
+            else Some(weightedPercentile(when(col("c").isin(mine: _*), col(s)),
+              QuantilePs, col("f")).as(s"q$s"))
+          }
+          def quantilesIn(r: Row): Option[Seq[Any]] = Seq("qvl", "qvd").collectFirst {
+            case k if r.schema.fieldNames.contains(k) && !r.isNullAt(r.fieldIndex(k)) =>
+              r.getAs[scala.collection.Seq[Any]](k).toSeq
+          }
+          // the numeric value as a double: mad and the bracket chain
+          // read it (strings are null here)
+          val x = coalesce(col("vl").cast(DoubleType), col("vd"))
+          val madMembers = members.flatMap(m => madMeanOf(m).map(m -> _))
+          // job A — ONE aggregation over the freq table: distinct
+          // counts, small-column percentiles, large-column row counts
+          // and value bounds (feeding the bracket chain), and mad;
+          // each group's mad uses its own pass-1 mean
+          val madAgg =
+            if (madMembers.isEmpty) Nil
+            else {
+              val meanExpr = coalesce(madMembers.map { case (m, mean) =>
+                when(col("c") === lit(m), lit(mean)) }: _*)
+              Seq((sum(col("f") * abs(x - meanExpr)) /
+                sum(when(meanExpr.isNotNull, col("f")))).as("mad"))
+            }
+          // finite-only bounds over the clamped proxy: the root interval
+          // of each column's bracket chain (NaN/±Inf resolve by rule)
+          val finiteX = Packing.finiteProxy(x)
+          val boundsAgg =
+            if (ambigQ.isEmpty) Nil
+            else Seq(sum("f").as("nrows"), min(finiteX).as("mnv"), max(finiteX).as("mxv"))
+          val aggExprs = count(lit(1)).as("d") +: (percentiles(smallQ) ++ boundsAgg ++ madAgg)
+          val qByCol = scala.collection.mutable.Map.empty[String, Seq[Any]]
+          val dByCol = scala.collection.mutable.Map.empty[String, Long]
+          val nByCol = scala.collection.mutable.Map.empty[String, Long]
+          val vBounds = scala.collection.mutable.Map.empty[String, (Double, Double)]
+          val madByCol = scala.collection.mutable.Map.empty[String, Double]
+          val madSet = madMembers.map(_._1).toSet
+          freq.groupBy("c").agg(aggExprs.head, aggExprs.tail: _*).collect().foreach { r =>
+            val c = r.getString(0)
+            dByCol(c) = r.getAs[Long]("d")
+            if (smallQ.contains(c)) quantilesIn(r).foreach(qByCol(c) = _)
+            if (ambigQ.contains(c)) {
+              nByCol(c) = r.getAs[Long]("nrows")
+              if (r.getAs[Any]("mnv") != null)
+                vBounds(c) = (r.getAs[Double]("mnv"), r.getAs[Double]("mxv"))
+            }
+            if (madSet.contains(c) && r.getAs[Any]("mad") != null)
+              madByCol(c) = r.getAs[Double]("mad")
+          }
+          // tier 2: the exact d settles the ambiguous columns
+          val (lateSmallQ, largeQ) = ambigQ.partition(qn =>
+            dByCol.getOrElse(qn, 0L) <= percentileBufferMaxDistinct)
+          if (lateSmallQ.nonEmpty) {
+            // sub-bound groups only, over the CACHED freq blocks — the
+            // scan was already paid by job A's materialization
+            val ps = percentiles(lateSmallQ)
+            freq.filter(col("c").isin(lateSmallQ: _*)).groupBy("c")
+              .agg(ps.head, ps.tail: _*)
+              .collect().foreach(r => quantilesIn(r).foreach(qByCol(r.getString(0)) = _))
+          }
+          val qCols = largeQ.filter(n => nByCol.getOrElse(n, 0L) > 0)
+          if (qCols.nonEmpty) {
+            // one narrowing chain for every family: the group key is
+            // the dense int index (r17), vBounds seeds each column's
+            // root interval, and a long never lands in the NaN/±Inf
+            // edge classes a double view adds
+            val code = qCols.zipWithIndex.toMap
+            val ci = coalesce(qCols.map(n => when(col("c") === lit(n), lit(code(n)))): _*)
+            val narrowed = freq.filter(col("c").isin(qCols: _*))
+              .select(ci.as("_ci"), x.as("v"), col("f"))
+            val qs = Packing.weightedQuantiles(narrowed, "_ci", "v", "f",
+              QuantilePs, qCols.map(n => code(n) -> nByCol(n)).toMap,
+              qCols.flatMap(n => vBounds.get(n).map(code(n) -> _)).toMap,
+              context = g => s"describe('${qCols(g)}'): ")
+            qCols.foreach(n => qByCol(n) = qs(code(n)))
+          }
+          members.map(m => m -> // absent = all-null column
+            FreqStat(dByCol.getOrElse(m, 0L), qByCol.get(m), madByCol.get(m))).toMap
+        } finally if (ambigQ.nonEmpty) release(freq)
       }
 
     def distinctOf(name: String): Option[Long] =
@@ -439,7 +369,8 @@ object Describe {
       val tpe = SemanticType.refineEmpty(static(name), cn, n)
       val s = ListMap.newBuilder[String, Any]
       s += "content_type" -> tpe.name
-      s += "memory_usage" -> memoryEstimate(f, n, get(name, "bytes"))
+      s += "memory_usage" ->
+        memoryEstimate(f, n, get(name, "bytes").map(_.asInstanceOf[Number].longValue()))
       s += "count" -> cn
       s += "p_null" -> (if (n == 0) 0.0 else (n - cn).toDouble / n)
       s += "n_null" -> (n - cn)
@@ -508,27 +439,44 @@ object Describe {
   private final case class FreqStat(distinct: Long, quantiles: Option[Seq[Any]],
       mad: Option[Double])
 
-  /** The typed unpivot's value slots, one per frequency-table family. */
+  /** The typed unpivot's family slots; [[slotOf]] adds one per other type. */
   private val Slots: Seq[(String, DataType)] =
     Seq("vl" -> LongType, "vd" -> DoubleType, "vs" -> StringType)
 
-  /** A family column's slot and its value there: integral, boolean and
-    * date/time values as longs (date/time as epoch micros), floats as
-    * doubles, strings as strings. Each conversion preserves distinctness
-    * and feeds percentile the same double arithmetic as a direct cast.
-    * None (decimals, arrays): a per-column frequency job instead. */
-  private def slotOf(f: StructField): Option[(String, Column)] = {
+  /** A column's values in the typed unpivot, by slot: integral, boolean
+    * and date/time values as longs in `vl` (date/time as epoch micros),
+    * floats as doubles in `vd`, strings in `vs`. Each conversion
+    * preserves distinctness and feeds percentile the same double
+    * arithmetic as a direct cast. A float vector becomes a string key in
+    * `vs` ([[floatVectorKey]]). Decimals, other vectors and binaries keep
+    * their value in `own(its type)`, a slot of their own Spark type, so
+    * their groups are exactly those of a `groupBy` on the column; a
+    * decimal also writes its double into `vd`, where the percentile, mad
+    * and the bracket chain read it as they read a double column. */
+  private def slotOf(f: StructField, own: DataType => String): Seq[(String, Column)] = {
     val c = col(f.name)
     f.dataType match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType =>
-        Some("vl" -> c.cast(LongType))
+        Seq("vl" -> c.cast(LongType))
       case DateType | TimestampType | TimestampNTZType =>
-        Some("vl" -> unix_micros(c.cast(TimestampType)))
-      case FloatType | DoubleType => Some("vd" -> c.cast(DoubleType))
-      case StringType => Some("vs" -> c)
-      case _ => None
+        Seq("vl" -> unix_micros(c.cast(TimestampType)))
+      case FloatType | DoubleType => Seq("vd" -> c.cast(DoubleType))
+      case StringType => Seq("vs" -> c)
+      case t: DecimalType => Seq(own(t) -> c, "vd" -> c.cast(DoubleType))
+      case ArrayType(FloatType | DoubleType, _) => Seq("vs" -> floatVectorKey(c))
+      case t => Seq(own(t) -> c)
     }
   }
+
+  /** A float vector as one string with the groups of Spark's own array
+    * key: its elements' round-trip decimal forms joined by commas, nulls
+    * as "null", every NaN printing as "NaN" and -0.0 rewritten to 0.0 —
+    * the normalization `groupBy` applies. Grouping the array itself would
+    * run that normalization through a higher-order function, which takes
+    * the whole frequency-table aggregate out of whole-stage codegen. */
+  private def floatVectorKey(c: Column): Column =
+    regexp_replace(array_join(c.cast(ArrayType(StringType)), ",", "null"),
+      "(?<![^,])-0\\.0(?![^,])", "0.0")
 
   /** A quantile column's values as numbers. NTZ timestamps cast through
     * TimestampType under the UTC session zone; DATE through epoch days —
@@ -547,10 +495,7 @@ object Describe {
     def a(stat: String, e: Column): Unit = out += s"$name$SEP$stat" -> e
     def cnt(cond: Column): Column = count(when(cond, lit(1)))
     a("count", count(c))
-    f.dataType match { // memory estimate: var-width measured, fixed derived
-      case StringType | BinaryType => a("bytes", sum(octet_length(c)))
-      case _ => ()
-    }
+    measuredBytes(f).foreach(a("bytes", _))
     if (approximate && wantsDistinct(st))
       a("distinct_count", approx_count_distinct(c))
     if (approximate && wantsQuantiles(st))
@@ -646,34 +591,6 @@ object Describe {
     }.toMap
   }
 
-  /** Job-local properties a pool task takes over from its caller, so
-    * describe's jobs keep the caller's job group (cancelling the group
-    * cancels them), tags, description and scheduler pool. */
-  private val CallerProps = Seq("spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
-
-  /** Runs `tasks` on [[freqEc]] and blocks the caller until all finish.
-    * Only the caller waits: a task never awaits another pool future, so
-    * any number of concurrent callers share the fixed pool without
-    * deadlock. */
-  private def onPool[T](sc: SparkContext, tasks: Seq[() => T]): Seq[T] = {
-    val props = CallerProps.map(k => k -> sc.getLocalProperty(k))
-    implicit val ec: ExecutionContext = freqEc
-    tasks.map { t =>
-      Future {
-        props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-        t()
-      }
-    }.map(Await.result(_, Duration.Inf))
-  }
-
-  /** Bounded pool for describe's frequency-table tasks (driver-side job
-    * submission only; the work runs on executors). */
-  private lazy val freqEc: ExecutionContext = ExecutionContext.fromExecutor(
-    java.util.concurrent.Executors.newFixedThreadPool(8, r => {
-      val t = new Thread(r, "describe-freq"); t.setDaemon(true); t
-    }))
-
   /** Bias-corrected sample excess kurtosis (pandas `Series.kurt`) from
     * Spark's population excess kurtosis g2. */
   def kurtosisG2(n: Long, g2: Double): Option[Double] =
@@ -693,14 +610,18 @@ object Describe {
     ts
   }
 
-  /** Spark-side size estimate (exact pandas byte parity is impossible and
-    * not required — SURVEY.md A7/A19). Fixed-width types: n * width + null
-    * bitmap; var-width: measured bytes from the profiling agg. */
-  private def memoryEstimate(f: StructField, n: Long, measured: Option[Any]): Long = {
-    val varBytes = measured.map(_.asInstanceOf[Number].longValue())
-    varBytes match {
-      case Some(b) => b + n / 8 + 16
-      case None => n * f.dataType.defaultSize + n / 8 + 16
-    }
+  /** The measured-bytes aggregate of a variable-width (string or binary)
+    * column, read by [[memoryEstimate]]; None for fixed-width types. */
+  private[operators] def measuredBytes(f: StructField): Option[Column] = f.dataType match {
+    case StringType | BinaryType => Some(sum(octet_length(col(f.name))))
+    case _ => None
   }
+
+  /** One column's Spark-side size estimate, shared by describe and
+    * introduce (exact pandas byte parity is impossible and not required —
+    * SURVEY.md A7/A19): the measured bytes of a variable-width column (0
+    * when every value is null, where the sum is null), n * width for a
+    * fixed-width one, plus the null bitmap. */
+  private[operators] def memoryEstimate(f: StructField, n: Long, measured: Option[Long]): Long =
+    measuredBytes(f).fold(n * f.dataType.defaultSize)(_ => measured.getOrElse(0L)) + n / 8 + 16
 }

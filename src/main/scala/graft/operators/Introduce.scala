@@ -31,13 +31,8 @@ object Introduce {
     val aggs =
       count(lit(1)).as(SEP + "n") +:
         dataColumns.flatMap { c =>
-          val measured = df.schema(c).dataType match {
-            case org.apache.spark.sql.types.StringType |
-                 org.apache.spark.sql.types.BinaryType =>
-              Seq(coalesce(sum(octet_length(col(c))), lit(0L)).as(c + SEP + "bytes"))
-            case _ => Nil
-          }
-          count(col(c)).as(c + SEP + "count") +: measured
+          count(col(c)).as(c + SEP + "count") +:
+            Describe.measuredBytes(df.schema(c)).map(_.as(c + SEP + "bytes")).toSeq
         }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     val idx = row.schema.fieldNames.zipWithIndex.toMap
@@ -45,8 +40,8 @@ object Introduce {
     val counts = dataColumns.map(c => c -> row.getLong(idx(c + SEP + "count"))).toMap
     val missing = dataColumns.foldLeft(0L)((acc, c) => acc + (n - counts(c)))
     val memory = dataColumns.map { c =>
-      idx.get(c + SEP + "bytes").map(row.getLong).getOrElse(
-        n * df.schema(c).dataType.defaultSize) + n / 8 + 16
+      Describe.memoryEstimate(df.schema(c), n,
+        idx.get(c + SEP + "bytes").filterNot(row.isNullAt).map(row.getLong))
     }.foldLeft(0L)(_ + _)
 
     // type census with EMPTY refinement from the same agg's null counts

@@ -561,9 +561,9 @@ object Stats {
     * before the C(width, 2) expansion. The prune is NOT free — it pays
     * an explode, a semi join and a collect_set re-grouping over the
     * whole (basket, item) long form — so the adaptive decision weighs
-    * its payoff: [[tailMassFraction]] (one small agg over the
+    * its payoff: [[pruneSurvivorCount]] (one small agg over the
     * item-count frame, which the Apriori callers already materialize)
-    * estimates the share of long-form rows held by infrequent items,
+    * reads the share of long-form rows held by infrequent items,
     * and the prune engages only when that share reaches
     * [[pruneMassThreshold]] and the SURVIVOR set fits a driver
     * broadcast ([[pruneBroadcastCap]]). The prune itself is a
@@ -659,19 +659,6 @@ object Stats {
     * shape the prune targets. Per-call knob on the Apriori family
     * (`pruneBroadcastCap`); this is only the default. */
   private[graft] val defaultPruneBroadcastCap: Long = 1L * 1000 * 1000
-
-  /** Share of (basket, item) long-form rows held by items below
-    * `minCount` — the mass the level-1 prune would delete, read with
-    * one aggregate off the distinct-item-sized count frame (0.0 when
-    * the frame is empty). */
-  private[graft] def tailMassFraction(itemCounts: DataFrame,
-      minCount: Long): Double = {
-    val m = itemCounts.agg(
-      coalesce(sum(when(col("n_i") < minCount, col("n_i"))), lit(0L)),
-      coalesce(sum(col("n_i")), lit(0L))).first()
-    val (tail, tot) = (m.getLong(0), m.getLong(1))
-    if (tot == 0L) 0.0 else tail.toDouble / tot
-  }
 
   /** Default minimum infrequent row-mass fraction at which the
     * adaptive level-1 prune engages. The mapper-form prune measured a

@@ -47,7 +47,7 @@ object GraftExtensions {
         require(exprs.length == 4,
           "kll_weighted_quantiles(value, weight, probs_array, k) takes exactly 4 arguments")
         KllWeightedSketchAgg(exprs.head, exprs(1), intLit(exprs(3), "k"),
-          doubleArrayLit(exprs(2), "probs"), emitBytes = false)
+          doubleArrayLit(exprs(2), "probs"))
       }),
     (new FunctionIdentifier("freq_items"),
       new ExpressionInfo(classOf[FreqItemsAgg].getCanonicalName, "freq_items"),

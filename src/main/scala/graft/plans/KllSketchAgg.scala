@@ -231,13 +231,13 @@ private[plans] final class DoubleBuf(initialCapacity: Int = 8) {
 }
 
 /** Shared TypedImperativeAggregate plumbing for the KLL nodes. Output is
-  * either the serialized sketch (`BinaryType`, for storage in a shard
-  * profile) or the quantile estimates at `probs` (`array<double>`, for
-  * direct query). */
+  * the quantile estimates at `probs` (`array<double>`, for direct
+  * query); only [[KllSketchAgg]] can emit the serialized sketch instead
+  * (`BinaryType`, for storage in a shard profile). */
 sealed trait KllAggCommon extends TypedImperativeAggregate[KllState] {
   def k: Int
   def probs: Seq[Double]
-  def emitBytes: Boolean
+  def emitBytes: Boolean = false
 
   override def dataType: DataType =
     if (emitBytes) BinaryType else ArrayType(DoubleType, containsNull = false)
@@ -268,7 +268,7 @@ case class KllSketchAgg(
     child: Expression,
     k: Int,
     probs: Seq[Double],
-    emitBytes: Boolean,
+    override val emitBytes: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0) extends KllAggBase {
 
@@ -300,7 +300,6 @@ case class KllUnionAgg(
     child: Expression,
     k: Int,
     probs: Seq[Double],
-    emitBytes: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0) extends KllAggBase {
 
@@ -336,7 +335,6 @@ case class KllWeightedSketchAgg(
     right: Expression,
     k: Int,
     probs: Seq[Double],
-    emitBytes: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends KllAggCommon with BinaryLike[Expression] {
@@ -371,7 +369,7 @@ object KllSketchAgg {
   /** Weighted quantile estimates for a grouped (value, weight) pair. */
   def kllWeightedQuantiles(v: Column, w: Column, probs: Seq[Double], k: Int = 200): Column =
     Bridge.column(KllWeightedSketchAgg(Bridge.expression(v), Bridge.expression(w),
-      k, probs, emitBytes = false).toAggregateExpression())
+      k, probs).toAggregateExpression())
 
   /** Quantile estimates (array<double>, one per prob) for a grouped column. */
   def kllQuantiles(c: Column, probs: Seq[Double], k: Int = 200): Column =
@@ -383,5 +381,5 @@ object KllSketchAgg {
 
   /** Quantile estimates from a column of stored sketches. */
   def kllUnionQuantiles(c: Column, probs: Seq[Double], k: Int = 200): Column =
-    Bridge.column(KllUnionAgg(Bridge.expression(c), k, probs, emitBytes = false).toAggregateExpression())
+    Bridge.column(KllUnionAgg(Bridge.expression(c), k, probs).toAggregateExpression())
 }

@@ -1573,21 +1573,26 @@ object ProfilingQueries {
     * BIGINTs, no float tolerance anywhere in an iterative numeric
     * computation. */
   def pagerankParts(spark: SparkSession, dir: String): DataFrame = {
-    // the symmetric co-purchase edge frame is a standing artifact
-    // (Memo, warmup-charged): graph construction is paid once per
-    // (session, dir); the measured cost is the ITERATION, matching the
-    // minhash-pair-graph economics
-    val edges = graft.sources.Memo.tableFor(spark, dir, "copurchase-edges") {
+    val edges = copurchaseEdges(spark, dir)
+    graft.operators.Graph.pageRank(edges, "item_a", "item_b", iters = 5)
+      .select(col("node").as("part"), col("rank").as("rank_fp"))
+      .orderBy("part")
+  }
+
+  /** The symmetric co-purchase edge frame (parts sharing at least two
+    * baskets, both directions) that PageRank, the triangle census and
+    * label propagation walk. It is a standing artifact (Memo,
+    * warmup-charged): graph construction is paid once per (session,
+    * dir); the measured cost is the ITERATION, matching the
+    * minhash-pair-graph economics. */
+  private def copurchaseEdges(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Memo.tableFor(spark, dir, "copurchase-edges") {
       val pairs = graft.operators.Stats.coOccurrence(
           Tables.lineitem(spark, dir), "l_orderkey", "l_partkey", minCount = 2L)
         .select("item_a", "item_b")
       pairs.unionAll(
         pairs.select(col("item_b").as("item_a"), col("item_a").as("item_b")))
     }
-    graft.operators.Graph.pageRank(edges, "item_a", "item_b", iters = 5)
-      .select(col("node").as("part"), col("rank").as("rank_fp"))
-      .orderBy("part")
-  }
 
   /** WEIGHTED fixed-point PageRank over the same co-purchase graph
     * ([[graft.operators.Graph.pageRankWeighted]]): mass flows in
@@ -1637,13 +1642,7 @@ object ProfilingQueries {
     * from the degree frame in exact longs. Rides the memoized
     * symmetric edge artifact, filtered back to one direction. */
   def triangleParts(spark: SparkSession, dir: String): DataFrame = {
-    val edges = graft.sources.Memo.tableFor(spark, dir, "copurchase-edges") {
-      val pairs = graft.operators.Stats.coOccurrence(
-          Tables.lineitem(spark, dir), "l_orderkey", "l_partkey", minCount = 2L)
-        .select("item_a", "item_b")
-      pairs.unionAll(
-        pairs.select(col("item_b").as("item_a"), col("item_a").as("item_b")))
-    }
+    val edges = copurchaseEdges(spark, dir)
     graft.operators.Graph.triangleCensus(
         edges.filter(col("item_a") < col("item_b")), "item_a", "item_b")
       .select(col("n_triangles"), col("n_wedges"),
@@ -1679,13 +1678,7 @@ object ProfilingQueries {
     * window-argmax CTEs. Exact longs and total-order tie-breaks end to
     * end. */
   def communitiesParts(spark: SparkSession, dir: String): DataFrame = {
-    val edges = graft.sources.Memo.tableFor(spark, dir, "copurchase-edges") {
-      val pairs = graft.operators.Stats.coOccurrence(
-          Tables.lineitem(spark, dir), "l_orderkey", "l_partkey", minCount = 2L)
-        .select("item_a", "item_b")
-      pairs.unionAll(
-        pairs.select(col("item_b").as("item_a"), col("item_a").as("item_b")))
-    }
+    val edges = copurchaseEdges(spark, dir)
     graft.operators.Graph.labelPropagation(edges, "item_a", "item_b", iters = 3)
       .select(col("node").as("part"), col("label").as("community"))
       .orderBy("part")

@@ -116,14 +116,10 @@ class DescribeSpec extends SparkSpec {
   test("family columns stay exact at any cardinality threshold (distributed quantile chain)") {
     val data = make((1 to 1000).map(i => Row(i.toLong, i.toDouble)),
       "id" -> LongType, "x" -> DoubleType)
-    // type-7 median of 1..1000 interpolates to 500.5 — and the family
-    // path never routes through a whole-column Percentile buffer, so a
-    // tiny threshold changes nothing
+    // type-7 median of 1..1000 interpolates to 500.5
     val exact = Describe.profile(data, Seq("x")).head.stats
     assert(exact("50%").asInstanceOf[Number].doubleValue() === 500.5)
     assert(exact("distinct_count") === 1000L)
-    val tiny = Describe.profile(data, Seq("x"), exactQuantileMaxDistinct = 10).head.stats
-    assert(tiny("50%").asInstanceOf[Number].doubleValue() === 500.5)
   }
 
   test("forced bracket chain matches the buffered percentile bit for bit") {
@@ -175,26 +171,79 @@ class DescribeSpec extends SparkSpec {
     assert(b("distinct_count") === c("distinct_count"))
   }
 
-  test("non-family column above the distinct threshold falls back to sketch quantiles") {
-    // DecimalType has no unpivot family → per-column fallback path, where
-    // the Percentile-buffer gate still applies
+  test("decimal columns stay exact at any cardinality") {
     val data = make((1 to 1000).map(i => Row(i.toLong, BigDecimal(i))),
       "id" -> LongType, "x" -> DecimalType(10, 2))
-    val exact = Describe.profile(data, Seq("x")).head.stats
-    assert(exact("50%").asInstanceOf[Number].doubleValue() === 500.5)
-    assert(exact("distinct_count") === 1000L)
-    // guard fired (threshold 10 << 1000 distinct): t-digest returns an
-    // ACTUAL element, never an interpolated value — proof the sketch ran
-    val guarded = Describe.profile(data, Seq("x"), exactQuantileMaxDistinct = 10).head.stats
-    val q50 = guarded("50%").asInstanceOf[Number].doubleValue()
-    assert(q50 === 500.0 || q50 === 501.0)
-    assert(guarded("distinct_count") === 1000L) // distinct stays exact
-    assert(guarded("mad").asInstanceOf[Number].doubleValue() === 250.0)
+    // a bound of 0 sends the decimal through the distributed bracket
+    // chain, which interpolates (type 7) like the buffered percentile
+    Seq(Describe.PercentileBufferMaxDistinct, 0L).foreach { bound =>
+      val s = Describe.profile(data, Seq("x"), percentileBufferMaxDistinct = bound).head.stats
+      assert(s("50%").asInstanceOf[Number].doubleValue() === 500.5, s"bound $bound")
+      assert(s("distinct_count") === 1000L, s"bound $bound")
+      assert(s("mad").asInstanceOf[Number].doubleValue() === 250.0, s"bound $bound")
+    }
   }
 
-  // 14 columns over every family and the per-column fallback: int, long,
+  test("vector groups follow Spark's key semantics: [0.0] and [-0.0] are one value") {
+    val data = make(Seq(Seq(0.0f), Seq(-0.0f), Seq(Float.NaN), Seq(Float.NaN), null)
+      .zipWithIndex.map { case (v, i) => Row(i.toLong, v) },
+      "id" -> LongType, "v" -> ArrayType(FloatType))
+    assert(Describe.profile(data, Seq("v")).head.stats("distinct_count") === 2L)
+  }
+
+  test("introduce's memory_usage is the sum of describe's, all-null variable-width columns included") {
+    val data = make((1 to 40).map(i =>
+        Row(i.toLong, if (i % 2 == 0) "" else "null", null, i * 0.5, s"v${i % 3}")),
+      "id" -> LongType, "s" -> StringType, "bin" -> BinaryType, "x" -> DoubleType,
+      "t" -> StringType)
+    val r = Report(data, key = Some("id"))
+    val introduced = r.introduce().collect()
+      .collectFirst { case Row("basic", "memory_usage", v: Long) => v }.get
+    val described = r.describe().map(_.stats("memory_usage").asInstanceOf[Long]).sum
+    assert(introduced === described)
+  }
+
+  test("decimal, vector and binary columns add no job to the frequency table") {
+    val data = make((1 to 1000).map { i =>
+        Row(i.toLong, i * 0.5, BigDecimal(i % 97), BigDecimal(i) / 8,
+          Seq((i % 7).toFloat, 1.0f), Array[Byte]((i % 11).toByte))
+      },
+      "id" -> LongType, "x" -> DoubleType, "dec" -> DecimalType(10, 2),
+      "dec2" -> DecimalType(12, 3), "vec" -> ArrayType(FloatType), "bin" -> BinaryType)
+    val sc = spark.sparkContext
+    def jobsOf(cols: Seq[String]): Int = {
+      val group = s"describe-jobs-${cols.mkString("-")}"
+      val marker = s"$group-marker"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      @volatile var sawMarker = false
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          if (g.contains(marker)) sawMarker = true
+          else if (g.contains(group)) jobs.incrementAndGet()
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "profile")
+        try Describe.profile(data, cols) finally sc.clearJobGroup()
+        sc.setJobGroup(marker, "drain")
+        try spark.range(1).collect() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(sawMarker, "listener events did not drain")
+      } finally sc.removeSparkListener(listener)
+      jobs.get()
+    }
+    val alone = jobsOf(Seq("x"))
+    assert(alone > 0)
+    assert(jobsOf(Seq("x", "dec", "dec2", "vec", "bin")) === alone)
+  }
+
+  // 16 columns over every family and every own-type slot: int, long,
   // short, float, doubles with NaN/±Inf, date, timestamp_ntz, strings,
-  // boolean, decimal and an all-null column — six numeric columns alone
+  // boolean, decimal, a float vector holding [0.0], [-0.0] and a NaN
+  // element, binary and an all-null column — six numeric columns alone
   // carry more than 100 pass-1 buffer fields
   private def wideFrame() = {
     val rows = (0 until 400).map { i =>
@@ -207,13 +256,22 @@ class DescribeSpec extends SparkSpec {
         java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i % 31)),
         java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusSeconds(i * 86413L),
         s"s${i % 13}", if (i % 3 == 0) null else s"t$i", i % 4 == 0, null,
-        (i % 5).toShort, i / 3.0f, BigDecimal(i % 41) / 4)
+        (i % 5).toShort, i / 3.0f, BigDecimal(i % 41) / 4,
+        i % 9 match {
+          case 0 => Seq(0.0f)
+          case 1 => Seq(-0.0f)
+          case 2 => Seq(Float.NaN, 1.0f)
+          case 3 => null
+          case k => Seq(k.toFloat, (i % 4).toFloat)
+        },
+        if (i % 5 == 0) null else Array[Byte]((i % 23).toByte, 7))
     }
     make(rows, "id" -> IntegerType, "l" -> LongType, "i" -> IntegerType,
       "d" -> DoubleType, "d2" -> DoubleType, "dt" -> DateType,
       "ts" -> TimestampNTZType, "s" -> StringType, "s2" -> StringType,
       "b" -> BooleanType, "nul" -> DoubleType, "sh" -> ShortType,
-      "f" -> FloatType, "dec" -> DecimalType(10, 2))
+      "f" -> FloatType, "dec" -> DecimalType(10, 2), "vec" -> ArrayType(FloatType),
+      "bin" -> BinaryType)
   }
 
   test("profiling every column at once equals profiling each alone, bit for bit") {
@@ -280,7 +338,7 @@ class DescribeSpec extends SparkSpec {
     }
   }
 
-  test("frequency-table jobs run on the pool under the caller's job group") {
+  test("frequency-table jobs run under the caller's job group") {
     val data = wideFrame()
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -280,17 +280,21 @@ class StatsSpec extends SparkSpec {
     }
   }
 
-  test("tailMassFraction: share of long-form rows on infrequent items") {
+  test("pruneSurvivorCount engages exactly at the infrequent items' share of long-form rows") {
     val s = spark
     import s.implicits._
     // items: a=6 rows, b=3, c=1 → at minCount=3, tail = c's 1 row of 10
     val ic = Seq(("a", 6L), ("b", 3L), ("c", 1L)).toDF("i", "n_i")
-    assert(math.abs(Stats.tailMassFraction(ic, 3L) - 0.1) < 1e-12)
+    def decide(minCount: Long, threshold: Double) =
+      Stats.pruneSurvivorCount(ic, minCount, threshold, Stats.defaultPruneBroadcastCap)
+    assert(decide(3L, 0.1) === Some(2L))
+    assert(decide(3L, math.nextUp(0.1)) === None)
     // at minCount=4 both b and c are tail: 4/10
-    assert(math.abs(Stats.tailMassFraction(ic, 4L) - 0.4) < 1e-12)
-    // nothing infrequent → 0.0; empty frame → 0.0, not NaN
-    assert(Stats.tailMassFraction(ic, 1L) === 0.0)
-    assert(Stats.tailMassFraction(ic.limit(0), 3L) === 0.0)
+    assert(decide(4L, 0.4) === Some(1L))
+    assert(decide(4L, math.nextUp(0.4)) === None)
+    // nothing infrequent, or an empty frame: never engages
+    assert(decide(1L, 0.0) === None)
+    assert(Stats.pruneSurvivorCount(ic.limit(0), 3L, 0.0, Stats.defaultPruneBroadcastCap) === None)
   }
 
   test("adaptive level-1 prune is lossless: forced OFF yields identical results") {

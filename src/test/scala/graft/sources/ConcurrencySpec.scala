@@ -42,9 +42,8 @@ class ConcurrencySpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  test("ten threads describing on one session share the describe pool without deadlock") {
-    // more callers than the pool's 8 threads: every exact describe runs
-    // its frequency tasks there, and only callers ever wait on them
+  test("ten threads describing on one session reproduce the serial describe") {
+    // ten callers submit describe's jobs on one session at once
     def describe(): Seq[(String, Map[String, Any])] =
       graft.core.Report(Tables.lineitem(spark, dir)).describe()
         .map(p => p.column -> (p.stats: Map[String, Any]))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -9,7 +7,7 @@ import graft.SparkSpec
 
 class SinksSpec extends SparkSpec {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = ScratchDir.create(prefix)
 
   test("parquet/csv/json sinks round-trip rows and schema-compatible values") {
     val s = spark

@@ -23,7 +23,7 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  test("describe on an array (VECTOR) column takes the per-column fallback path") {
+  test("describe on an array (VECTOR) column counts whole vectors as distinct values") {
     val emb = Tables.embeddings(spark, dir)
     assert(emb.schema("embedding").dataType === ArrayType(FloatType, containsNull = true))
     val p = Report(emb, key = Some("vec_id")).describe(Seq("embedding")).head
@@ -32,5 +32,15 @@ class TablesSpec extends SparkSpec {
     assert(p.stats("distinct_count") === 500L) // all vectors distinct
     assert(p.stats("is_unique") === true)
     assert(!p.stats.contains("mean")) // no numeric block for vectors
+  }
+
+  test("describe counts embeddings differing only in the sign of a zero as one vector") {
+    val s = spark
+    import s.implicits._
+    val first = Tables.embeddings(spark, dir).orderBy("vec_id").head().getSeq[Float](1)
+    val signed = Seq((1L, 0.0f +: first.tail), (2L, -0.0f +: first.tail)).toDF("vec_id", "embedding")
+    val p = Report(signed, key = Some("vec_id")).describe(Seq("embedding")).head
+    assert(p.stats("count") === 2L)
+    assert(p.stats("distinct_count") === 1L)
   }
 }

@@ -40,7 +40,7 @@ class StreamingRecoverySpec extends SparkSpec {
       .start()
 
   private def tmpCkpt(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ckpt_$tag").toString
+    graft.sources.ScratchDir.create(s"graft_ckpt_$tag")
 
   test("quantile monitor restores its KLL state from the checkpoint") {
     val s = spark
@@ -104,7 +104,7 @@ class StreamingRecoverySpec extends SparkSpec {
   }
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_kill_$tag").toString
+    graft.sources.ScratchDir.create(s"graft_kill_$tag")
 
   test("upsertSink: a batch killed mid-write replays into exactly-once versioned state") {
     val s = spark

@@ -123,7 +123,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source stream: hourly aggregation over the events parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("evstream")
+    val dir = java.nio.file.Paths.get(graft.sources.ScratchDir.create("evstream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -189,7 +189,7 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val out = java.nio.file.Files.createTempDirectory("stream_compact").toString
+    val out = graft.sources.ScratchDir.create("stream_compact")
     val q = mem.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         graft.sources.Sinks.writeCompacted(
@@ -214,7 +214,7 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val out = java.nio.file.Files.createTempDirectory("stream_upsert").toString
+    val out = graft.sources.ScratchDir.create("stream_upsert")
     val q = Streams.upsertSink(mem.toDF(), Seq("event_id"), out,
       snapshotEvery = 2).start()
     def state() = Streams.latestTable(spark, out, Seq("event_id")).get
@@ -259,7 +259,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def body(tag: String) = (1 to 30).map(i => s"$tag$i").mkString(" ")
     val mem = MemoryStream[Doc]
-    val out = java.nio.file.Files.createTempDirectory("stream_ingest").toString
+    val out = graft.sources.ScratchDir.create("stream_ingest")
     val q = Streams.dedupIngestSink(mem.toDF(), "doc_id", "text", out).start()
     try {
       // batch 0: two novel docs + an in-batch near-dup of doc 1
@@ -299,7 +299,7 @@ class StreamingSpec extends SparkSpec {
     }
     def run(compactEvery: Int): (Set[Long], String) = {
       val mem = MemoryStream[Doc]
-      val out = java.nio.file.Files.createTempDirectory("stream_compact").toString
+      val out = graft.sources.ScratchDir.create("stream_compact")
       val q = Streams.dedupIngestSink(mem.toDF(), "doc_id", "text", out,
         compactEvery = compactEvery).start()
       try {
@@ -357,7 +357,7 @@ class StreamingSpec extends SparkSpec {
     }
     def run(fanout: Int): (Set[Long], String) = {
       val mem = MemoryStream[Doc]
-      val out = java.nio.file.Files.createTempDirectory("stream_tiered").toString
+      val out = graft.sources.ScratchDir.create("stream_tiered")
       val q = Streams.dedupIngestSink(mem.toDF(), "doc_id", "text", out,
         compactEvery = 2, compactFanout = fanout).start()
       try {
@@ -414,7 +414,7 @@ class StreamingSpec extends SparkSpec {
     }
     def run(probeMax: Long): Set[Long] = {
       val mem = MemoryStream[Doc]
-      val out = java.nio.file.Files.createTempDirectory("stream_probe").toString
+      val out = graft.sources.ScratchDir.create("stream_probe")
       val q = Streams.dedupIngestSink(mem.toDF(), "doc_id", "text", out,
         compactEvery = 3, probeBroadcastMaxRows = probeMax).start()
       try {
@@ -444,7 +444,7 @@ class StreamingSpec extends SparkSpec {
       Doc(200L + b, body(s"u${b} ", 0)))            // fully fresh
     def run(probeMax: Long): Seq[(Long, Long, Long, Double)] = {
       val mem = MemoryStream[Doc]
-      val out = java.nio.file.Files.createTempDirectory("novelty_flip").toString
+      val out = graft.sources.ScratchDir.create("novelty_flip")
       val q = Streams.noveltyMonitor(mem.toDF(), "doc_id", "text", out,
         compactEvery = 3, probeBroadcastMaxGrams = probeMax).start()
       try {
@@ -471,7 +471,7 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Doc]
-    val out = java.nio.file.Files.createTempDirectory("stream_novelty").toString
+    val out = graft.sources.ScratchDir.create("stream_novelty")
     val q = Streams.noveltyMonitor(mem.toDF(), "doc_id", "text", out).start()
     try {
       val bodyA = (1 to 20).map(i => s"a$i").mkString(" ")
@@ -510,7 +510,7 @@ class StreamingSpec extends SparkSpec {
     }
     def run(compactEvery: Int): (Seq[(Long, Long, Long, Double)], String) = {
       val mem = MemoryStream[Doc]
-      val out = java.nio.file.Files.createTempDirectory("novelty_compact").toString
+      val out = graft.sources.ScratchDir.create("novelty_compact")
       val q = Streams.noveltyMonitor(mem.toDF(), "doc_id", "text", out,
         compactEvery = compactEvery).start()
       try {
@@ -572,7 +572,7 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val out = java.nio.file.Files.createTempDirectory("stream_upsert_gc").toString
+    val out = graft.sources.ScratchDir.create("stream_upsert_gc")
     // snapshotEvery=1: per-batch snapshots, the r14 cadence — GC runs
     // every batch and must bound BOTH snapshot and delta dirs
     val q = Streams.upsertSink(mem.toDF(), Seq("event_id"), out,
@@ -611,7 +611,7 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val log = java.nio.file.Files.createTempDirectory("psi_log").toString
+    val log = graft.sources.ScratchDir.create("psi_log")
     // reference: values uniform over 0..9
     val ref = (0 until 100).map(i => (i % 10).toDouble).toDF("value")
     val q = Streams.psiMonitor(mem.toDF(), ref, "value", log).start()

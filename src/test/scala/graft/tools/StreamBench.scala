@@ -112,10 +112,8 @@ object StreamBench {
 
     // ----- 3. dedupIngestSink: on-disk LSH index, foreachBatch ----------
     if (wanted("dedup_ingest")) {
-      val target = java.nio.file.Files
-        .createTempDirectory("sb-dedup").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("sb-dedup-ckpt").toString
+      val target = graft.sources.ScratchDir.create("sb-dedup")
+      val ckpt = graft.sources.ScratchDir.create("sb-dedup-ckpt")
       val vocab = (0 until 5000).map(i => s"t$i")
       var nextId = 0L
       // optional 9th arg: dup fraction (default 0.1). The r16 band-key
@@ -197,8 +195,7 @@ object StreamBench {
     // compaction contract as dedup_ingest (the uncompacted arm is
     // selectable via the 5th arg = 1000000 for the A/B).
     if (wanted("novelty_monitor")) {
-      val target = java.nio.file.Files
-        .createTempDirectory("sb-novelty").toString
+      val target = graft.sources.ScratchDir.create("sb-novelty")
       val vocab = (0 until 5000).map(i => s"t$i")
       // optional 9th arg: replay fraction (default 0.3 — the r16 shape).
       // 0.0 is the HIGH-NOVELTY arm (VERDICT r16 #7): the bloom front's
@@ -227,7 +224,7 @@ object StreamBench {
           target, compactEvery = compactEvery,
           probeBroadcastMaxGrams = probeMax, bloomMode = bloomMode)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("sb-novelty-ckpt").toString)
+          graft.sources.ScratchDir.create("sb-novelty-ckpt"))
         .start()
       val secs = Vector.newBuilder[Double]
       val idxBytes = Vector.newBuilder[Long]
@@ -259,15 +256,14 @@ object StreamBench {
     // per batch, the log is append-only one row/batch) — the longevity
     // claim is simply FLAT per-batch latency for the stream's life.
     if (wanted("psi_monitor")) {
-      val logDir = java.nio.file.Files
-        .createTempDirectory("sb-psi-log").toString
+      val logDir = graft.sources.ScratchDir.create("sb-psi-log")
       val ref = spark.range(100000)
         .selectExpr("cast(id % 1000 as double) / 10.0 as value")
       val mem = MemoryStream[Double]
       val q = graft.streaming.Streams
         .psiMonitor(mem.toDF().toDF("value"), ref, "value", logDir)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("sb-psi-ckpt").toString)
+          graft.sources.ScratchDir.create("sb-psi-ckpt"))
         .start()
       val secs = Vector.newBuilder[Double]
       val logBytes = Vector.newBuilder[Long]
@@ -294,10 +290,8 @@ object StreamBench {
     // cumulative writes must be ~K× lower on a maintained base that
     // dwarfs the per-batch delta.
     if (wanted("upsert_maintain")) {
-      val target = java.nio.file.Files
-        .createTempDirectory("sb-upsert").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("sb-upsert-ckpt").toString
+      val target = graft.sources.ScratchDir.create("sb-upsert")
+      val ckpt = graft.sources.ScratchDir.create("sb-upsert-ckpt")
       val snapshotEvery = args.lift(4).map(_.toInt).getOrElse(8)
       val baseKeys = math.max(20000, rowsPerBatch)
       val updatesPerBatch = math.max(100, rowsPerBatch / 50)
