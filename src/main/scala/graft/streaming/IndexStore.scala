@@ -1,20 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.BinaryType
-import org.apache.spark.util.sketch.BloomFilter
 
 /** The STANDING-INDEX store shared by the streaming ingest sinks
   * ([[Streams.dedupIngestSink]], [[Streams.noveltyMonitor]], and the
   * delta-versioned [[Streams.upsertSink]]): append-only per-batch live
   * dirs (`batch=<id>`), LSM-style tiered compaction into immutable runs
-  * (`gen=<lo>_<hi>`), committer-independent completion markers, and
-  * optional per-dir Bloom sidecars that let probes skip or shortcut the
-  * index read.
+  * (`gen=<lo>_<hi>`) and committer-independent completion markers.
   *
   * Extracted from Streams.scala once a THIRD sink consumer arrived
   * (VERDICT r15 "watch item"): the run/tier/marker layer is storage
@@ -57,16 +50,23 @@ private[graft] object IndexStore {
     fs.exists(new org.apache.hadoop.fs.Path(dir, "_COMMITTED")) ||
       fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
 
-  /** Ids of the live `batch=N` subdirectories of an index dir. */
-  private[graft] def liveBatchIds(spark: SparkSession, liveDir: String): Seq[Long] = {
-    val fs = hadoopFs(spark, liveDir)
-    val p = new org.apache.hadoop.fs.Path(liveDir)
+  /** Numbered `<prefix><n>` subdirectories of `dir` (an index's live
+    * `batch=` dirs, a maintained table's `v=` and `d=` dirs). A name
+    * whose suffix is not a number is skipped, not an error. */
+  private[graft] def dirIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      prefix: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.collect {
-      case s if s.isDirectory && s.getPath.getName.startsWith("batch=") =>
-        s.getPath.getName.stripPrefix("batch=").toLong
-    }
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .flatMap(s => scala.util.Try(
+        s.getPath.getName.stripPrefix(prefix).toLong).toOption
+        .map(v => (v, s.getPath)))
   }
+
+  /** Ids of the live `batch=N` subdirectories of an index dir. */
+  private[graft] def liveBatchIds(spark: SparkSession, liveDir: String): Seq[Long] =
+    dirIds(hadoopFs(spark, liveDir), liveDir, "batch=").map(_._1)
 
   /** One compacted RUN of an index: a snapshot dir covering the live
     * batch ids in [lo, hi). Two naming generations parse: the original
@@ -189,19 +189,10 @@ private[graft] object IndexStore {
     * batch tables, applied to the standing index. Only worth it for a
     * column probes actually filter on (the sh index's doc id); for keys
     * a probe covers uniformly (band keys, grams) no layout prunes and
-    * the plain hash shuffle is cheaper.
-    *
-    * `bloomCol`: when set, every run gains a `_BLOOM` sidecar over that
-    * column ([[writeBloomSidecar]]) so probes can front the index read
-    * with a membership test ([[readBloomFront]]). Sized to the run's
-    * own distinct count at `bloomFpp` — per-run sizing is the scalable-
-    * Bloom answer to an unbounded index (one fixed-size filter would
-    * saturate; K per-run filters at fpp each keep the union bound
-    * K·fpp with K = O(log batches) under tiering). */
+    * the plain hash shuffle is cheaper. */
   private[graft] def compactIndexDir(spark: SparkSession, liveDir: String,
       genDir: String, id: Long, compactEvery: Int,
-      rangeShardCol: Option[String] = None, fanout: Int = 4,
-      bloomCol: Option[String] = None, bloomFpp: Double = 0.01): Unit = {
+      rangeShardCol: Option[String] = None, fanout: Int = 4): Unit = {
     def writeRun(lo: Long, hi: Long, df: DataFrame): Unit = {
       // repartition, NOT coalesce: coalesce would propagate up the
       // plan without a shuffle and cap the read parallelism of the
@@ -215,9 +206,6 @@ private[graft] object IndexStore {
       }
       val dir = s"$genDir/gen=${lo}_$hi"
       sharded.write.mode("overwrite").parquet(dir)
-      // sidecar BEFORE the marker: complete ⇒ sidecar present, so the
-      // bloom front never sees a marker-complete run with missing bits
-      bloomCol.foreach(c => writeBloomSidecar(spark, dir, c, bloomFpp))
       // own completion marker — committer-independent (markCommitted)
       markCommitted(spark, dir)
     }
@@ -256,22 +244,6 @@ private[graft] object IndexStore {
         case None => merging = false
       }
     }
-    // (2b) sidecar BACKFILL for legacy runs (ADVICE r16): a top-tier
-    // run written before bloom was enabled may never participate in
-    // another merge, so "self-healing through compaction" alone leaves
-    // readBloomFront returning None forever on a migrated index. One
-    // extra scan per legacy run, exactly once — after it every
-    // complete run carries bits and the front can engage. Ordering is
-    // safe: the run is already marker-complete, and readers treat a
-    // missing sidecar as exact-scan fallback, so the sidecar appearing
-    // between two probes only ever upgrades them.
-    bloomCol.foreach { c =>
-      val fsGen = hadoopFs(spark, genDir)
-      completeRuns(spark, genDir)
-        .filterNot(r => fsGen.exists(
-          new org.apache.hadoop.fs.Path(r.path, "_BLOOM")))
-        .foreach(r => writeBloomSidecar(spark, r.path.toString, c, bloomFpp))
-    }
     // (3) stale cleanup — live dirs inside run coverage, covered or
     // markerless run dirs inside a complete run's range (including an
     // exact-range twin losing the covers name tie-break); re-runnable
@@ -279,8 +251,8 @@ private[graft] object IndexStore {
     val runs = completeRuns(spark, genDir)
     runs.map(_.hi).maxOption.foreach { coverEnd =>
       val fs = hadoopFs(spark, liveDir)
-      liveBatchIds(spark, liveDir).filter(_ < coverEnd).foreach(n =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$liveDir/batch=$n"), true))
+      dirIds(fs, liveDir, "batch=").filter(_._1 < coverEnd)
+        .foreach { case (_, p) => fs.delete(p, true) }
       fs.listStatus(new org.apache.hadoop.fs.Path(genDir)).toSeq.foreach { s =>
         parseRunName(s.getPath.getName).foreach { case (lo, hi) =>
           val keep = runs.exists(r =>
@@ -291,212 +263,4 @@ private[graft] object IndexStore {
       }
     }
   }
-
-  // ------------------------------------------------------------------
-  // Bloom sidecars — the membership front over a standing index
-  // ------------------------------------------------------------------
-
-  /** Build and write the `_BLOOM` sidecar of an already-written parquet
-    * dir: a distributed fold of per-partition Bloom filters over
-    * xxhash64(`colName`) — fixed-seed hashing, bitwise-OR partial merge,
-    * so the bits are deterministic across partitionings and replays
-    * (byte-identical to what BloomFilterAggregate serializes — the
-    * machinery [[graft.operators.Contamination.bloomKeep]] established —
-    * but built through the public sketch API, which has no
-    * runtime-filter numBits conf ceiling). Sized to the dir's own row
-    * count at `fpp` (pass `expectedRows` to skip the count pass when
-    * the caller already knows it). An EMPTY dir writes a zero-length
-    * sidecar, read back as matches-nothing. Must be called BEFORE the
-    * dir's completion marker. */
-  private[graft] def writeBloomSidecar(spark: SparkSession, dir: String,
-      colName: String, fpp: Double = 0.01,
-      expectedRows: Option[Long] = None): Unit = {
-    val df = spark.read.parquet(dir).select(xxhash64(col(colName)).as("h"))
-    val n = expectedRows.getOrElse(df.count())
-    val bytes =
-      if (n <= 0) Array.empty[Byte]
-      else {
-        val expected = math.max(1L, n)
-        val numBits = BloomFilter.optimalNumOfBits(expected, fpp)
-        val bf = df.stat.bloomFilter(col("h"), expected, numBits)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        bos.toByteArray
-      }
-    val fs = hadoopFs(spark, dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_BLOOM"), true)
-    try out.write(bytes) finally out.close()
-  }
-
-  private def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_BLOOM")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val len = fs.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](len)
-        in.readFully(0, buf)
-        Some(buf)
-      } finally in.close()
-    }
-  }
-
-  /** The dirs whose sidecars make up an index's Bloom front as of batch
-    * `id` — exactly the dirs [[readIndexDir]] would consume (complete
-    * runs + live dirs at/above the coverage end, strictly below `id`),
-    * split (runPaths, livePaths). None — callers fall back to the exact
-    * index scan — when a run's range reaches past `id` (its bits would
-    * include rows a replayed batch must not see). */
-  private def frontPaths(spark: SparkSession, liveDir: String,
-      genDir: String, id: Long)
-      : Option[(Seq[org.apache.hadoop.fs.Path], Seq[org.apache.hadoop.fs.Path])] = {
-    val runs = completeRuns(spark, genDir)
-    if (runs.exists(_.hi > id)) return None
-    val floor = runs.map(_.hi).maxOption.getOrElse(0L)
-    val live = liveBatchIds(spark, liveDir).filter(n => n >= floor && n < id)
-    Some((runs.map(_.path),
-      live.map(n => new org.apache.hadoop.fs.Path(s"$liveDir/batch=$n"))))
-  }
-
-  /** The Bloom FRONT of an index as of batch `id`: the sidecar bits of
-    * every dir [[readIndexDir]] would consume. Returns None — callers
-    * fall back to the exact index scan — when any consumed dir lacks
-    * its sidecar (legacy layout written before sidecars existed;
-    * self-healing as compaction folds old dirs into sidecar-carrying
-    * runs) or when a run's range reaches past `id`. Zero-length
-    * sidecars (empty dirs) are dropped — they match nothing. An empty
-    * Seq means the index is empty. */
-  private[graft] def readBloomFront(spark: SparkSession, liveDir: String,
-      genDir: String, id: Long): Option[Seq[Array[Byte]]] =
-    frontPaths(spark, liveDir, genDir, id).flatMap { case (runP, liveP) =>
-      val genFs = hadoopFs(spark, genDir)
-      val liveFs = hadoopFs(spark, liveDir)
-      val bits = runP.map(readSidecar(genFs, _)) ++
-        liveP.map(readSidecar(liveFs, _))
-      if (bits.exists(_.isEmpty)) None
-      else Some(bits.flatten.filter(_.nonEmpty))
-    }
-
-  /** might-contain of `c` against explicit Bloom bits: OR over the
-    * per-dir filters (codegen'd BloomFilterMightContain over the same
-    * xxhash64 the build used). False positives only. Fine for tests and
-    * bounded fronts; the SINKS use [[bloomProbe]] instead — embedding
-    * every sidecar as a plan literal re-ships all bits with every
-    * micro-batch's tasks and was measured accumulating to a driver OOM
-    * over a 500-batch run. */
-  private[graft] def mightContain(front: Seq[Array[Byte]],
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    front
-      .map(b => Bridge.column(BloomFilterMightContain(
-        Literal.create(b, BinaryType), Bridge.expression(xxhash64(c)))))
-      .reduceOption(_ || _)
-      .getOrElse(lit(false))
-
-  /** (cacheKey fingerprint, broadcast handle) per index half — run and
-    * live halves cached separately because they change on different
-    * cadences (runs: once per compaction epoch; live dirs: every
-    * batch). Keyed by (context, dir) so concurrent sinks and sessions
-    * never share entries they shouldn't. Bounded LRU (accessOrder, not
-    * insertion order — ADVICE r16: FIFO would evict the HOT entries of
-    * >32 concurrently live sinks): past `FrontCacheMax` entries the
-    * least-recently-USED entry is evicted, so a long-lived app cycling
-    * many ephemeral sink dirs cannot pin broadcast blocks forever (a
-    * live sink re-caches on its next batch at one rebroadcast's cost).
-    *
-    * Replaced/evicted handles are `unpersist(blocking = false)`d, NEVER
-    * `destroy()`ed (VERDICT r16 #3): two consumers sharing one index
-    * dir share a cache entry, and a destroy landing while the other's
-    * micro-batch still holds the handle in a task closure fails that
-    * batch with "Broadcast used after destroyed" and kills the query.
-    * unpersist only drops the executor/driver block copies — an
-    * in-flight task transparently re-fetches from the driver-side
-    * value, so the stale handle stays USABLE and the cost of the race
-    * is one re-broadcast, not a dead stream. The JVM-lifetime metadata
-    * of an unpersisted-but-undestroyed broadcast is a few hundred
-    * bytes/handle — bounded by churn, reclaimed on context stop, and
-    * pinned as the documented trade
-    * (IndexStoreSpec "replaced bloom front stays usable"). */
-  private val FrontCacheMax = 64
-  private val frontCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        String, (String, org.apache.spark.broadcast.Broadcast[Array[BloomFilter]])](
-        16, 0.75f, /* accessOrder = LRU */ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          String, (String, org.apache.spark.broadcast.Broadcast[Array[BloomFilter]])])
-          : Boolean = {
-        val evict = size() > FrontCacheMax
-        if (evict) e.getValue._2.unpersist(false)
-        evict
-      }
-    })
-
-  private def cachedFront(spark: SparkSession, cacheKey: String,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dirs: Seq[org.apache.hadoop.fs.Path])
-      : Option[org.apache.spark.broadcast.Broadcast[Array[BloomFilter]]] = {
-    val sidecars = dirs.map(d => new org.apache.hadoop.fs.Path(d, "_BLOOM"))
-    if (sidecars.exists(p => !fs.exists(p))) return None
-    // path + length + mtime: length alone would serve stale bits for a
-    // sidecar rewritten in place with same-size content (ADVICE r16)
-    val fp = sidecars.map { p =>
-      val st = fs.getFileStatus(p)
-      s"$p:${st.getLen}:${st.getModificationTime}"
-    }.sorted.mkString("|")
-    val key = s"${spark.sparkContext.applicationId}#$cacheKey"
-    frontCache.synchronized {
-      val cur = frontCache.get(key)
-      if (cur != null && cur._1 == fp) Some(cur._2)
-      else {
-        val blooms = dirs.flatMap(d => readSidecar(fs, d)).filter(_.nonEmpty)
-          .map(b => BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
-          .toArray
-        val bc = spark.sparkContext.broadcast(blooms)
-        frontCache.put(key, (fp, bc))
-        if (cur != null) cur._2.unpersist(false)
-        Some(bc)
-      }
-    }
-  }
-
-  /** The Bloom front as a PROBE FUNCTION: value column => might-contain
-    * boolean. The sidecar bits ship as TWO cached broadcasts (run half +
-    * live half) probed by a tiny UDF over the codegen'd xxhash64 of the
-    * value — per batch only the broadcast HANDLES enter the plan, so
-    * per-batch shipping is O(changed bits), not O(front bits): the run
-    * half re-broadcasts once per compaction epoch, the live half once
-    * per batch (a few small per-batch sidecars). The literal-embedding
-    * alternative ([[mightContain]]) re-ships every sidecar with every
-    * batch's tasks — measured as a driver-heap OOM by batch ~450 of the
-    * 500-batch novelty probe (multi-MB run sidecars × retained
-    * plans/broadcast subtrees).
-    *
-    * False positives only (never a lost member); the per-sidecar fpp is
-    * the CALLER's to scale — a probe ORs across every consumed dir, so
-    * the gram-level false-positive bound is Σ per-sidecar fpp (the
-    * sinks divide their user-facing bloomFpp by compactEvery + 8: up to
-    * compactEvery live sidecars plus a tier-bounded handful of runs —
-    * the r16 A/B measured the UNSCALED per-dir 1% accumulating to a 26%
-    * novelty undercount over ~66 dirs, which is what this scaling
-    * kills). Returns None (caller falls back to the exact scan) when
-    * any consumed dir lacks its sidecar or a run reaches past `id`. */
-  private[graft] def bloomProbe(spark: SparkSession, liveDir: String,
-      genDir: String, id: Long)
-      : Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
-    frontPaths(spark, liveDir, genDir, id).flatMap { case (runP, liveP) =>
-      for {
-        bcRuns <- cachedFront(spark, s"runs:$genDir",
-          hadoopFs(spark, genDir), runP)
-        bcLive <- cachedFront(spark, s"live:$liveDir",
-          hadoopFs(spark, liveDir), liveP)
-      } yield {
-        val probe = udf { (h: java.lang.Long) =>
-          h != null &&
-            (bcRuns.value.exists(_.mightContainLong(h)) ||
-              bcLive.value.exists(_.mightContainLong(h)))
-        }
-        (c: org.apache.spark.sql.Column) => probe(xxhash64(c))
-      }
-    }
 }

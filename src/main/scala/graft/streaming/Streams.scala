@@ -203,7 +203,7 @@ object Streams {
             .sorted(Ordering[Long].reverse)
           if (snapsNow.size > keepVersions) {
             val keepFloor = snapsNow(keepVersions - 1)
-            dirIds(fs, targetDir, "v=").filter(_._1 < keepFloor)
+            IndexStore.dirIds(fs, targetDir, "v=").filter(_._1 < keepFloor)
               .foreach { case (_, p) => fs.delete(p, true) }
           }
           // deltas at or below the SECOND-newest surviving snapshot are
@@ -211,28 +211,16 @@ object Streams {
           val kept = completeDirIds(fs, targetDir, "v=").sorted
           if (kept.size >= 2) {
             val dFloor = kept(kept.size - 2)
-            dirIds(fs, targetDir, "d=").filter(_._1 <= dFloor)
+            IndexStore.dirIds(fs, targetDir, "d=").filter(_._1 <= dFloor)
               .foreach { case (_, p) => fs.delete(p, true) }
           }
         }
     }
   }
 
-  /** Numbered `<prefix><n>` subdirectories of a maintained-table dir. */
-  private def dirIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      prefix: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap(s => scala.util.Try(
-        s.getPath.getName.stripPrefix(prefix).toLong).toOption
-        .map(v => (v, s.getPath)))
-  }
-
   private def completeDirIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       prefix: String): Seq[Long] =
-    dirIds(fs, dir, prefix).collect {
+    IndexStore.dirIds(fs, dir, prefix).collect {
       case (v, p) if IndexStore.isComplete(fs, p) => v
     }
 
@@ -326,7 +314,7 @@ object Streams {
       shingleWords: Int = 3, numHashes: Int = 128,
       bands: Int = 32, rowsPerBand: Int = 4, seed: Int = 42,
       compactEvery: Int = 64, probeBroadcastMaxRows: Long = 4L << 20,
-      compactFanout: Int = 4, bloomFpp: Double = 0.0)
+      compactFanout: Int = 4)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -335,30 +323,14 @@ object Streams {
         val (docsDir, shDir, bkDir) =
           (s"$targetDir/docs", s"$targetDir/sh", s"$targetDir/bk")
         val (shGen, bkGen) = (s"$targetDir/shc", s"$targetDir/bkc")
-        val useBloom = bloomFpp > 0
-        // per-sidecar share of the user-facing fpp — see noveltyMonitor
-        val sidecarFpp =
-          (if (useBloom) bloomFpp else 0.01) / (compactEvery + 8)
         // sh generations range-shard by doc id so the probe's candidate-id
         // pushdown prunes to matching files; bk generations cannot be
         // pruned by any layout (a batch's band keys cover the hash space
         // — see crossNearDupPairsFromIndexProbe) and stay hash-sharded.
-        // bloomFpp > 0 additionally keeps a Bloom sidecar over bk and
-        // prefilters the batch's band keys before the candidate join —
-        // EXACT regardless of fpp (a false positive only survives to the
-        // verify join; a false negative cannot happen; the 500-batch A/B
-        // produced bit-identical corpora). OFF by default by
-        // measurement: at the 10%-dup probe shape the sidecar
-        // maintenance cost ~4% more than the prefilter saved, because
-        // probable keys exist every batch and the candidate scan runs
-        // anyway (BASELINE r16); the win case is a mostly-unique feed
-        // whose batches can skip the index entirely.
         IndexStore.compactIndexDir(spark, shDir, shGen, id, compactEvery,
           rangeShardCol = Some("id"), fanout = compactFanout)
         IndexStore.compactIndexDir(spark, bkDir, bkGen, id, compactEvery,
-          fanout = compactFanout,
-          bloomCol = if (useBloom) Some("bk") else None,
-          bloomFpp = sidecarFpp)
+          fanout = compactFanout)
         // Per-batch substrates materialize through the Materialize seam
         // (r18): the default localCheckpoint strategy hands consumers
         // AQE-coalesced partitions instead of the full-width stages a
@@ -388,29 +360,17 @@ object Streams {
             (IndexStore.readIndexDir(spark, shDir, shGen, id),
               IndexStore.readIndexDir(spark, bkDir, bkGen, id)) match {
               case (Some(indexSh), Some(indexBk)) =>
-                // BLOOM PREFILTER on the batch's band keys: keys the bk
-                // sidecars reject exist nowhere in the index and cannot
-                // produce candidates — drop them before anything joins.
-                // Exact regardless of fpp (false positives die in the
-                // verify join). Falls back to the unfiltered keys when
-                // any index dir lacks its sidecar (legacy layout).
-                val bkProbe =
-                  (if (useBloom) IndexStore.bloomProbe(spark, bkDir, bkGen, id)
-                   else None) match {
-                    case Some(might) => bkB.filter(might(col("bk")))
-                    case None => bkB
-                  }
-                val nProbe = bkProbe.count()
-                if (nProbe == 0) selfKept // no key matches: no candidates
+                val nProbe = bkB.count()
+                if (nProbe == 0) selfKept // no band keys: no candidates
                 else {
                   val probe = probeBroadcastMaxRows > 0 &&
                     nProbe <= probeBroadcastMaxRows
                   val pairs =
                     if (probe) Dedup.crossNearDupPairsFromIndexProbe(
-                      shB, bkProbe, indexSh.select("id", "s"),
+                      shB, bkB, indexSh.select("id", "s"),
                       indexBk.select("id", "bk"), threshold)
                     else Dedup.crossNearDupPairsFromIndex(
-                      shB, bkProbe, indexSh.select("id", "s"),
+                      shB, bkB, indexSh.select("id", "s"),
                       indexBk.select("id", "bk"), threshold)
                   val dupIds = pairs.select(col("a").as(idCol)).distinct()
                   selfKept.join(dupIds, Seq(idCol), "left_anti")
@@ -425,8 +385,6 @@ object Streams {
             .parquet(s"$shDir/batch=$id")
           bkB.join(keptIds, "id").write.mode("overwrite")
             .parquet(s"$bkDir/batch=$id")
-          if (useBloom)
-            IndexStore.writeBloomSidecar(spark, s"$bkDir/batch=$id", "bk", sidecarFpp)
         } finally Seq(shB, bkB, kept).filter(_ != null).foreach(release)
     }
 
@@ -477,117 +435,50 @@ object Streams {
     * `batch` column (the compactor preserves it as a data column, which
     * is what first-seen-only semantics need), runs merge tiered at
     * `compactFanout`, and the probe reads the complete runs plus live
-    * dirs only.
-    *
-    * BLOOM FRONT (`bloomMode`, VERDICT r15 #1): compaction fixed the
-    * fragmentation pathology, but the probe still SCANS the standing
-    * gram index once per batch — the engine's last measured growth term
-    * (500-batch probe: 1.87→4.93 s/batch tracking the ~7M-row index;
-    * scan-dominated, and no storage layout can prune it because a
-    * batch's grams cover any layout). Every index dir therefore carries
-    * a `_BLOOM` sidecar over its grams ([[IndexStore.writeBloomSidecar]]
-    * — per-run sizing, so the front never saturates as the index
-    * grows), and the probe fronts the read with a membership test:
-    *
-    *  - `"off"` (DEFAULT): the exact r15 probe, no sidecars. Default by
-    *    measurement, not caution: at the 500-batch shape, maintaining +
-    *    probing the front WITHOUT trusting it costs ~25% over this arm
-    *    (BASELINE r16) — the confirm scan remains either way.
-    *  - `"approx"`: the bloom verdict IS the verdict — ZERO index reads
-    *    per batch, per-batch cost O(batch grams) independent of index
-    *    size. Documented error: a truly-novel gram is miscounted as
-    *    seen (and not indexed) with probability ≤ bloomFpp (each
-    *    sidecar gets bloomFpp/(compactEvery+8), so the OR across dirs
-    *    sums to the user rate; measured 0.455% at the 1% default over
-    *    500 batches). This is the 100 TB mode: per-batch latency
-    *    measured FLAT (ratio 0.965) while the exact arms grew with the
-    *    index.
-    *  - `"exact"`: identical output to `"off"` (bit-identical index in
-    *    the 500-batch A/B) while building and probing the sidecars —
-    *    the MIGRATION mode that makes an existing index approx-ready;
-    *    bloom-rejected grams skip the index, but the accepted
-    *    remainder's confirm scan still grows with the index.
-    *
-    * A dir missing its sidecar (legacy layout) silently falls back to
-    * the exact scan and self-heals as compaction folds old dirs into
-    * sidecar-carrying runs. */
+    * dirs only. */
   def noveltyMonitor(stream: DataFrame, idCol: String, textCol: String,
       targetDir: String, n: Int = 3, compactEvery: Int = 64,
-      compactFanout: Int = 4, probeBroadcastMaxGrams: Long = 4L << 20,
-      bloomMode: String = "off", bloomFpp: Double = 0.01)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(Set("off", "exact", "approx")(bloomMode),
-      s"bloomMode must be off|exact|approx, got $bloomMode")
-    require(bloomFpp > 0 && bloomFpp < 1, s"bloomFpp must be in (0,1): $bloomFpp")
-    val useBloom = bloomMode != "off"
-    // a probe ORs across up to compactEvery live sidecars plus a
-    // tier-bounded handful of runs, so the user-facing bloomFpp is the
-    // SUM bound and each sidecar gets its share (the unscaled per-dir
-    // rate measured a 26% novelty undercount over ~66 dirs — r16 A/B)
-    val sidecarFpp = bloomFpp / (compactEvery + 8)
+      compactFanout: Int = 4, probeBroadcastMaxGrams: Long = 4L << 20)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
         val (gramsDir, gramsGen, logDir) =
           (s"$targetDir/grams", s"$targetDir/gramsc", s"$targetDir/log")
         IndexStore.compactIndexDir(spark, gramsDir, gramsGen, id, compactEvery,
-          fanout = compactFanout,
-          bloomCol = if (useBloom) Some("s") else None, bloomFpp = sidecarFpp)
+          fanout = compactFanout)
         // materialized before the count/anti-join diamond
         val bg = graft.operators.Dedup.shingleRows(batch.toDF(), idCol, textCol, n)
           .select("s").distinct().barrier()
         try {
           val nBg = bg.count()
-          val front =
-            if (useBloom) IndexStore.bloomProbe(spark, gramsDir, gramsGen, id)
-            else None
           val novel = IndexStore.readIndexDir(spark, gramsDir, gramsGen, id) match {
-            case Some(index) => front match {
-              case Some(might) if bloomMode == "approx" =>
-                // bloom-only verdict: no index read at all this batch
-                bg.filter(!might(col("s")))
-              case Some(might) =>
-                // exact mode: bloom-rejected grams are PROVEN novel;
-                // only the accepted remainder needs the index confirm
-                val probable = bg.filter(might(col("s")))
-                if (probeBroadcastMaxGrams > 0 && nBg <= probeBroadcastMaxGrams) {
-                  val seen = index.select("s")
-                    .join(broadcast(probable), Seq("s"), "left_semi")
-                  bg.join(broadcast(seen), Seq("s"), "left_anti")
-                } else bg.filter(!might(col("s")))
-                  .unionByName(probable.join(index.select("s"), Seq("s"), "left_anti"))
-              case None =>
-                if (probeBroadcastMaxGrams > 0 && nBg <= probeBroadcastMaxGrams) {
-                  // SEEN-SET FLIP — the same shape as the dedup-ingest
-                  // probe plan: a plain left_anti against the standing
-                  // index shuffles EVERY stored gram row per micro-batch
-                  // (the join's right side cannot broadcast — it is the
-                  // unbounded one). Instead broadcast the micro-batch's
-                  // grams to an in-place semi-join scan of the index
-                  // (never shuffled), and anti-join the batch against the
-                  // resulting SEEN set, which is ≤ the batch's gram count
-                  // by construction (the index holds each gram once).
-                  val seen = index.select("s")
-                    .join(broadcast(bg), Seq("s"), "left_semi")
-                  bg.join(broadcast(seen), Seq("s"), "left_anti")
-                } else bg.join(index.select("s"), Seq("s"), "left_anti")
-            }
+            case Some(index) =>
+              if (probeBroadcastMaxGrams > 0 && nBg <= probeBroadcastMaxGrams) {
+                // SEEN-SET FLIP — the same shape as the dedup-ingest
+                // probe plan: a plain left_anti against the standing
+                // index shuffles EVERY stored gram row per micro-batch
+                // (the join's right side cannot broadcast — it is the
+                // unbounded one). Instead broadcast the micro-batch's
+                // grams to an in-place semi-join scan of the index
+                // (never shuffled), and anti-join the batch against the
+                // resulting SEEN set, which is ≤ the batch's gram count
+                // by construction (the index holds each gram once).
+                val seen = index.select("s")
+                  .join(broadcast(bg), Seq("s"), "left_semi")
+                bg.join(broadcast(seen), Seq("s"), "left_anti")
+              } else bg.join(index.select("s"), Seq("s"), "left_anti")
             case None => bg // index still empty: first batch(es)
           }
           novel.write.mode("overwrite").parquet(s"$gramsDir/batch=$id")
-          val nGrams = bg.count()
           val nNovel = spark.read.parquet(s"$gramsDir/batch=$id").count()
-          if (useBloom)
-            IndexStore.writeBloomSidecar(spark, s"$gramsDir/batch=$id", "s",
-              sidecarFpp, expectedRows = Some(nNovel))
           import spark.implicits._
-          Seq((id, nGrams, nNovel,
-              if (nGrams == 0) 0.0 else nNovel.toDouble / nGrams))
+          Seq((id, nBg, nNovel,
+              if (nBg == 0) 0.0 else nNovel.toDouble / nBg))
             .toDF("batch_id", "n_grams", "n_novel", "novelty")
             .write.mode("overwrite").parquet(s"$logDir/batch=$id")
         } finally release(bg)
     }
-  }
 
   /** Highest-numbered `v=<n>` subdirectory of an [[upsertSink]] target,
     * optionally restricted to versions strictly below `below` (recovery
@@ -597,7 +488,7 @@ object Streams {
     * discard the maintained base table on remote storage. Completion
     * markers are not checked ([[latestTable]] is the reader that does). */
   def latestVersion(targetDir: String, below: Long = Long.MaxValue): Option[String] =
-    dirIds(IndexStore.hadoopFs(SparkSession.active, targetDir), targetDir, "v=")
+    IndexStore.dirIds(IndexStore.hadoopFs(SparkSession.active, targetDir), targetDir, "v=")
       .filter(_._1 < below).maxByOption(_._1).map(_._2.toString)
 
   private val emptyState =

@@ -116,10 +116,9 @@ object StreamBench {
       val ckpt = graft.sources.ScratchDir.create("sb-dedup-ckpt")
       val vocab = (0 until 5000).map(i => s"t$i")
       var nextId = 0L
-      // optional 9th arg: dup fraction (default 0.1). The r16 band-key
-      // prefilter default-off call was measured at this 10%-dup shape;
-      // the documented WIN case — a mostly-unique feed whose batches can
-      // skip the index entirely — is the ~0.01 arm (VERDICT r16 #4).
+      // optional 9th arg: dup fraction (default 0.1); ~0.01 is the
+      // mostly-unique feed. The 8th arg is unused, so earlier command
+      // lines keep their meaning.
       val dupFrac = args.lift(8).map(_.toDouble).getOrElse(0.1)
       def doc(): (Long, String) = {
         nextId += 1
@@ -144,8 +143,6 @@ object StreamBench {
       // optional 7th arg: compactFanout for the tiered-folding A/B
       // (1 = the single-level full-fold control arm)
       val fanout = args.lift(6).map(_.toInt).getOrElse(4)
-      // optional 8th arg: bloomFpp for the bk-prefilter A/B (0 = off)
-      val bloomFpp = args.lift(7).map(_.toDouble).getOrElse(0.01)
       // WRITE AMPLIFICATION: cumulative task output bytes across the whole
       // run (docs + live index + every compaction rewrite). Polling dir
       // sizes between batches would MISS runs that a cascaded merge
@@ -161,8 +158,7 @@ object StreamBench {
       val q = graft.streaming.Streams
         .dedupIngestSink(mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
           target, compactEvery = compactEvery,
-          probeBroadcastMaxRows = probeMax, compactFanout = fanout,
-          bloomFpp = bloomFpp)
+          probeBroadcastMaxRows = probeMax, compactFanout = fanout)
         .option("checkpointLocation", ckpt)
         .start()
       val secs = Vector.newBuilder[Double]
@@ -197,9 +193,8 @@ object StreamBench {
     if (wanted("novelty_monitor")) {
       val target = graft.sources.ScratchDir.create("sb-novelty")
       val vocab = (0 until 5000).map(i => s"t$i")
-      // optional 9th arg: replay fraction (default 0.3 — the r16 shape).
-      // 0.0 is the HIGH-NOVELTY arm (VERDICT r16 #7): the bloom front's
-      // probable set is smallest there, the undercount bound tightest.
+      // optional 9th arg: replay fraction (default 0.3); 0.0 is the
+      // high-novelty arm. The 8th arg is unused, as in dedup_ingest.
       val replayFrac = args.lift(8).map(_.toDouble).getOrElse(0.3)
       def doc(idx: Long): (Long, String) =
         // replayFrac of docs carry replayed template content (seen
@@ -216,13 +211,10 @@ object StreamBench {
       // arg 6 doubles as the novelty probe gate (0 = the legacy
       // full-index-shuffle anti-join as the A/B control arm)
       val probeMax = args.lift(5).map(_.toLong).getOrElse(4L << 20)
-      // arg 8: bloomMode off|exact|approx — the r16 bloom-front A/B
-      // (approx = zero index reads per batch, fpp-bounded novelty)
-      val bloomMode = args.lift(7).getOrElse("exact")
       val q = graft.streaming.Streams
         .noveltyMonitor(mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
           target, compactEvery = compactEvery,
-          probeBroadcastMaxGrams = probeMax, bloomMode = bloomMode)
+          probeBroadcastMaxGrams = probeMax)
         .option("checkpointLocation",
           graft.sources.ScratchDir.create("sb-novelty-ckpt"))
         .start()
